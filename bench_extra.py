@@ -126,19 +126,21 @@ def sec_embdup(spark):
     from sparkkd import analytics, datapipe
     from sparkkd.engine import _release_registry, _ONESHOT_CACHES
 
-    rng = np.random.default_rng(11)
-    g, m, extra = 1_000, 50, 50_000
-    base = rng.normal(size=(g, 16))
-    dup = np.repeat(base, m, axis=0)
-    uniq = rng.normal(size=(extra, 16))
-    M = np.vstack([dup, uniq]).astype(np.float32)
-    ids = np.arange(len(M), dtype=np.int64)
-    pdf = pd.DataFrame({"vec_id": ids, "embedding": list(map(list, M))})
-    p = Path("/dev/shm/sparkkd-embdup.parquet")
+    seed, g, m, extra, dim = 11, 1_000, 50, 50_000, 16
+    # the fixture is named by every generation parameter, so a file left
+    # by other parameters is never silently reused
+    p = Path(f"/dev/shm/sparkkd-embdup-s{seed}-g{g}-m{m}-x{extra}-d{dim}.parquet")
     if not p.exists():
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        rng = np.random.default_rng(seed)
+        base = rng.normal(size=(g, dim))
+        dup = np.repeat(base, m, axis=0)
+        uniq = rng.normal(size=(extra, dim))
+        M = np.vstack([dup, uniq]).astype(np.float32)
+        ids = np.arange(len(M), dtype=np.int64)
+        pdf = pd.DataFrame({"vec_id": ids, "embedding": list(map(list, M))})
         pq.write_table(pa.Table.from_pandas(pdf), p)
     emb = spark.read.parquet(str(p))
 

@@ -38,13 +38,16 @@ streaming  Structured Streaming ingest -> snapshot forest; windowed aggs
 
 __version__ = "0.2.0"
 
-# Allocator tuning for NumPy/Arrow-heavy kernels — must run in EVERY
-# process that executes them, including Spark Python workers (which
-# import this package when unpickling UDF closures): glibc malloc knobs
-# for NumPy temporaries, mimalloc for the Arrow batch pool.  See envtune
-# for the measured page-fault-churn pathology both address.
+# Per-process tuning — must run in EVERY process that executes sparkkd
+# kernels, including Spark Python workers (which import this package when
+# unpickling UDF closures): glibc malloc knobs for NumPy temporaries,
+# mimalloc for the Arrow batch pool (page-fault churn), and stat-guarded
+# zip-importer invalidation (the per-task importlib.invalidate_caches()
+# cost).  See envtune for the measurements.
 from .envtune import tune_arrow_pool as _tune_arrow_pool
 from .envtune import tune_malloc as _tune_malloc
+from .envtune import tune_zipimport_invalidation as _tune_zipimport
 
 _tune_malloc()
 _tune_arrow_pool()
+_tune_zipimport()

@@ -287,6 +287,13 @@ def embedding_dbscan(
         raise ValueError(
             f"min_pts={min_pts!r}: embedding_dbscan requires min_pts >= 2"
         )
+    # a missing id_col would make withColumnRenamed a silent no-op and
+    # surface only later as an unrelated analysis error deep in the plan
+    if id_col not in embeddings.columns:
+        raise ValueError(
+            f"id_col={id_col!r} is not a column of embeddings "
+            f"(columns: {embeddings.columns})"
+        )
     # embedding_near_dup hardcodes vec_id as the id column: rename the
     # caller's id_col so the detector and the labels agree (ADVICE r5 —
     # previously a non-default id_col silently produced wrong noise rows).

@@ -98,13 +98,12 @@ def _layout_cache(layout) -> dict:
 
 
 def _session_key(spark: SparkSession) -> str:
-    """Stable per-context cache key.  _session_key(spark) is NOT safe here: a new
-    session object can reuse a stopped session's address and the cache
-    would serve broadcasts bound to a dead SparkContext."""
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:
-        return str(id(spark))
+    """Stable per-context cache key: the SparkContext's ``applicationId``.
+    ``id(spark)`` is NOT safe here: a new session object can reuse a
+    stopped session's address and the cache would serve broadcasts bound
+    to a dead SparkContext.  So there is no fallback — a context whose
+    applicationId cannot be read raises."""
+    return spark.sparkContext.applicationId
 
 
 def _cached(layout, key, build):

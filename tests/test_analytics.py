@@ -468,6 +468,23 @@ def test_embedding_dbscan_validations(spark):
     assert got[0].item_id == 1 and got[0].role == "noise"
 
 
+def test_embedding_dbscan_missing_id_col(spark):
+    """An id_col absent from the table raises up front, naming the column
+    (withColumnRenamed would otherwise silently do nothing)."""
+    emb = spark.createDataFrame(
+        pd.DataFrame(
+            {"item_id": np.array([1], dtype=np.int64), "embedding": [[1.0, 0.0]]}
+        )
+    )
+    with pytest.raises(ValueError, match="'doc_id' is not a column"):
+        analytics.embedding_dbscan(
+            spark, emb, threshold=0.5, min_pts=2, id_col="doc_id"
+        )
+    # the default id_col is validated too
+    with pytest.raises(ValueError, match="'vec_id' is not a column"):
+        analytics.embedding_dbscan(spark, emb, threshold=0.5, min_pts=2)
+
+
 def test_geo_dbscan_eps_validation(spark, sf0001_fixtures):
     """ADVICE r5: sub-floor eps raises ValueError (not a stripped assert)."""
     root = sf0001_fixtures

@@ -330,3 +330,21 @@ def test_nonfinite_pose_queries_drop_cleanly(spark):
         spark, poses, queries, 5.0, rot_weight=1.0, trans_weight=1.0
     ).toPandas()
     assert set(r["query_id"]) == {"ok"} and len(r) == 60
+
+
+def test_session_key_is_application_id_without_fallback(spark):
+    """Layout caches key on the SparkContext's applicationId; an unreadable
+    applicationId raises instead of falling back to id(spark), which a new
+    session can reuse after the old one stops."""
+    assert so3engine._session_key(spark) == spark.sparkContext.applicationId
+
+    class _DeadContext:
+        @property
+        def applicationId(self):
+            raise RuntimeError("SparkContext is stopped")
+
+    class _Session:
+        sparkContext = _DeadContext()
+
+    with pytest.raises(RuntimeError, match="stopped"):
+        so3engine._session_key(_Session())

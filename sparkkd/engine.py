@@ -1128,56 +1128,100 @@ def radius_join(
     )
 
 
+def _plan_group_splits(
+    keys: np.ndarray,
+    cand_rows: np.ndarray,
+    corpus_rows: np.ndarray,
+    parallelism: int,
+    split_target: int,
+    gate: float,
+    min_rows_per_split: int = 64,
+) -> dict[int, int]:
+    """The split DECISION, Spark-free: part_key -> sub-group count for the
+    groups to split query-side (empty = cogroup on part_key unsplit).
+    Work per group is candidate rows x corpus rows.  Nothing splits
+    unless the heaviest group exceeds ``gate`` x the balanced per-core
+    share total_work / parallelism (0 = no gate).  Any split re-keys the
+    cogroup on (part_key, gsalt), re-exchanging the WHOLE probed corpus
+    and rebuilding each split group's tree once per sub-group, so for
+    kNN it pays only when one group is the critical path (see
+    so3engine._KNN_SPLIT_GATE).
+
+    Past the gate the sizing is adaptive: aim for ~3 waves of
+    ``parallelism`` tasks (a few hot groups otherwise leave most cores
+    idle: event-log measurement, E=4x8 local-cluster, 9-14 phase-2 tasks
+    with max task ~= stage wall), never finer than split_target/64 and
+    never coarser than the static split_target; at most 256 sub-groups
+    and >= min_rows_per_split candidate rows each (finer buys no balance
+    and multiplies per-sub-group tree builds)."""
+    cand_rows = np.asarray(cand_rows, np.int64)
+    work = cand_rows * np.asarray(corpus_rows, np.int64)
+    total = int(work.sum())
+    par = max(1, int(parallelism))
+    if total == 0 or int(work.max()) * par <= gate * total:
+        return {}
+    tgt = min(split_target, max(total // (3 * par), max(split_target // 64, 1)))
+    n = np.minimum(256, np.maximum(1, -(-work // tgt)))
+    n = np.minimum(n, np.maximum(1, cand_rows // min_rows_per_split))
+    heavy = n > 1
+    return dict(zip(np.asarray(keys)[heavy].tolist(), n[heavy].tolist()))
+
+
 def _split_heavy_cogroups(
     spark: SparkSession,
     cand: DataFrame,
     corpus: DataFrame,
-    stats: CellStats,
+    group_rows,
     split_target: int = 4_000_000,
+    gate: float = 0.0,
     min_rows_per_split: int = 64,
 ):
-    """ONE collect over the cached candidate side: per-part_key candidate
-    counts fill the cache, yield the probed part_keys for the corpus
-    probe filter AND drive batch-adaptive cogroup splitting (the planar
-    twin of so3engine._split_heavy_groups — the hot-cell group otherwise
-    hands ONE task queries*points work: the radius_join_r2 stage measured
-    wall 6.0 s vs 0.57 s mean task time, a single-straggler floor).
-    Heavy groups split QUERY-side into ceil(work/target) gsalts; only
-    their corpus rows replicate via a broadcast explode.  Returns
-    (cand + gsalt, probed corpus + gsalt) — group on (part_key, gsalt)."""
+    """The ONE phase-2 split planner (planar radius, SO(3) and SE(3) kNN
+    and radius).  A dense group receiving many probing rows hands ONE
+    cogroup task candidates x corpus rows of work (measured stragglers:
+    the se3 sf1 radius run serialized for minutes on one task), so such a
+    group is split query-side.  ONE collect over the cached candidate
+    side: the per-part_key candidate counts fill the cache, yield the
+    probed part_keys for the corpus probe filter AND feed
+    _plan_group_splits.  ``group_rows(keys)`` is the space's corpus row
+    count per cogroup key, as an int64 array aligned with ``keys``.
+
+    Radius joins keep the default ``gate=0``: candidates x corpus rows
+    underweights a hot radius group, whose output is ~all of its pairs
+    while a sparse group's is a small fraction.  Measured on sf0.1
+    radius_join_r2 at local[4]: heaviest group 0.67x a core's share by
+    that estimate, yet the unsplit cogroup's slowest task ran 4.6-5.6 s
+    of an 11.5 s stage: min-of-3 5.4-5.9 s unsplit vs 3.9-4.3 s split.
+
+    Returns (cand, probed corpus, cogroup key columns).  Unsplit, the
+    keys are part_key alone and no gsalt column exists, so the cached
+    corpus partitioning satisfies the cogroup and the corpus side is NOT
+    re-exchanged.  Split, both sides gain gsalt and group on
+    (part_key, gsalt) — see _apply_group_splits for what that costs."""
     crows = cand.groupBy("part_key").count().collect()
-    keys = [int(r_["part_key"]) for r_ in crows]
-    # corpus rows per part_key from the driver-side stats (no Spark job):
-    # a key's count is divided across its salt_n part_keys
-    ki = np.searchsorted(stats.keys, np.asarray(keys, np.int64) >> SALT_SHIFT)
-    ki = np.clip(ki, 0, max(len(stats.keys) - 1, 0))
-    works: list[tuple[int, int, int]] = []
-    for j, r_ in enumerate(crows):
-        k_ = int(r_["part_key"])
-        i = int(ki[j])
-        ppg = -(-int(stats.counts[i]) // max(int(stats.salt_n[i]), 1))
-        works.append((k_, int(r_["count"]), int(r_["count"]) * ppg))
-    par = max(1, spark.sparkContext.defaultParallelism)
-    total_work = sum(w for _, _, w in works)
-    tgt = min(
-        split_target,
-        max(total_work // (3 * par), max(split_target // 64, 1)),
+    keys = np.array([r_["part_key"] for r_ in crows], np.int64)
+    counts = np.array([r_["count"] for r_ in crows], np.int64)
+    splits = _plan_group_splits(
+        keys, counts, group_rows(keys), spark.sparkContext.defaultParallelism,
+        split_target, gate, min_rows_per_split,
     )
-    splits: dict[int, int] = {}
-    for k_, cnt, work in works:
-        s_ = min(256, max(1, -(-work // tgt)))
-        # keep >= min_rows_per_split candidate rows per subtask — finer
-        # buys no balance and multiplies corpus-side tree builds
-        s_ = min(s_, max(1, cnt // min_rows_per_split))
-        if s_ > 1:
-            splits[k_] = s_
-    base_probe = _probe_filter(spark, corpus, keys)
+    probe = _probe_filter(spark, corpus, keys.tolist())
     if not splits:
-        # no gsalt column at all: grouping stays on part_key, so the
-        # cached corpus partitioning satisfies the cogroup distribution
-        # and the probed corpus is NOT re-shuffled
-        return cand, base_probe
-    return _apply_group_splits(spark, cand, base_probe, splits)
+        return cand, probe, ["part_key"]
+    cand, probe = _apply_group_splits(spark, cand, probe, splits)
+    return cand, probe, ["part_key", "gsalt"]
+
+
+def _cell_group_rows(stats: CellStats):
+    """Corpus rows per planar cogroup key: a cell's rows divide across its
+    salt_n part_keys (from the in-memory CellStats, no Spark job)."""
+
+    def rows(keys: np.ndarray) -> np.ndarray:
+        ki = np.searchsorted(stats.keys, keys >> SALT_SHIFT)
+        ki = np.clip(ki, 0, max(len(stats.keys) - 1, 0))
+        return -(-stats.counts[ki] // np.maximum(stats.salt_n[ki], 1))
+
+    return rows
 
 
 def _apply_group_splits(
@@ -1185,8 +1229,12 @@ def _apply_group_splits(
 ):
     """Attach gsalt = pmod(xxhash64(query_id), n_split) to split groups'
     candidate rows and replicate their probe-side rows via a broadcast
-    explode (shared by the planar radius join and the pose engines —
-    the split DECISION differs per engine, the fan-out mechanics don't).
+    explode.  The cost is not confined to the split groups: the cogroup
+    now keys on (part_key, gsalt), which the cached hash(part_key) corpus
+    layout does not satisfy, so the WHOLE probed corpus is re-exchanged;
+    each split group's tree is rebuilt once per sub-group; and the two
+    explode maps are createDataFrame broadcasts.  Hence the gate
+    in _plan_group_splits.
 
     Explicit schemas throughout: a bigint gsalt on ONE cogroup side
     hash-partitions differently from an int gsalt on the other and
@@ -1328,7 +1376,9 @@ def _radius_join_on_index(
     # probe filter AND the heavy-group split (guide §2.5: the hot-cell
     # group was a measured single-task straggler)
     cand = _register_cache(cand, cache_registry)
-    cand, img_probe = _split_heavy_cogroups(spark, cand, img_salted, stats)
+    cand, img_probe, gcols = _split_heavy_cogroups(
+        spark, cand, img_salted, _cell_group_rows(stats)
+    )
 
     out_schema = "query_id string, image_id string, dist double"
     if carry_xy:
@@ -1364,9 +1414,6 @@ def _radius_join_on_index(
             out["iy"] = pa.array(pts[idx, 1])
         return pa.table(out)
 
-    gcols = (
-        ["part_key", "gsalt"] if "gsalt" in cand.columns else ["part_key"]
-    )
     return (
         cand.groupby(*gcols)
         .cogroup(img_probe.groupby(*gcols))

@@ -77,11 +77,10 @@ from pyspark.sql import functions as F
 
 from . import kernel
 from .engine import (
-    _apply_group_splits,
     _pa_np,
-    _probe_filter,
     _register_cache,
     _release_registry,
+    _split_heavy_cogroups,
     _tie_rank,
 )
 
@@ -106,8 +105,17 @@ def _session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
-def _cached(layout, key, build):
+def _cached(layout, spark: SparkSession, name: str, build):
+    """``build()`` once per (layout, name, SparkContext).  Only one
+    SparkContext runs per Python process, so entries keyed by any other
+    applicationId belong to stopped contexts: they are dropped here, on
+    the first access under the new id, instead of pinning dead broadcasts
+    for the layout's lifetime."""
     c = _layout_cache(layout)
+    app = _session_key(spark)
+    for k_ in [k_ for k_ in c if k_[1] != app]:
+        del c[k_]
+    key = (name, app)
     if key not in c:
         c[key] = build()
     return c[key]
@@ -119,16 +127,31 @@ GROUP_SHIFT = 1  # partitions pack under the base level's ancestor this far up
 REFINE_STEP = 3  # hot base cells refine this many levels deeper
 MAX_LEAF_LEVEL = 10
 # kNN-phase-2 heavy-group split target, in (candidate rows x partition
-# poses) work units.  Lower than the radius default (4M): a radius group
-# emits output proportional to its work, so Arrow materialization already
-# dominates small groups, while a kNN group emits only ~k rows per
-# candidate — per-unit kernel cost is far lower and only much larger
-# groups amortize the per-subgroup corpus replication + tree rebuild.
-# Measured (sf2, 400k x 4M, k=4): unsplit groups ran 5 s -> 90 s at
-# ~uniform candidate counts (per-candidate scan cost varies ~20x with
-# local pose density), so the single heaviest task WAS the stage wall;
-# at 1e8 the heaviest group splits ~11-way (~8 s worst task).
+# poses) work units, for batches past _KNN_SPLIT_GATE.  Higher
+# than the radius default (4M): a radius group emits output proportional
+# to its work, so Arrow materialization already dominates small groups,
+# while a kNN group emits only ~k rows per candidate — per-unit kernel
+# cost is far lower, and only much larger groups amortize what a split
+# costs: the whole probed corpus is re-exchanged on (part_key, gsalt) and
+# each split group's tree is rebuilt once per sub-group.  Measured (sf2,
+# 400k x 4M, k=4): unsplit groups ran 5 s -> 90 s at ~uniform candidate
+# counts (per-candidate scan cost varies ~20x with local pose density),
+# so the single heaviest task WAS the stage wall; at 1e8 the heaviest
+# group splits ~11-way (~8 s worst task).
 _KNN_SPLIT_TARGET = 100_000_000
+# A kNN batch splits only when its heaviest group's work exceeds this
+# multiple of the balanced per-core share total_work / defaultParallelism
+# (engine._plan_group_splits): a split re-exchanges the whole probed
+# corpus (not just the split groups') and rebuilds each split group's
+# tree once per sub-group, and a kNN group's output is only ~k rows per
+# candidate, so a near-balanced batch loses.  Measured on a 4-core
+# x86-64 host, heaviest/share ratios and split -> unsplit times:
+# perfbench pose_knn (5,000 queries/op) 1.2-1.3, median op 6.28 ->
+# 4.57 s; the sf0.1 se3/so3 kNN rows 1.27 and 0.74, min-of-3 7.39 ->
+# 6.58 s and 6.61 -> 5.55 s.  Where splitting won, the heaviest group
+# dwarfed a share: sf2 kNN tasks ranged 5 s -> 90 s, and the sf0.1
+# se3/so3 batches at parallelism 32 sit at ~10x/~6x.
+_KNN_SPLIT_GATE = 2.0
 
 QCOLS = ("qw", "qx", "qy", "qz")
 TCOLS = ("tx", "ty", "tz")
@@ -585,7 +608,7 @@ def _leaf_salts(spark: SparkSession, layout: PoseLayout) -> DataFrame:
             )
         )
 
-    return _cached(layout, ("leaf_salts", _session_key(spark)), build)
+    return _cached(layout, spark, "leaf_salts", build)
 
 
 def _pid_salts(spark: SparkSession, layout: PoseLayout) -> DataFrame:
@@ -604,7 +627,7 @@ def _pid_salts(spark: SparkSession, layout: PoseLayout) -> DataFrame:
             )
         )
 
-    return _cached(layout, ("pid_salts", _session_key(spark)), build)
+    return _cached(layout, spark, "pid_salts", build)
 
 
 def _trans_bounds(poses: DataFrame) -> list[tuple[float, float]]:
@@ -1203,8 +1226,7 @@ def _so3_knn_on_index(
     leaf_salts = _leaf_salts(spark, layout)
     pid_salts = _pid_salts(spark, layout)
     leaf_pid = _cached(
-        layout,
-        ("leaf_pid", _session_key(spark)),
+        layout, spark, "leaf_pid",
         lambda: F.broadcast(
             spark.createDataFrame(
                 _leaf_pid_df(spark, layout), schema="key bigint, pid bigint"
@@ -1327,8 +1349,7 @@ def _so3_knn_on_index(
     # occupied leaf keys, driver-built (leaf_keys are unique by
     # construction — no distinct exchange) and cached per layout
     occ = _cached(
-        layout,
-        ("occ_keys", _session_key(spark)),
+        layout, spark, "occ_keys",
         lambda: F.broadcast(
             spark.createDataFrame(
                 pd.DataFrame({"key": layout.leaf_keys}), schema="key bigint"
@@ -1379,8 +1400,7 @@ def _so3_knn_on_index(
     )
 
     bc = _cached(
-        layout,
-        ("so3knn_bc", _session_key(spark)),
+        layout, spark, "so3knn_bc",
         lambda: spark.sparkContext.broadcast(
             (
                 *_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
@@ -1474,13 +1494,14 @@ def _so3_knn_on_index(
         ),
         cache_registry,
     )
-    # ONE builder job: _split_heavy_groups' count-collect fills the p1
+    # ONE Spark job: the split planner's count-collect fills the p1
     # cache (upstream) + p2_cand cache, yields the probed part_keys as an
-    # InSet pushdown AND splits heavy cogroups query-side (measured at
-    # sf2: per-task kernel time varied 5 s -> 90 s at ~uniform candidate
-    # counts, so ONE task was the wall-clock floor at any core count)
-    cand_g, corp_probe = _split_heavy_groups(
-        spark, p2_cand, corpus, layout, split_target=_KNN_SPLIT_TARGET
+    # InSet pushdown AND splits a critical-path cogroup query-side
+    # (measured at sf2: per-task kernel time varied 5 s -> 90 s at
+    # ~uniform candidate counts, so ONE task was the stage wall)
+    cand_g, corp_probe, gcols = _split_heavy_cogroups(
+        spark, p2_cand, corpus, _pose_group_rows(layout),
+        split_target=_KNN_SPLIT_TARGET, gate=_KNN_SPLIT_GATE,
     )
 
     def p2_group(left: pa.Table, right: pa.Table) -> pa.Table:
@@ -1506,7 +1527,6 @@ def _so3_knn_on_index(
             }
         )
 
-    gcols = _group_cols(cand_g)
     p2 = (
         cand_g.groupby(*gcols)
         .cogroup(corp_probe.groupby(*gcols))
@@ -1564,74 +1584,17 @@ def so3_radius_join(
     return _so3_radius_on_index(spark, corpus, layout, queries, r)
 
 
-def _split_heavy_groups(spark, cand, corpus, layout, split_target=4_000_000):
-    """ONE collect over the cached candidate side: per-partition candidate
-    counts fill the cache, yield the probed part_keys for the InSet
-    pushdown AND drive BATCH-ADAPTIVE cogroup splitting.  A dense
-    partition receiving both many probing rows and many poses would hand
-    ONE cogroup task queries*poses candidate pairs (measured: single-task
-    stragglers serialized the se3 sf1 radius run for minutes).  Heavy
-    groups split QUERY-side into ceil(work / split_target) sub-keys
-    (gsalt); only their corpus rows replicate via a broadcast explode, so
-    shuffle volume grows only by the heavy tail's split factor.  Returns
-    (cand + gsalt, probed corpus + gsalt) — group on (part_key, gsalt)."""
-    crows = cand.groupBy("part_key").count().collect()
-    keys = [int(r_["part_key"]) for r_ in crows]
-    pc = layout.p_counts
-    psn = layout.p_salt_n
-    works: list[tuple[int, int, int]] = []
-    for r_ in crows:
-        k_ = int(r_["part_key"])
-        pid = k_ >> SALT_BITS
-        # part_key is (pid, salt): a salted partition's poses are divided
-        # across its salt_n keys, so per-GROUP pose count is pc/salt_n
-        # (ceil) — estimating with the full pc overestimated work by up to
-        # salt_n and replicated corpus rows for groups needing no split
-        ppg = -(-int(pc[pid]) // max(int(psn[pid]), 1))
-        works.append((k_, int(r_["count"]), int(r_["count"]) * ppg))
-    # adaptive target: the static split_target bounds PER-TASK work, but a
-    # workload of few hot groups can still leave most of the cluster idle
-    # (event-log measurement, E=4x8 local-cluster: the phase-2 cogroup ran
-    # 9-14 tasks with max-task ~= stage wall at every cluster size).  Aim
-    # for ~3 waves of defaultParallelism tasks when total work justifies
-    # it; never finer than split_target/64 (every split replicates the
-    # group's corpus rows once more through the broadcast explode), and
-    # never coarser than the static target.
-    par = max(1, spark.sparkContext.defaultParallelism)
-    total_work = sum(w for _, _, w in works)
-    tgt = min(
-        split_target,
-        max(total_work // (3 * par), max(split_target // 64, 1)),
-    )
-    splits: dict[int, int] = {}
-    for k_, cnt, work in works:
-        s_ = min(256, max(1, -(-work // tgt)))
-        # keep >=64 candidate rows per subtask — finer buys no balance
-        # and multiplies corpus-side tree builds
-        s_ = min(s_, max(1, cnt // 64))
-        if s_ > 1:
-            splits[k_] = s_
-    base_probe = _probe_filter(spark, corpus, keys)
-    if not splits:
-        # NO gsalt column: grouping stays on part_key alone, so the
-        # cached corpus partitioning satisfies the cogroup's distribution
-        # and the probed corpus rows are NOT re-shuffled (round-6 — a
-        # (part_key, gsalt) key invalidated the cache's hash(part_key)
-        # layout even when every gsalt was the constant 0); callers group
-        # by _group_cols(cand)
-        return cand, base_probe
-    # shared fan-out mechanics (gsalt attach + broadcast-explode probe
-    # replication + the dtype-parity assert that guards against silent
-    # cogroup mispairing): engine._apply_group_splits — only the split
-    # DECISION above is pose-specific
-    return _apply_group_splits(spark, cand, base_probe, splits)
+def _pose_group_rows(layout: PoseLayout):
+    """Corpus poses per pose cogroup key for the shared split planner
+    (engine._split_heavy_cogroups).  part_key is (pid, salt): a salted
+    partition's poses divide across its salt_n keys (ceil) — the full
+    p_counts overestimated work by up to salt_n."""
 
+    def rows(keys: np.ndarray) -> np.ndarray:
+        pid = keys >> SALT_BITS
+        return -(-layout.p_counts[pid] // np.maximum(layout.p_salt_n[pid], 1))
 
-def _group_cols(cand: DataFrame) -> list[str]:
-    """Cogroup keys for a (cand, probe) pair from _split_heavy_groups:
-    (part_key, gsalt) when splits exist, part_key alone otherwise (which
-    lets the cached corpus partitioning satisfy the distribution)."""
-    return ["part_key", "gsalt"] if "gsalt" in cand.columns else ["part_key"]
+    return rows
 
 
 def _so3_radius_on_index(
@@ -1665,8 +1628,7 @@ def _so3_radius_on_index(
     pid_salts = _pid_salts(spark, layout)
 
     bc = _cached(
-        layout,
-        ("so3rad_bc", _session_key(spark)),
+        layout, spark, "so3rad_bc",
         lambda: spark.sparkContext.broadcast(
             (*_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
              *_f32_outward(layout.p_lo, layout.p_hi),
@@ -1722,7 +1684,9 @@ def _so3_radius_on_index(
     # TWICE (probe-keys broadcast + cogroup left side); the collect fills
     # the cache, drives the InSet pushdown AND the heavy-group split
     cand = _register_cache(cand, cache_registry)
-    cand, corp_probe = _split_heavy_groups(spark, cand, corpus, layout)
+    cand, corp_probe, gcols = _split_heavy_cogroups(
+        spark, cand, corpus, _pose_group_rows(layout)
+    )
 
     def radius_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
@@ -1744,7 +1708,6 @@ def _so3_radius_on_index(
             }
         )
 
-    gcols = _group_cols(cand)
     hits = (
         cand.groupby(*gcols)
         .cogroup(corp_probe.groupby(*gcols))
@@ -1925,8 +1888,7 @@ def _se3_radius_on_index(
     # compound distance decides below)
     r_pad = r * (1.0 + 1e-12) + 1e-15
     bc = _cached(
-        layout,
-        ("se3rad_bc", _session_key(spark)),
+        layout, spark, "se3rad_bc",
         lambda: spark.sparkContext.broadcast(
             (
                 *_f32_leaf_pack(layout),
@@ -1984,9 +1946,11 @@ def _se3_radius_on_index(
         + ", pid long",
     ).join(pid_salts, "pid").drop("pid")
     # cache + ONE collect (counts): InSet pushdown + heavy-group split
-    # (see _split_heavy_groups)
+    # (see engine._split_heavy_cogroups)
     cand = _register_cache(cand, cache_registry)
-    cand, corp_probe = _split_heavy_groups(spark, cand, corpus, layout)
+    cand, corp_probe, gcols = _split_heavy_cogroups(
+        spark, cand, corpus, _pose_group_rows(layout)
+    )
 
     # embedded-space scan radius: dist = rw*ang + tw*dt >=
     # sqrt((tw*dt)^2 + (rw*chord)^2) = L2 in the 7-D embedding
@@ -2054,7 +2018,6 @@ def _se3_radius_on_index(
             }
         )
 
-    gcols = _group_cols(cand)
     hits = (
         cand.groupby(*gcols)
         .cogroup(corp_probe.groupby(*gcols))
@@ -2175,8 +2138,7 @@ def _se3_knn_on_index(
     leaf_salts = _leaf_salts(spark, layout)
     pid_salts = _pid_salts(spark, layout)
     leaf_pid = _cached(
-        layout,
-        ("leaf_pid", _session_key(spark)),
+        layout, spark, "leaf_pid",
         lambda: F.broadcast(
             spark.createDataFrame(
                 _leaf_pid_df(spark, layout), schema="key bigint, pid bigint"
@@ -2243,8 +2205,7 @@ def _se3_knn_on_index(
 
     # ---- phase 2: partition admission within the compound bound ---------
     bc = _cached(
-        layout,
-        ("se3knn_bc", _session_key(spark)),
+        layout, spark, "se3knn_bc",
         lambda: spark.sparkContext.broadcast(
             (
                 *_f32_leaf_pack(layout),
@@ -2339,13 +2300,13 @@ def _se3_knn_on_index(
     p2_cand = _register_cache(
         p2_cand.join(pid_salts, "pid").drop("pid"), cache_registry
     )
-    # ONE builder job: _split_heavy_groups' count-collect fills both
-    # caches + InSet probe pushdown AND splits heavy cogroups query-side
-    # (see _so3_knn_on_index — the sf2 straggler measurement)
-    cand_g, corp_probe = _split_heavy_groups(
-        spark, p2_cand, corpus, layout, split_target=_KNN_SPLIT_TARGET
+    # ONE Spark job: the split planner's count-collect fills both
+    # caches + InSet probe pushdown AND splits a critical-path cogroup
+    # query-side (see _so3_knn_on_index — the sf2 straggler measurement)
+    cand_g, corp_probe, gcols = _split_heavy_cogroups(
+        spark, p2_cand, corpus, _pose_group_rows(layout),
+        split_target=_KNN_SPLIT_TARGET, gate=_KNN_SPLIT_GATE,
     )
-    gcols = _group_cols(cand_g)
     p2 = (
         cand_g.groupby(*gcols)
         .cogroup(corp_probe.groupby(*gcols))

@@ -277,13 +277,13 @@ def test_radius_join_forced_heavy_split_identical(spark, tables, monkeypatch):
     orig = engine._split_heavy_cogroups
     saw_gsalt = {}
 
-    def forced(spark_, cand, corpus, stats, split_target=4_000_000, **kw):
-        c, p = orig(
-            spark_, cand, corpus, stats,
+    def forced(spark_, cand, corpus, group_rows, **kw):
+        c, p, gcols = orig(
+            spark_, cand, corpus, group_rows,
             split_target=128, min_rows_per_split=2,
         )
-        saw_gsalt["yes"] = "gsalt" in c.columns
-        return c, p
+        saw_gsalt["yes"] = "gsalt" in c.columns and "gsalt" in gcols
+        return c, p, gcols
 
     monkeypatch.setattr(engine, "_split_heavy_cogroups", forced)
     got = (

@@ -348,3 +348,33 @@ def test_session_key_is_application_id_without_fallback(spark):
 
     with pytest.raises(RuntimeError, match="stopped"):
         so3engine._session_key(_Session())
+
+
+def test_layout_cache_evicts_dead_application_ids():
+    """Layout-cache entries are keyed (name, applicationId).  Only one
+    SparkContext runs per process, so the first access under a new id drops
+    every entry of the old one instead of pinning dead broadcasts for the
+    layout's lifetime; accesses under the live id still hit."""
+
+    class _Session:
+        def __init__(self, app):
+            self.sparkContext = type("_Ctx", (), {"applicationId": app})()
+
+    class _Layout:
+        pass
+
+    lay = _Layout()
+    old, new = _Session("app-old"), _Session("app-new")
+    builds: list[str] = []
+
+    def build(tag):
+        return lambda: builds.append(tag) or tag
+
+    assert so3engine._cached(lay, old, "bc", build("old-bc")) == "old-bc"
+    assert so3engine._cached(lay, old, "salts", build("old-salts")) == "old-salts"
+    assert so3engine._cached(lay, old, "bc", build("rebuilt")) == "old-bc"
+    assert builds == ["old-bc", "old-salts"]
+    assert so3engine._cached(lay, new, "bc", build("new-bc")) == "new-bc"
+    assert set(so3engine._layout_cache(lay)) == {("bc", "app-new")}
+    assert so3engine._cached(lay, new, "bc", build("rebuilt")) == "new-bc"
+    assert builds == ["old-bc", "old-salts", "new-bc"]

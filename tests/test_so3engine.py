@@ -397,6 +397,22 @@ def test_leaf_broadcast_budget_invariance(spark, pose_data, monkeypatch):
         assert len(b) > 0
 
 
+def _record_splits(monkeypatch, **force):
+    """Wrap the pose engines' split planner (forcing any ``force``
+    keyword arguments); returns a list that gets, per phase-2 cogroup
+    planned, whether the gsalt fan-out ran."""
+    orig = so3engine._split_heavy_cogroups
+    seen: list[bool] = []
+
+    def wrapped(spark_, cand, corpus, group_rows, **kw):
+        c, p, gcols = orig(spark_, cand, corpus, group_rows, **{**kw, **force})
+        seen.append("gsalt" in c.columns and gcols == ["part_key", "gsalt"])
+        return c, p, gcols
+
+    monkeypatch.setattr(so3engine, "_split_heavy_cogroups", wrapped)
+    return seen
+
+
 def test_knn_p2_heavy_group_split_identity(spark, pose_data, monkeypatch):
     """Round 5: kNN phase-2 cogroups split query-side when estimated work
     (candidates x partition poses) exceeds _KNN_SPLIT_TARGET — measured at
@@ -404,8 +420,9 @@ def test_knn_p2_heavy_group_split_identity(spark, pose_data, monkeypatch):
     candidate counts, making one task the stage wall at any core count.
     Query-side splitting is exact (every subgroup sees the partition's
     full corpus; the rerank dedupes by (query, pose)), so forcing EVERY
-    group to split (target=1) must be bit-identical to no split
-    (target=huge)."""
+    group to split (target=1, 2 candidate rows per sub-group, split gate
+    off) must be bit-identical to no split (target=huge), and the forced
+    run must really have fanned out."""
     poses, queries, ppdf, _ = pose_data
 
     def both():
@@ -425,7 +442,12 @@ def test_knn_p2_heavy_group_split_identity(spark, pose_data, monkeypatch):
     monkeypatch.setattr(so3engine, "_KNN_SPLIT_TARGET", 10**18)
     unsplit = both()
     monkeypatch.setattr(so3engine, "_KNN_SPLIT_TARGET", 1)
+    monkeypatch.setattr(so3engine, "_KNN_SPLIT_GATE", 0.0)
+    seen = _record_splits(monkeypatch, min_rows_per_split=2)
     forced = both()
+    # both joins must have exercised the gsalt fan-out — otherwise this
+    # test silently compares unsplit output to unsplit output
+    assert seen == [True, True]
     for u, f in zip(unsplit, forced):
         pd.testing.assert_frame_equal(u, f)
         assert len(u) > 0
@@ -439,7 +461,8 @@ def test_radius_heavy_group_split_identity(spark, pose_data, monkeypatch):
     pairs silently vanished (sf0.01 oracle: 124,134 -> 70,898 rows the
     first time the adaptive target made radius groups split at that
     scale).  Forcing every group to split must be bit-identical to no
-    split; the engine additionally asserts cogroup-key dtype parity."""
+    split (and the fan-out must really have run); the engine additionally
+    asserts cogroup-key dtype parity."""
     poses, queries, ppdf, _ = pose_data
 
     def both():
@@ -456,14 +479,69 @@ def test_radius_heavy_group_split_identity(spark, pose_data, monkeypatch):
         )
         return rad, srad
 
-    orig = so3engine._split_heavy_groups
-
-    def forced(spark_, cand, corpus, layout, split_target=4_000_000):
-        return orig(spark_, cand, corpus, layout, split_target=1)
-
     unsplit = both()
-    monkeypatch.setattr(so3engine, "_split_heavy_groups", forced)
+    seen = _record_splits(monkeypatch, split_target=1, min_rows_per_split=2)
     split = both()
+    assert seen == [True, True]
     for u, f in zip(unsplit, split):
         pd.testing.assert_frame_equal(u, f)
         assert len(u) > 0
+
+
+def test_se3_index_unsplit_phase2_reads_cached_corpus_layout(
+    spark, pose_data, monkeypatch
+):
+    """The pose twin of test_geoindex_no_corpus_exchange: when the split
+    planner does not split, the Se3Index phase-2 cogroup carries no gsalt
+    and shuffles ONLY the candidate side — the corpus flows in through
+    its cached hash(part_key) layout with no ENSURE_REQUIREMENTS
+    exchange.  (A split re-keys on (part_key, gsalt) and re-exchanges the
+    whole probed corpus, which is why the planner gates it.)"""
+    import re
+
+    poses, queries, ppdf, _ = pose_data
+    orig = so3engine._split_heavy_cogroups
+    planned = []
+
+    def capture(*a, **kw):
+        planned.append(orig(*a, **kw))
+        return planned[-1]
+
+    monkeypatch.setattr(so3engine, "_split_heavy_cogroups", capture)
+    idx = so3engine.Se3Index(spark, poses, n_poses_hint=len(ppdf))
+    try:
+        idx.knn_join(queries, k=4, rot_weight=2.0, trans_weight=0.5).count()
+        assert len(planned) == 1
+        cand, probe, gcols = planned[0]
+        assert gcols == ["part_key"]
+        assert "gsalt" not in cand.columns and "gsalt" not in probe.columns
+        p2 = (
+            cand.groupby(*gcols)
+            .cogroup(probe.groupby(*gcols))
+            .applyInArrow(
+                so3engine._make_se3_group(4, 2.0, 0.5, carry=False),
+                schema="query_id string, pose_id string, dist double",
+            )
+        )
+        p2.count()
+        plan = p2._jdf.queryExecution().executedPlan().toString()
+        # drop the cached plans printed under each InMemoryRelation (their
+        # one-time build shuffles are not per-query work)
+        outer, depth = [], None
+        for ln in plan.splitlines():
+            m = re.search(r"[A-Za-z*(]", ln)
+            pos = m.start() if m else 0
+            if depth is not None and pos > depth:
+                continue
+            depth = pos if "InMemoryRelation" in ln else None
+            outer.append(ln)
+        outer_plan = "\n".join(outer)
+        ex = [
+            ln for ln in outer
+            if re.search(r"Exchange hashpartitioning.*ENSURE_REQUIREMENTS", ln)
+        ]
+        assert len(ex) == 1, outer_plan  # the candidate side's
+        assert outer_plan.count("InMemoryTableScan") == 2, outer_plan
+        assert "gsalt" not in outer_plan
+    finally:
+        idx.unpersist()

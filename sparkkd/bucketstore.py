@@ -163,7 +163,7 @@ class BucketedGeoIndex:
         # radius path would drain/pollute the GLOBAL one-shot registry —
         # freeing e.g. a still-unconsumed checkpoint-backed DBSCAN result
         # and leaking this index's cand cache past unpersist()
-        return engine._radius_join_on_index(
+        return engine._planar_radius(
             self.spark, self.img_salted, self.stats, self.part_keys, queries, r,
             cache_registry=self._caches,
         )

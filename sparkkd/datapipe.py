@@ -10,9 +10,7 @@ Spark-first (built-in exprs where possible, Arrow kernels where not):
 * text analysis — token/quality stats, language-marker scoring,
   rolling-hash document fingerprints;
 * multimodal — image decode + feature extraction through the real stdlib
-  codecs (sparkkd.codec); audio/video decode is STUBBED (no media libs in
-  this sandbox) behind NotImplementedError with a deterministic fake so the
-  Spark plumbing (schema, batching, partitioning) is real and tested.
+  codecs (sparkkd.codec).
 
 Determinism: every operator is a pure function of its input table —
 hashes are blake2b/md5 (not Python's salted hash), floats are rounded
@@ -21,7 +19,6 @@ where two engines must agree (see oracle notes per function).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import zlib
 
@@ -2226,47 +2223,4 @@ def image_fidelity(images: DataFrame, min_psnr_db: float = 40.0) -> DataFrame:
 
     return images.select("image_id", "bytes", "w", "h", "fmt", "phash").mapInPandas(
         gen, schema="image_id string, fmt string, mse double, psnr_db double, ok boolean"
-    )
-
-
-def decode_audio(blob: bytes, fmt: str) -> np.ndarray:
-    """STUB — no audio libs in this sandbox.  The Spark plumbing around it
-    (media_features with fake=True) is real and tested."""
-    raise NotImplementedError("audio decoding requires libs absent from this environment")
-
-
-def decode_video_frames(blob: bytes, fmt: str, every_n: int = 10) -> np.ndarray:
-    """STUB — no video libs in this sandbox (see decode_audio)."""
-    raise NotImplementedError("video decoding requires libs absent from this environment")
-
-
-def media_features(
-    df: DataFrame, kind: str, fake: bool = False, id_col: str = "image_id"
-) -> DataFrame:
-    """Generic media feature-extraction plumbing: opaque binary column in,
-    fixed-width feature vector out, one Arrow batch at a time.  For
-    kind='audio'/'video' the decoder is stubbed; fake=True substitutes a
-    deterministic blake2b-derived vector so schema/partitioning/batch shape
-    are exercised end-to-end."""
-
-    def gen(batches):
-        for pdf in batches:
-            ids, feats = [], []
-            for r in pdf.itertuples(index=False):
-                blob = bytes(r.bytes)
-                if fake:
-                    d = hashlib.blake2b(blob, digest_size=32).digest()
-                    v = np.frombuffer(d, dtype=np.uint8).astype(np.float64) / 255.0
-                elif kind == "audio":
-                    v = decode_audio(blob, "wav")
-                elif kind == "video":
-                    v = decode_video_frames(blob, "mp4").mean(axis=0)
-                else:
-                    raise ValueError(kind)
-                ids.append(getattr(r, id_col))
-                feats.append(v[:32].tolist())
-            yield pd.DataFrame({"media_id": ids, "features": feats})
-
-    return df.select(F.col(id_col), "bytes").mapInPandas(
-        gen, schema="media_id string, features array<double>"
     )

@@ -458,6 +458,21 @@ def _candidate_part_keys(stats: CellStats) -> pd.DataFrame:
     )
 
 
+def _planar_corpus(spark, images, level, max_cell_rows, n_images_hint):
+    """The planar corpus builder (GeoIndex and the one-shot joins): derive
+    coordinates, collect cell stats (level None: derived from the row
+    count), salt.  Returns (img, stats, img_salted, part_keys)."""
+    img = with_coords(images).select("image_id", "x", "y")
+    if level is None:
+        n = n_images_hint if n_images_hint is not None else img.count()
+        level = cells.level_for_count(n)
+    stats = collect_cell_stats(img, level, max_cell_rows)
+    part_keys = F.broadcast(spark.createDataFrame(
+        _candidate_part_keys(stats), schema=_PART_KEYS_SCHEMA
+    ))
+    return img, stats, _salted_images(spark, img, stats), part_keys
+
+
 # ------------------------------------------------------- candidate pruning
 
 
@@ -493,32 +508,42 @@ def _coarse_groups(stats: CellStats):
     return g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start
 
 
-def _knn_candidates(
+def _count_bound(dmax: np.ndarray, counts: np.ndarray, k: int) -> np.ndarray:
+    """Per-row statistics-only kth-NN bound (every space's admission
+    fallback for rows without a finite bound): walk the (rows, C) regions
+    in ascending farthest-point distance dmax until their counts cover k;
+    that dmax upper-bounds the kth-NN distance (>= k points provably lie
+    within it).  inf when all C regions together hold fewer than k."""
+    order = np.argsort(dmax, axis=1, kind="stable")
+    cum = np.cumsum(counts[order], axis=1)
+    need = np.argmax(cum >= k, axis=1)
+    enough = cum[:, -1] >= k
+    need = np.where(enough, need, dmax.shape[1] - 1)
+    rows = np.arange(len(need))
+    return np.where(
+        enough, np.take_along_axis(dmax, order, axis=1)[rows, need], np.inf
+    )
+
+
+def _planar_admission(
     spark: SparkSession,
     queries: DataFrame,
     stats: CellStats,
-    k: int,
+    part_keys: DataFrame,
+    k: int | None = None,
     exclude_home: bool = False,
     spread: bool = True,
 ) -> DataFrame:
-    """queries (query_id, x, y [, bound]) -> (query_id, x, y, cell_id)
-    candidate pairs.
-
-    Vectorized cross-cell pruning (mapInPandas over query batches against
-    broadcast cell stats).  The per-query admission bound is
-    ``min(count_bound, provided bound)`` where:
-
-    * count_bound: cells sorted by farthest-corner distance (dmax) are
-      accumulated until their counts cover k; the dmax at that point
-      upper-bounds the kth-NN distance (>= k points provably lie within
-      it) — computable from statistics alone;
-    * provided bound (optional ``bound`` column): the TRUE home-cell kth
-      distance from a phase-1 probe — usually far tighter.
+    """The planar admission generator, shared by kNN phase 2 and radius:
+    queries (query_id, x, y, bound [, home_key]) -> candidate rows
+    (query_id, x, y, part_key), one per admitted (query, cell salt).
 
     Cells with min-dist <= bound become candidates — the cross-cell
-    ``shouldTraverse`` (``src/_kdtree_median.hpp:136-138``).  With
-    exclude_home=True the query's own cell (its ``home_key`` column) is
-    skipped — it was already fully probed in phase 1.
+    ``shouldTraverse`` (``src/_kdtree_median.hpp:136-138``), vectorized
+    over query batches against broadcast cell stats.  kNN phase 2 passes
+    its phase-1 kth distance and ``exclude_home=True`` (the home_key cell
+    was fully probed); radius passes r.  Rows without a finite bound
+    fall back to _count_bound over k (radius bounds are always finite).
     """
     g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start = _coarse_groups(stats)
 
@@ -529,7 +554,6 @@ def _knn_candidates(
             g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start,
         )
     )
-    has_bound = "bound" in queries.columns
     if spread:
         # queries usually arrive as one small parquet file = ONE partition;
         # spread the vectorized pruning work across the cluster first
@@ -550,11 +574,7 @@ def _knn_candidates(
             qid = tbl.column("query_id").chunk(0)
             qx = _pa_np(tbl, "x")
             qy = _pa_np(tbl, "y")
-            given = (
-                _pa_np(tbl, "bound")
-                if has_bound
-                else np.full(rb.num_rows, np.inf)
-            )
+            given = _pa_np(tbl, "bound")
             home = (
                 tbl.column("home_key").to_numpy(zero_copy_only=False)
                 if exclude_home
@@ -574,16 +594,7 @@ def _knn_candidates(
                         px[nb][:, None], py[nb][:, None],
                         mnx[None, :], mny[None, :], mxx[None, :], mxy[None, :],
                     )
-                    order = np.argsort(dmax, axis=1, kind="stable")
-                    cum = np.cumsum(counts[order], axis=1)
-                    need = np.argmax(cum >= k, axis=1)
-                    enough = cum[:, -1] >= k
-                    need = np.where(enough, need, C - 1)
-                    rows = np.arange(len(need))
-                    cb = np.where(
-                        enough, np.take_along_axis(dmax, order, axis=1)[rows, need], np.inf
-                    )
-                    bound[nb] = cb
+                    bound[nb] = _count_bound(dmax, counts, k)
                 # level 1: group boxes
                 dmin_g = cells.bbox_min_dist(
                     px[:, None], py[:, None],
@@ -620,9 +631,10 @@ def _knn_candidates(
                     }
                 )
 
-    return queries.mapInArrow(
+    cand = queries.mapInArrow(
         gen, schema="query_id string, x double, y double, key long"
     )
+    return cand.join(part_keys, "key").select("query_id", "x", "y", "part_key")
 
 
 # ---------------------------------------------------------------- kNN join
@@ -761,15 +773,9 @@ def knn_join(
     results; pre-filter with functions.l2_is_valid to reject them loudly
     instead.
     """
-    img = with_coords(images).select("image_id", "x", "y")
-    if level is None:
-        n = n_images_hint if n_images_hint is not None else img.count()
-        level = cells.level_for_count(n)
-    stats = collect_cell_stats(img, level, max_cell_rows)
-    img_salted = _salted_images(spark, img, stats)
-    part_keys = F.broadcast(spark.createDataFrame(
-        _candidate_part_keys(stats), schema=_PART_KEYS_SCHEMA
-    ))
+    _, stats, img_salted, part_keys = _planar_corpus(
+        spark, images, level, max_cell_rows, n_images_hint
+    )
     return _knn_join_on_index(
         spark, img_salted, stats, part_keys, queries, k, max_radius=max_radius
     )
@@ -897,9 +903,10 @@ def _knn_join_on_index(
     # keeps exact tie semantics: an outside point at dist == bound could
     # still displace the kth by image_id order, so bound == edge probes.
     q_b = q_b.filter(~(F.col("bound") < F.col("home_edge"))).drop("home_edge")
-    p2_cand = _knn_candidates(spark, q_b, stats, k, exclude_home=True, spread=False)
     p2_cand = _register_cache(
-        p2_cand.join(part_keys, "key").select("query_id", "x", "y", "part_key"),
+        _planar_admission(
+            spark, q_b, stats, part_keys, k, exclude_home=True, spread=False
+        ),
         cache_registry,
     )
     # ONE builder job (round-4, VERDICT #5): collecting the probed
@@ -960,29 +967,19 @@ class GeoIndex:
         n_images_hint: int | None = None,
     ):
         self.spark = spark
-        img = with_coords(images).select("image_id", "x", "y")
-        if level is None:
-            n = n_images_hint if n_images_hint is not None else img.count()
-            level = cells.level_for_count(n)
-        self.level = level
-        self.img = img
-        self.stats = collect_cell_stats(img, level, max_cell_rows)
+        self.img, self.stats, img_salted, self.part_keys = _planar_corpus(
+            spark, images, level, max_cell_rows, n_images_hint
+        )
+        self.level = self.stats.level
         # persist PRE-PARTITIONED on the cogroup key: the cached partitioning
         # satisfies both phases' clustered-distribution requirement, so query
         # batches shuffle only the (small) candidate side — the in-memory
         # twin of the bucket-stored layout (bucketstore.py); verified by
         # tests/test_engine_spark.py::test_geoindex_no_corpus_exchange
-        self.img_salted = (
-            _salted_images(spark, img, self.stats)
-            .repartition(_parallelism(spark), "part_key")
-            .persist()
-        )
+        self.img_salted = img_salted.repartition(
+            _parallelism(spark), "part_key"
+        ).persist()
         self.img_salted.count()  # materialize
-        self.part_keys = F.broadcast(
-            spark.createDataFrame(
-                _candidate_part_keys(self.stats), schema=_PART_KEYS_SCHEMA
-            )
-        )
         # per-index intermediate-cache registry: a new join on THIS index
         # releases THIS index's previous intermediates (consume or
         # materialize the previous result first if you need both); other
@@ -1022,7 +1019,7 @@ class GeoIndex:
         )
 
     def radius_join(self, queries: DataFrame, r: float) -> DataFrame:
-        return _radius_join_on_index(
+        return _planar_radius(
             self.spark, self.img_salted, self.stats, self.part_keys, queries, r,
             cache_registry=self._caches,
         )
@@ -1114,16 +1111,10 @@ def radius_join(
     (qx, qy, ix, iy) — lets a composite consumer (geo_dbscan) derive
     per-endpoint grid cells from the pair table itself instead of
     re-joining the (output-sized) pair graph against a coordinate table."""
-    img = with_coords(images).select("image_id", "x", "y")
-    if level is None:
-        n = n_images_hint if n_images_hint is not None else img.count()
-        level = cells.level_for_count(n)
-    stats = collect_cell_stats(img, level, max_cell_rows)
-    img_salted = _salted_images(spark, img, stats)
-    part_keys = F.broadcast(spark.createDataFrame(
-        _candidate_part_keys(stats), schema=_PART_KEYS_SCHEMA
-    ))
-    return _radius_join_on_index(
+    _, stats, img_salted, part_keys = _planar_corpus(
+        spark, images, level, max_cell_rows, n_images_hint
+    )
+    return _planar_radius(
         spark, img_salted, stats, part_keys, queries, r, carry_xy=carry_xy
     )
 
@@ -1293,7 +1284,40 @@ def _apply_group_splits(
     return cand, probe
 
 
-def _radius_join_on_index(
+def _radius_on_index(
+    spark: SparkSession,
+    r: float,
+    admit,
+    corpus: DataFrame,
+    group_rows,
+    make_kernel,
+    schema: str,
+    cache_registry: list[DataFrame],
+) -> DataFrame:
+    """The ONE radius orchestration (planar, SO(3), SE(3)).  A radius join
+    is the reference's bounded search seeded with a constant maxRadius
+    (``src/_kdtree_median.hpp:131-137``), i.e. the space's kNN phase-2
+    admission at a constant bound: ``admit(r)`` returns its candidate rows
+    keyed by part_key, ``make_kernel(r)`` the space's Arrow cogroup kernel.
+    A NaN or infinite r is rejected before either is built.  Drains the
+    caller's ``cache_registry`` and caches the candidates there; the split
+    planner's ONE count-collect fills that cache, filters the corpus probe
+    and splits heavy groups (``gate=0``: see _split_heavy_cogroups).
+    """
+    r = float(r)
+    if not np.isfinite(r):
+        raise ValueError(f"radius join needs a finite radius r, got r={r}")
+    _release_registry(cache_registry)
+    cand = _register_cache(admit(r), cache_registry)
+    cand, probe, gcols = _split_heavy_cogroups(spark, cand, corpus, group_rows)
+    return (
+        cand.groupby(*gcols)
+        .cogroup(probe.groupby(*gcols))
+        .applyInArrow(make_kernel(r), schema=schema)
+    )
+
+
+def _planar_radius(
     spark: SparkSession,
     img_salted: DataFrame,
     stats: CellStats,
@@ -1303,86 +1327,28 @@ def _radius_join_on_index(
     cache_registry: list[DataFrame] | None = None,
     carry_xy: bool = False,
 ) -> DataFrame:
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)  # PREVIOUS call in this scope only
+    """Planar radius join over a salted corpus: planar admission at bound
+    r, then a k-d radius scan per cogroup."""
     q = queries.select(
         "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
     ).filter(_FINITE_QUERY)
-    g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start = _coarse_groups(stats)
-    bc = spark.sparkContext.broadcast(
-        (
-            stats.keys, stats.min_x, stats.min_y, stats.max_x, stats.max_y,
-            g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start,
-        )
-    )
-    q = q.repartition(_parallelism(spark))
-
-    def gen(batches):
-        # mapInArrow: the candidate table is output-sized (one row per
-        # admitted (query, cell) pair) — building it as Arrow take/array
-        # calls skips the pandas object-string round trip both ways
-        keys, mnx, mny, mxx, mxy, gmnx, gmny, gmxx, gmxy, gorder, gstart = bc.value
-        C = len(keys)
-        G_ = len(gmnx)
-        for rb in batches:
-            if rb.num_rows == 0 or C == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid = tbl.column("query_id").chunk(0)
-            qx = _pa_np(tbl, "x")
-            qy = _pa_np(tbl, "y")
-            chunk = max(256, 8_000_000 // max(G_, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                px, py = qx[sl], qy[sl]
-                # two-level: coarse group boxes, then members of passing
-                # groups only (same structure as _knn_candidates)
-                dmin_g = cells.bbox_min_dist(
-                    px[:, None], py[:, None],
-                    gmnx[None, :], gmny[None, :], gmxx[None, :], gmxy[None, :],
-                )
-                adm_g = dmin_g <= r
-                out_qi: list[np.ndarray] = []
-                out_ci: list[np.ndarray] = []
-                for g in np.nonzero(adm_g.any(axis=0))[0]:
-                    rows_g = np.nonzero(adm_g[:, g])[0]
-                    mem = gorder[gstart[g] : gstart[g + 1]]
-                    dmin = cells.bbox_min_dist(
-                        px[rows_g][:, None], py[rows_g][:, None],
-                        mnx[mem][None, :], mny[mem][None, :],
-                        mxx[mem][None, :], mxy[mem][None, :],
-                    )
-                    qi_l, ci_l = np.nonzero(dmin <= r)
-                    if len(qi_l) > 0:
-                        out_qi.append(rows_g[qi_l])
-                        out_ci.append(mem[ci_l])
-                if not out_qi:
-                    continue
-                qi = np.concatenate(out_qi)
-                ci = np.concatenate(out_ci)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "query_id": pc.take(qid, pa.array(qi + c0)),
-                        "x": pa.array(qx[qi + c0]),
-                        "y": pa.array(qy[qi + c0]),
-                        "key": pa.array(keys[ci]),
-                    }
-                )
-
-    cand = q.mapInArrow(gen, schema="query_id string, x double, y double, key long")
-    cand = cand.join(part_keys, "key").select("query_id", "x", "y", "part_key")
-    # cache + ONE collect (counts): fills the cache, drives the corpus
-    # probe filter AND the heavy-group split (guide §2.5: the hot-cell
-    # group was a measured single-task straggler)
-    cand = _register_cache(cand, cache_registry)
-    cand, img_probe, gcols = _split_heavy_cogroups(
-        spark, cand, img_salted, _cell_group_rows(stats)
-    )
-
-    out_schema = "query_id string, image_id string, dist double"
+    schema = "query_id string, image_id string, dist double"
     if carry_xy:
-        out_schema += ", qx double, qy double, ix double, iy double"
+        schema += ", qx double, qy double, ix double, iy double"
+    return _radius_on_index(
+        spark, r,
+        lambda r: _planar_admission(
+            spark, q.withColumn("bound", F.lit(r)), stats, part_keys
+        ),
+        img_salted, _cell_group_rows(stats),
+        lambda r: _make_radius_group(r, carry_xy), schema,
+        _ONESHOT_CACHES if cache_registry is None else cache_registry,
+    )
+
+
+def _make_radius_group(r: float, carry_xy: bool):
+    """Planar radius cogroup kernel: every (query, image) pair of the
+    group within L2 distance r."""
     empty_tbl = _EMPTY_PAIRS
     if carry_xy:
         empty_tbl = pa.table(
@@ -1414,11 +1380,7 @@ def _radius_join_on_index(
             out["iy"] = pa.array(pts[idx, 1])
         return pa.table(out)
 
-    return (
-        cand.groupby(*gcols)
-        .cogroup(img_probe.groupby(*gcols))
-        .applyInArrow(radius_group, schema=out_schema)
-    )
+    return radius_group
 
 
 # --------------------------------------------------------- point-in-polygon

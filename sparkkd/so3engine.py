@@ -77,7 +77,9 @@ from pyspark.sql import functions as F
 
 from . import kernel
 from .engine import (
+    _count_bound,
     _pa_np,
+    _radius_on_index,
     _register_cache,
     _release_registry,
     _split_heavy_cogroups,
@@ -647,8 +649,18 @@ def _trans_bounds(poses: DataFrame) -> list[tuple[float, float]]:
     return out
 
 
-def _leaf_pid_df(spark: SparkSession, layout: PoseLayout) -> pd.DataFrame:
-    return pd.DataFrame({"key": layout.leaf_keys, "pid": layout.leaf_pid})
+def _leaf_pid(spark: SparkSession, layout: PoseLayout) -> DataFrame:
+    """(leaf key, pid) for the kNN home-partition lookups (cached per
+    layout + session, see _leaf_salts)."""
+    return _cached(
+        layout, spark, "leaf_pid",
+        lambda: F.broadcast(
+            spark.createDataFrame(
+                pd.DataFrame({"key": layout.leaf_keys, "pid": layout.leaf_pid}),
+                schema="key bigint, pid bigint",
+            )
+        ),
+    )
 
 
 # --------------------------------------------------- pruning geometry (d-D)
@@ -679,21 +691,6 @@ def _bbox_min_max_dist(p: np.ndarray, lo: np.ndarray, hi: np.ndarray):
         mx = np.maximum(np.abs(a), np.abs(b))
         dmax2 += mx * mx
     return np.sqrt(dmin2), np.sqrt(dmax2)
-
-
-def _count_bound(dmin, dmax, counts, k):
-    """Per-row admission bound: walk cells in ascending dmax until their
-    counts cover k — that dmax upper-bounds the kth-NN distance.
-    Statistics-only FALLBACK for queries without a phase-1 home bound."""
-    order = np.argsort(dmax, axis=1, kind="stable")
-    cum = np.cumsum(counts[order], axis=1)
-    need = np.argmax(cum >= k, axis=1)
-    enough = cum[:, -1] >= k
-    need = np.where(enough, need, dmax.shape[1] - 1)
-    rows = np.arange(len(need))
-    return np.where(
-        enough, np.take_along_axis(dmax, order, axis=1)[rows, need], np.inf
-    )
 
 
 def _coarsen_nd(cell: np.ndarray, level: int, coarse: int, dims: int) -> np.ndarray:
@@ -1061,6 +1058,35 @@ def level_for_poses(n_rows: int, dims: int, target: int = 192, max_level: int = 
 _B4 = [(-1.0, 2.0)] * 4
 
 
+def _pose_lineage(index) -> DataFrame:
+    """Per-partition lineage metrics (north_rule: cell id, row counts,
+    bounds per partition) — driver-side from the layout, no Spark job:
+    (pid, n_leaves, n_rows, salt_n, per-dim bbox)."""
+    lay = index.layout
+    d = lay.p_lo.shape[1]
+    pdf = pd.DataFrame(
+        {
+            "pid": np.arange(lay.n_partitions, dtype=np.int64),
+            "n_leaves": np.diff(lay.p_start).astype(np.int64),
+            "n_rows": lay.p_counts,
+            "salt_n": lay.p_salt_n,
+            **{f"lo_{j}": lay.p_lo[:, j] for j in range(d)},
+            **{f"hi_{j}": lay.p_hi[:, j] for j in range(d)},
+        }
+    )
+    return index.spark.createDataFrame(pdf)
+
+
+def _persist_by_part_key(spark: SparkSession, corpus: DataFrame) -> DataFrame:
+    """Persist a salted corpus PRE-PARTITIONED on part_key (materialized),
+    so repeat query batches shuffle only the candidate side."""
+    out = corpus.repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions")), "part_key"
+    ).persist()
+    out.count()  # materialize
+    return out
+
+
 class So3Index:
     """Build-once / query-many SO(3) index (the reference's KDTree contract
     applied to the rotation space): canonicalized, refinement-salted corpus
@@ -1076,29 +1102,11 @@ class So3Index:
         n_poses_hint: int | None = None,
     ):
         self.spark = spark
-        if level is None:
-            n = n_poses_hint if n_poses_hint is not None else poses.count()
-            level = level_for_poses(n, dims=4)
-        self.level = level
-        sign = canon_sign_sql()
-        canon = poses.select(
-            "pose_id",
-            *QCOLS,  # grid exprs read the raw coefficients via the sign
-            *[(F.expr(f"{sign} * {c}")).alias(f"c{c[1]}") for c in QCOLS],
+        corpus, self.layout = _so3_corpus(
+            spark, poses, level, max_cell_rows, n_poses_hint
         )
-        self.layout = build_layout(
-            canon, list(CCOLS), _B4, list(CCOLS), 4, level, max_cell_rows
-        )
-        self.leaf_expr = leaf_key_sql(list(CCOLS), _B4, self.layout)
-        self.corpus = (
-            _salted(canon, spark, self.layout, self.leaf_expr, "pose_id")
-            .select("pose_id", *CCOLS, "part_key")
-            .repartition(
-                int(spark.conf.get("spark.sql.shuffle.partitions")), "part_key"
-            )
-            .persist()
-        )
-        self.corpus.count()  # materialize
+        self.level = self.layout.level
+        self.corpus = _persist_by_part_key(spark, corpus)
         self._caches: list[DataFrame] = []
 
     def knn_join(
@@ -1109,29 +1117,11 @@ class So3Index:
             max_radius=max_radius, cache_registry=self._caches,
         )
 
-
-    def lineage(self) -> DataFrame:
-        """Per-partition lineage metrics (north_rule: cell id, row counts,
-        bounds per partition) — driver-side from the layout, no Spark job:
-        (pid, n_leaves, n_rows, salt_n, per-dim bbox)."""
-        lay = self.layout
-        d = lay.p_lo.shape[1]
-        pdf = pd.DataFrame(
-            {
-                "pid": np.arange(lay.n_partitions, dtype=np.int64),
-                "n_leaves": np.diff(lay.p_start).astype(np.int64),
-                "n_rows": lay.p_counts,
-                "salt_n": lay.p_salt_n,
-                **{f"lo_{j}": lay.p_lo[:, j] for j in range(d)},
-                **{f"hi_{j}": lay.p_hi[:, j] for j in range(d)},
-            }
-        )
-        return self.spark.createDataFrame(pdf)
+    lineage = _pose_lineage
 
     def radius_join(self, queries: DataFrame, r: float) -> DataFrame:
-        return _so3_radius_on_index(
-            self.spark, self.corpus, self.layout, queries, r,
-            cache_registry=self._caches,
+        return _so3_radius(
+            self.spark, self.corpus, self.layout, queries, r, self._caches
         )
 
     def unpersist(self) -> None:
@@ -1139,11 +1129,18 @@ class So3Index:
         self.corpus.unpersist()
 
 
-def _so3_corpus(spark, poses, level, max_cell_rows):
+def _so3_corpus(spark, poses, level, max_cell_rows, n_poses_hint):
+    """The SO(3) corpus builder (So3Index and the one-shot joins):
+    canonicalize, build the adaptive leaf layout (level None: derived from
+    the row count), salt.  Returns (corpus (pose_id, cw..cz, part_key),
+    layout)."""
+    if level is None:
+        n = n_poses_hint if n_poses_hint is not None else poses.count()
+        level = level_for_poses(n, dims=4)
     sign = canon_sign_sql()
     canon = poses.select(
         "pose_id",
-        *QCOLS,
+        *QCOLS,  # grid exprs read the raw coefficients via the sign
         *[(F.expr(f"{sign} * {c}")).alias(f"c{c[1]}") for c in QCOLS],
     )
     layout = build_layout(
@@ -1153,6 +1150,28 @@ def _so3_corpus(spark, poses, level, max_cell_rows):
         canon, spark, layout, leaf_key_sql(list(CCOLS), _B4, layout), "pose_id"
     ).select("pose_id", *CCOLS, "part_key")
     return corpus, layout
+
+
+def _so3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
+    """Finite query rotations, canonicalized: (query_id, cw, cx, cy, cz),
+    spread over the shuffle partitions."""
+    sign = canon_sign_sql()
+    return (
+        queries.filter(_finite_pred(QCOLS))
+        .select(
+            "query_id",
+            *[F.expr(f"{sign} * {c}").alias(f"c{c[1]}") for c in QCOLS],
+        )
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+    )
+
+
+def _padded_chord(ang: float) -> float:
+    """The Euclidean chord sqrt(2 - 2 cos ang) between canonicalized
+    quaternions at angular distance ang, padded up: a superset seed for
+    admission and tree pruning (the EXACT libm angle decides, so the pad
+    only adds work)."""
+    return float(np.sqrt(max(2.0 - 2.0 * np.cos(ang), 0.0)) * (1.0 + 1e-12) + 1e-15)
 
 
 def so3_knn_join(
@@ -1182,10 +1201,7 @@ def so3_knn_join(
     One-shot convenience over :class:`So3Index` (kept unpersisted: the
     corpus is consumed once, exactly like engine.knn_join vs GeoIndex).
     """
-    if level is None:
-        n = n_poses_hint if n_poses_hint is not None else poses.count()
-        level = level_for_poses(n, dims=4)
-    corpus, layout = _so3_corpus(spark, poses, level, max_cell_rows)
+    corpus, layout = _so3_corpus(spark, poses, level, max_cell_rows, n_poses_hint)
     return _so3_knn_on_index(spark, corpus, layout, queries, k, max_radius=max_radius)
 
 
@@ -1205,34 +1221,13 @@ def _so3_knn_on_index(
     # chord-space seed for tree pruning (padded superset); the EXACT libm
     # angle filters inside the kernels, so the pad only adds work and the
     # phase-1 cnt/bound are computed over exactly the radius-admitted rows
-    chord_pad = (
-        float(np.sqrt(max(2.0 - 2.0 * np.cos(mr), 0.0)) * (1.0 + 1e-12) + 1e-15)
-        if np.isfinite(mr)
-        else float("inf")
-    )
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sign = canon_sign_sql()
+    chord_pad = _padded_chord(mr) if np.isfinite(mr) else float("inf")
     ccols = list(CCOLS)
-    qc = (
-        queries.filter(_finite_pred(QCOLS))
-        .select(
-            "query_id",
-            *[F.expr(f"{sign} * {c}").alias(f"c{c[1]}") for c in QCOLS],
-        )
-        .repartition(shuffle_n)
-    )
+    qc = _so3_queries(spark, queries)
     pos_leaf = leaf_key_sql(ccols, _B4, layout)
     neg_leaf = leaf_key_sql([f"(- {c})" for c in ccols], _B4, layout)
     leaf_salts = _leaf_salts(spark, layout)
-    pid_salts = _pid_salts(spark, layout)
-    leaf_pid = _cached(
-        layout, spark, "leaf_pid",
-        lambda: F.broadcast(
-            spark.createDataFrame(
-                _leaf_pid_df(spark, layout), schema="key bigint, pid bigint"
-            )
-        ),
-    )
+    leaf_pid = _leaf_pid(spark, layout)
 
     # ---- phase 1: probe each probe-point's HOME partition (all salts) ---
     probes = (
@@ -1399,100 +1394,8 @@ def _so3_knn_on_index(
         .fillna({"kp_pid": -1, "kn_pid": -1})
     )
 
-    bc = _cached(
-        layout, spark, "so3knn_bc",
-        lambda: spark.sparkContext.broadcast(
-            (
-                *_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
-                *_f32_outward(layout.p_lo, layout.p_hi), layout.p_start,
-                layout.g_counts,
-                *_f32_outward(layout.g_lo, layout.g_hi), layout.g_start,
-            )
-        ),
-    )
-
-    def gen(batches):
-        (lo, hi, p_lo, p_hi, p_start,
-         g_counts, g_lo, g_hi, g_start) = bc.value
-        G = len(g_counts)
-        la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
-        vmin = np.full(4, -1.0)
-        vspan = np.full(4, 2.0)
-        for rb in batches:
-            if rb.num_rows == 0 or G == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            C4 = np.column_stack([_pa_np(tbl, c) for c in ccols])
-            given = _pa_np(tbl, "bound")
-            kp = tbl.column("kp").to_numpy(zero_copy_only=False)
-            kp_pid = tbl.column("kp_pid").to_numpy(zero_copy_only=False)
-            kn_pid = tbl.column("kn_pid").to_numpy(zero_copy_only=False)
-            n_leaf = (np.int64(1) << (kp >> LVL_SHIFT)).astype(np.int64)
-            # chunk on the GROUP matrix — (chunk, G) stays ~64 MB however
-            # large the corpus (G ~ sqrt(P), not P)
-            chunk = max(256, 8_000_000 // max(G, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P4 = C4[sl]
-                b = given[sl].copy()
-                nb = np.nonzero(~np.isfinite(b))[0]
-                if len(nb) > 0:
-                    # statistics-only fallback at GROUP granularity: the
-                    # union-box dmax still upper-bounds every member, so
-                    # walking groups by dmax until g_counts cover k stays
-                    # a valid (looser) kth bound — and the dense sweep is
-                    # (nb, G), never (nb, leaves)
-                    dps = [
-                        _bbox_min_max_dist(s * P4[nb], g_lo, g_hi)
-                        for s in (1.0, -1.0)
-                    ]
-                    b[nb] = np.minimum(
-                        _count_bound(dps[0][0], dps[0][1], g_counts, k),
-                        _count_bound(dps[1][0], dps[1][1], g_counts, k),
-                    )
-                # home-edge exit against the query's OWN leaf cell (its
-                # level encodes the width — refined leaves test tighter)
-                edge = _grid_home_edge(P4, vmin, vspan, n_leaf[sl])
-                for sgn, home in ((1.0, kp_pid[sl]), (-1.0, kn_pid[sl])):
-                    if sgn > 0:
-                        alive = ~(b < edge)
-                    else:
-                        # canonical corpus points all have cw >= 0: the
-                        # minus probe is >= cw_q from every point
-                        alive = ~(b < P4[:, 0])
-                    rows = np.nonzero(alive)[0]
-                    if len(rows) == 0:
-                        continue
-                    qi, pid = _partition_candidates(
-                        sgn * P4[rows], b[rows], la, home_pid=home[rows]
-                    )
-                    if len(qi) == 0:
-                        continue
-                    pr = sgn * P4[rows[qi]]
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "query_id": pc.take(
-                                qid_arr, pa.array(rows[qi] + c0)
-                            ),
-                            "pw": pa.array(pr[:, 0]),
-                            "px": pa.array(pr[:, 1]),
-                            "py": pa.array(pr[:, 2]),
-                            "pz": pa.array(pr[:, 3]),
-                            "pid": pa.array(pid),
-                        }
-                    )
-
-    p2_cand = q_b.mapInArrow(
-        gen,
-        schema="query_id string, pw double, px double, py double, pz double,"
-        " pid long",
-    )
     p2_cand = _register_cache(
-        p2_cand.join(pid_salts, "pid").select(
-            "query_id", "pw", "px", "py", "pz", "part_key"
-        ),
-        cache_registry,
+        _so3_admission(spark, layout, q_b, k, home=True), cache_registry
     )
     # ONE Spark job: the split planner's count-collect fills the p1
     # cache (upstream) + p2_cand cache, yields the probed part_keys as an
@@ -1554,6 +1457,123 @@ def _so3_knn_on_index(
     return untouched.unionByName(reranked)
 
 
+def _so3_admission(
+    spark: SparkSession,
+    layout: PoseLayout,
+    frame: DataFrame,
+    k: int | None = None,
+    home: bool = False,
+) -> DataFrame:
+    """The SO(3) admission generator, shared by kNN phase 2 and radius:
+    frame (query_id, cw, cx, cy, cz, bound [, kp, kp_pid, kn_pid]) ->
+    candidate rows (query_id, pw, px, py, pz, part_key) per admitted
+    (signed probe, partition salt): both probes +q and -q admit partitions
+    within the chord-space bound (_partition_candidates).  kNN phase 2
+    passes ``home=True``: each probe's home partition (kp_pid / kn_pid,
+    -1 when unoccupied) was fully probed in phase 1 and is skipped, and
+    the +q home-edge exit applies.  Rows without a finite bound fall back
+    to a count-bound over k (radius bounds are always finite)."""
+    ccols = list(CCOLS)
+    bc = _cached(
+        layout, spark, "so3knn_bc",
+        lambda: spark.sparkContext.broadcast(
+            (
+                *_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
+                *_f32_outward(layout.p_lo, layout.p_hi), layout.p_start,
+                layout.g_counts,
+                *_f32_outward(layout.g_lo, layout.g_hi), layout.g_start,
+            )
+        ),
+    )
+
+    def gen(batches):
+        (lo, hi, p_lo, p_hi, p_start,
+         g_counts, g_lo, g_hi, g_start) = bc.value
+        G = len(g_counts)
+        la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
+        vmin = np.full(4, -1.0)
+        vspan = np.full(4, 2.0)
+        for rb in batches:
+            if rb.num_rows == 0 or G == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            qid_arr = tbl.column("query_id").chunk(0)
+            C4 = np.column_stack([_pa_np(tbl, c) for c in ccols])
+            given = _pa_np(tbl, "bound")
+            if home:
+                kp = tbl.column("kp").to_numpy(zero_copy_only=False)
+                kp_pid = tbl.column("kp_pid").to_numpy(zero_copy_only=False)
+                kn_pid = tbl.column("kn_pid").to_numpy(zero_copy_only=False)
+                n_leaf = (np.int64(1) << (kp >> LVL_SHIFT)).astype(np.int64)
+            # chunk on the GROUP matrix — (chunk, G) stays ~64 MB however
+            # large the corpus (G ~ sqrt(P), not P)
+            chunk = max(256, 8_000_000 // max(G, 1))
+            for c0 in range(0, rb.num_rows, chunk):
+                sl = slice(c0, min(c0 + chunk, rb.num_rows))
+                P4 = C4[sl]
+                b = given[sl].copy()
+                nb = np.nonzero(~np.isfinite(b))[0]
+                if len(nb) > 0:
+                    # statistics-only fallback at GROUP granularity: the
+                    # union-box dmax still upper-bounds every member, so
+                    # walking groups by dmax until g_counts cover k stays
+                    # a valid (looser) kth bound — and the dense sweep is
+                    # (nb, G), never (nb, leaves)
+                    dmax = [
+                        _bbox_min_max_dist(s * P4[nb], g_lo, g_hi)[1]
+                        for s in (1.0, -1.0)
+                    ]
+                    b[nb] = np.minimum(
+                        _count_bound(dmax[0], g_counts, k),
+                        _count_bound(dmax[1], g_counts, k),
+                    )
+                for sgn in (1.0, -1.0):
+                    if sgn < 0:
+                        # canonical corpus points all have cw >= 0: the
+                        # minus probe is >= cw_q from every point
+                        alive = ~(b < P4[:, 0])
+                    elif home:
+                        # home-edge exit against the query's OWN leaf cell
+                        # (its level encodes the width — refined leaves
+                        # test tighter)
+                        alive = ~(b < _grid_home_edge(P4, vmin, vspan, n_leaf[sl]))
+                    else:
+                        alive = np.ones(len(P4), dtype=bool)
+                    rows = np.nonzero(alive)[0]
+                    if len(rows) == 0:
+                        continue
+                    qi, pid = _partition_candidates(
+                        sgn * P4[rows], b[rows], la,
+                        home_pid=(kp_pid if sgn > 0 else kn_pid)[sl][rows]
+                        if home else None,
+                    )
+                    if len(qi) == 0:
+                        continue
+                    pr = sgn * P4[rows[qi]]
+                    yield pa.RecordBatch.from_pydict(
+                        {
+                            "query_id": pc.take(
+                                qid_arr, pa.array(rows[qi] + c0)
+                            ),
+                            "pw": pa.array(pr[:, 0]),
+                            "px": pa.array(pr[:, 1]),
+                            "py": pa.array(pr[:, 2]),
+                            "pz": pa.array(pr[:, 3]),
+                            "pid": pa.array(pid),
+                        }
+                    )
+
+    return (
+        frame.mapInArrow(
+            gen,
+            schema="query_id string, pw double, px double, py double,"
+            " pz double, pid long",
+        )
+        .join(_pid_salts(spark, layout), "pid")
+        .select("query_id", "pw", "px", "py", "pz", "part_key")
+    )
+
+
 def so3_radius_join(
     spark: SparkSession,
     poses: DataFrame,
@@ -1577,11 +1597,8 @@ def so3_radius_join(
     EXACT libm angle filters the final pairs, so the float padding can
     only add work, never wrong rows.  One-shot convenience over
     :class:`So3Index.radius_join`."""
-    if level is None:
-        n = n_poses_hint if n_poses_hint is not None else poses.count()
-        level = level_for_poses(n, dims=4)
-    corpus, layout = _so3_corpus(spark, poses, level, max_cell_rows)
-    return _so3_radius_on_index(spark, corpus, layout, queries, r)
+    corpus, layout = _so3_corpus(spark, poses, level, max_cell_rows, n_poses_hint)
+    return _so3_radius(spark, corpus, layout, queries, r)
 
 
 def _pose_group_rows(layout: PoseLayout):
@@ -1597,7 +1614,7 @@ def _pose_group_rows(layout: PoseLayout):
     return rows
 
 
-def _so3_radius_on_index(
+def _so3_radius(
     spark: SparkSession,
     corpus: DataFrame,
     layout: PoseLayout,
@@ -1605,88 +1622,28 @@ def _so3_radius_on_index(
     r: float,
     cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
-    # mirror the kNN paths: one-shot callers drain the global registry at
-    # entry so repeated radius joins never accumulate pinned intermediates;
-    # index-owned callers pass self._caches (drained by idx.unpersist())
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sign = canon_sign_sql()
-    ccols = list(CCOLS)
-    r = float(r)
-    # padded chord: superset admission; the exact libm angle decides below
-    chord = float(np.sqrt(max(2.0 - 2.0 * np.cos(r), 0.0)) * (1.0 + 1e-12) + 1e-15)
-    qc = (
-        queries.filter(_finite_pred(QCOLS))
-        .select(
-            "query_id",
-            *[F.expr(f"{sign} * {c}").alias(f"c{c[1]}") for c in QCOLS],
-        )
-        .repartition(shuffle_n)
-    )
-    pid_salts = _pid_salts(spark, layout)
-
-    bc = _cached(
-        layout, spark, "so3rad_bc",
-        lambda: spark.sparkContext.broadcast(
-            (*_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
-             *_f32_outward(layout.p_lo, layout.p_hi),
-             layout.p_start,
-             *_f32_outward(layout.g_lo, layout.g_hi), layout.g_start)
+    """SO(3) radius join over a salted corpus: the SO(3) admission at the
+    padded chord of r, a chord scan per cogroup, the exact angle cut."""
+    qc = _so3_queries(spark, queries)
+    hits = _radius_on_index(
+        spark, r,
+        lambda r: _so3_admission(
+            spark, layout, qc.withColumn("bound", F.lit(_padded_chord(r)))
         ),
+        corpus, _pose_group_rows(layout), _make_so3_radius_group,
+        "query_id string, pose_id string, ang double",
+        _ONESHOT_CACHES if cache_registry is None else cache_registry,
     )
+    # |dot(+-q, p)| is bit-identical, so both probes report the SAME ang
+    # for a double-hit pose: a plain distinct dedupes exactly
+    return hits.distinct()
 
-    def gen(batches):
-        lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start = bc.value
-        la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
-        for rb in batches:
-            if rb.num_rows == 0 or len(p_lo) == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            C4 = np.column_stack([_pa_np(tbl, c) for c in ccols])
-            chunk = max(256, 8_000_000 // max(len(g_lo), 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P4 = C4[sl]
-                b = np.full(len(P4), chord)
-                for sgn in (1.0, -1.0):
-                    if sgn < 0:
-                        rows = np.nonzero(~(b < P4[:, 0]))[0]
-                    else:
-                        rows = np.arange(len(P4))
-                    if len(rows) == 0:
-                        continue
-                    qi, pid = _partition_candidates(sgn * P4[rows], b[rows], la)
-                    if len(qi) == 0:
-                        continue
-                    pr = sgn * P4[rows[qi]]
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "query_id": pc.take(
-                                qid_arr, pa.array(rows[qi] + c0)
-                            ),
-                            "pw": pa.array(pr[:, 0]),
-                            "px": pa.array(pr[:, 1]),
-                            "py": pa.array(pr[:, 2]),
-                            "pz": pa.array(pr[:, 3]),
-                            "pid": pa.array(pid),
-                        }
-                    )
 
-    cand = qc.mapInArrow(
-        gen,
-        schema="query_id string, pw double, px double, py double, pz double,"
-        " pid long",
-    ).join(pid_salts, "pid").select("query_id", "pw", "px", "py", "pz", "part_key")
-    # cache + ONE collect (counts): round 3 computed the admission gen
-    # TWICE (probe-keys broadcast + cogroup left side); the collect fills
-    # the cache, drives the InSet pushdown AND the heavy-group split
-    cand = _register_cache(cand, cache_registry)
-    cand, corp_probe, gcols = _split_heavy_cogroups(
-        spark, cand, corpus, _pose_group_rows(layout)
-    )
+def _make_so3_radius_group(r: float):
+    """SO(3) radius cogroup kernel: a k-d radius scan at the padded chord
+    of r over the group's canonical poses, then the exact libm angle."""
+    ccols = list(CCOLS)
+    chord = _padded_chord(r)
 
     def radius_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
@@ -1708,14 +1665,7 @@ def _so3_radius_on_index(
             }
         )
 
-    hits = (
-        cand.groupby(*gcols)
-        .cogroup(corp_probe.groupby(*gcols))
-        .applyInArrow(radius_group, schema="query_id string, pose_id string, ang double")
-    )
-    # |dot(+-q, p)| is bit-identical, so both probes report the SAME ang
-    # for a double-hit pose: a plain distinct dedupes exactly
-    return hits.distinct()
+    return radius_group
 
 
 # ------------------------------------------------------------ SE(3) join
@@ -1752,24 +1702,11 @@ class Se3Index:
         n_poses_hint: int | None = None,
     ):
         self.spark = spark
-        if level is None:
-            n = n_poses_hint if n_poses_hint is not None else poses.count()
-            level = level_for_poses(n, dims=3)
-        self.level = level
-        self.bounds = _trans_bounds(poses)
-        b3 = [(lo, max(hi - lo, 1e-9)) for lo, hi in self.bounds]
-        self.b3 = b3
-        self.layout = _se3_layout(poses, b3, level, max_cell_rows)
-        self.leaf_expr = leaf_key_sql(list(TCOLS), b3, self.layout)
-        self.corpus = (
-            _salted(poses, spark, self.layout, self.leaf_expr, "pose_id")
-            .select("pose_id", *QCOLS, *TCOLS, "part_key")
-            .repartition(
-                int(spark.conf.get("spark.sql.shuffle.partitions")), "part_key"
-            )
-            .persist()
+        corpus, self.layout, self.b3, self.leaf_expr = _se3_corpus(
+            spark, poses, level, max_cell_rows, n_poses_hint
         )
-        self.corpus.count()  # materialize
+        self.level = self.layout.level
+        self.corpus = _persist_by_part_key(spark, corpus)
         self._caches: list[DataFrame] = []
 
     def knn_join(
@@ -1785,24 +1722,7 @@ class Se3Index:
             cache_registry=self._caches,
         )
 
-
-    def lineage(self) -> DataFrame:
-        """Per-partition lineage metrics (north_rule: cell id, row counts,
-        bounds per partition) — driver-side from the layout, no Spark job:
-        (pid, n_leaves, n_rows, salt_n, per-dim bbox)."""
-        lay = self.layout
-        d = lay.p_lo.shape[1]
-        pdf = pd.DataFrame(
-            {
-                "pid": np.arange(lay.n_partitions, dtype=np.int64),
-                "n_leaves": np.diff(lay.p_start).astype(np.int64),
-                "n_rows": lay.p_counts,
-                "salt_n": lay.p_salt_n,
-                **{f"lo_{j}": lay.p_lo[:, j] for j in range(d)},
-                **{f"hi_{j}": lay.p_hi[:, j] for j in range(d)},
-            }
-        )
-        return self.spark.createDataFrame(pdf)
+    lineage = _pose_lineage
 
     def radius_join(
         self,
@@ -1811,14 +1731,156 @@ class Se3Index:
         rot_weight: float = 1.0,
         trans_weight: float = 1.0,
     ) -> DataFrame:
-        return _se3_radius_on_index(
+        return _se3_radius(
             self.spark, self.corpus, self.layout, queries, r,
-            rot_weight, trans_weight, cache_registry=self._caches,
+            rot_weight, trans_weight, self._caches,
         )
 
     def unpersist(self) -> None:
         _release_registry(self._caches)
         self.corpus.unpersist()
+
+
+def _se3_corpus(spark, poses, level, max_cell_rows, n_poses_hint):
+    """The SE(3) corpus builder (Se3Index and the one-shot joins): data-
+    derived translation bounds, the adaptive translation-grid layout
+    (level None: derived from the row count), salt.  Returns (corpus
+    (pose_id, qw..qz, tx..tz, part_key), layout, b3, leaf_expr)."""
+    if level is None:
+        n = n_poses_hint if n_poses_hint is not None else poses.count()
+        level = level_for_poses(n, dims=3)
+    b3 = [(lo, max(hi - lo, 1e-9)) for lo, hi in _trans_bounds(poses)]
+    layout = _se3_layout(poses, b3, level, max_cell_rows)
+    leaf_expr = leaf_key_sql(list(TCOLS), b3, layout)
+    corpus = _salted(poses, spark, layout, leaf_expr, "pose_id").select(
+        "pose_id", *QCOLS, *TCOLS, "part_key"
+    )
+    return corpus, layout, b3, leaf_expr
+
+
+def _se3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
+    """Finite query poses (query_id, qw..qz, tx..tz), spread over the
+    shuffle partitions."""
+    return (
+        queries.filter(_finite_pred(list(QCOLS) + list(TCOLS)))
+        .select("query_id", *QCOLS, *TCOLS)
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+    )
+
+
+def _se3_admission(
+    spark: SparkSession,
+    layout: PoseLayout,
+    frame: DataFrame,
+    rw: float,
+    tw: float,
+    k: int | None = None,
+    b3: list[tuple[float, float]] | None = None,
+) -> DataFrame:
+    """The SE(3) admission generator, shared by kNN phase 2 and radius:
+    frame (query_id, qw..qz, tx..tz, bound [, hk, home_pid]) -> candidate
+    rows (query_id, qw..qz, tx..tz, part_key) per admitted (query,
+    partition salt), by the rotation-aware compound lower bound
+    (_se3_partition_candidates).  kNN phase 2 passes its translation grid
+    ``b3``: each query's home partition (home_pid, -1 when unoccupied) was
+    fully probed in phase 1 and is skipped, and the home-edge exit
+    applies.  Rows without a finite bound fall back to a count-bound over
+    k (radius bounds are always finite)."""
+    rot_diam = rw * (np.pi / 2.0)
+    bc = _cached(
+        layout, spark, "se3knn_bc",
+        lambda: spark.sparkContext.broadcast(
+            (
+                *_f32_leaf_pack(layout),
+                *_f32_outward(layout.p_lo, layout.p_hi),
+                *_f32_pair(layout.p_slo, layout.p_shi),
+                layout.p_start,
+                layout.g_counts,
+                *_f32_outward(layout.g_lo, layout.g_hi),
+                *_f32_pair(layout.g_slo, layout.g_shi),
+                layout.g_start,
+            )
+        ),
+    )
+    home = b3 is not None
+    if home:
+        vmin_a = np.array([lo for lo, _ in b3])
+        vspan_a = np.array([span for _, span in b3])
+
+    def gen(batches):
+        (lo, hi, slo, shi,
+         p_lo, p_hi, p_slo, p_shi, p_start,
+         g_counts, g_lo, g_hi, g_slo, g_shi, g_start) = bc.value
+        G = len(g_counts)
+        la = (lo, hi, slo, shi, p_lo, p_hi, p_slo, p_shi, p_start,
+              g_lo, g_hi, g_slo, g_shi, g_start)
+        for rb in batches:
+            if rb.num_rows == 0 or G == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            qid_arr = tbl.column("query_id").chunk(0)
+            Qraw = np.column_stack([_pa_np(tbl, c) for c in QCOLS])
+            T = np.column_stack([_pa_np(tbl, c) for c in TCOLS])
+            QR = Qraw * canon_sign_np(Qraw)[:, None]
+            given = _pa_np(tbl, "bound")
+            if home:
+                home_pid = tbl.column("home_pid").to_numpy(zero_copy_only=False)
+                hk = tbl.column("hk").to_numpy(zero_copy_only=False)
+                n_leaf = (np.int64(1) << (hk >> LVL_SHIFT)).astype(np.int64)
+            # chunk on the GROUP matrix (partition + leaf stages are
+            # pair-expanded — never dense)
+            chunk = max(256, 8_000_000 // max(G, 1))
+            for c0 in range(0, rb.num_rows, chunk):
+                sl = slice(c0, min(c0 + chunk, rb.num_rows))
+                P3 = T[sl]
+                b = given[sl].copy()
+                nb = np.nonzero(~np.isfinite(b))[0]
+                if len(nb) > 0:
+                    # fallback count-bound at GROUP granularity (home had
+                    # < k poses): compound upper bound — union-box dmax
+                    # covers every member pose, rotation term from group
+                    # rotation bboxes when carried, else angular diameter
+                    dmax = _bbox_min_max_dist(P3[nb], g_lo, g_hi)[1]
+                    if rw > 0.0 and g_slo is not None:
+                        ub = tw * dmax + rw * _rot_ub(QR[sl][nb], g_slo, g_shi)
+                    else:
+                        ub = tw * dmax + rot_diam
+                    b[nb] = _count_bound(ub, g_counts, k)
+                if home:
+                    # home-edge early exit in COMPOUND units against the
+                    # query's OWN leaf cell boundary (level-aware width)
+                    edge = tw * _grid_home_edge(P3, vmin_a, vspan_a, n_leaf[sl])
+                    rows = np.nonzero(~(b < edge))[0]
+                else:
+                    rows = np.arange(len(P3))
+                if len(rows) == 0:
+                    continue
+                qi, pid = _se3_partition_candidates(
+                    P3[rows], QR[sl][rows], b[rows], la, tw, rw,
+                    home_pid=home_pid[sl][rows] if home else None,
+                )
+                if len(qi) == 0:
+                    continue
+                g = np.asarray(rows[qi]) + c0
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "query_id": pc.take(qid_arr, pa.array(g)),
+                        **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
+                        **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
+                        "pid": pa.array(pid),
+                    }
+                )
+
+    return (
+        frame.mapInArrow(
+            gen,
+            schema="query_id string, "
+            + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
+            + ", pid long",
+        )
+        .join(_pid_salts(spark, layout), "pid")
+        .drop("pid")
+    )
 
 
 def se3_radius_join(
@@ -1844,22 +1906,15 @@ def se3_radius_join(
     with trans_weight == 0 everything is admitted — correct, dense), and
     the EXACT libm compound distance makes the final cut.  One-shot
     convenience over :class:`Se3Index.radius_join`."""
-    if level is None:
-        n = n_poses_hint if n_poses_hint is not None else poses.count()
-        level = level_for_poses(n, dims=3)
-    bounds = _trans_bounds(poses)
-    b3 = [(lo, max(hi - lo, 1e-9)) for lo, hi in bounds]
-    layout = _se3_layout(poses, b3, level, max_cell_rows)
-    leaf_expr = leaf_key_sql(list(TCOLS), b3, layout)
-    corpus = _salted(poses, spark, layout, leaf_expr, "pose_id").select(
-        "pose_id", *QCOLS, *TCOLS, "part_key"
+    corpus, layout, _, _ = _se3_corpus(
+        spark, poses, level, max_cell_rows, n_poses_hint
     )
-    return _se3_radius_on_index(
+    return _se3_radius(
         spark, corpus, layout, queries, r, rot_weight, trans_weight
     )
 
 
-def _se3_radius_on_index(
+def _se3_radius(
     spark: SparkSession,
     corpus: DataFrame,
     layout: PoseLayout,
@@ -1869,89 +1924,30 @@ def _se3_radius_on_index(
     trans_weight: float,
     cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
-    # see _so3_radius_on_index: drain at entry, register into the caller's
-    # registry so index-owned joins release via idx.unpersist()
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)
+    """SE(3) radius join over a salted corpus: the SE(3) admission at the
+    padded r, a 7-D embedded scan per cogroup, the exact compound cut.  A
+    pose lives in exactly one partition and a query row carries one gsalt
+    per admitted partition, so no dedupe is needed."""
     rw, tw = float(rot_weight), float(trans_weight)
-    r = float(r)
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pid_salts = _pid_salts(spark, layout)
-    q = (
-        queries.filter(_finite_pred(list(QCOLS) + list(TCOLS)))
-        .select("query_id", *QCOLS, *TCOLS)
-        .repartition(shuffle_n)
-    )
-
-    # compound-space admission radius (padded superset; exact libm
-    # compound distance decides below)
-    r_pad = r * (1.0 + 1e-12) + 1e-15
-    bc = _cached(
-        layout, spark, "se3rad_bc",
-        lambda: spark.sparkContext.broadcast(
-            (
-                *_f32_leaf_pack(layout),
-                *_f32_outward(layout.p_lo, layout.p_hi),
-                *_f32_pair(layout.p_slo, layout.p_shi),
-                layout.p_start,
-                *_f32_outward(layout.g_lo, layout.g_hi),
-                *_f32_pair(layout.g_slo, layout.g_shi),
-                layout.g_start,
-            )
+    q = _se3_queries(spark, queries)
+    return _radius_on_index(
+        spark, r,
+        # compound-space admission radius (padded superset; the exact
+        # libm compound distance decides in the kernel)
+        lambda r: _se3_admission(
+            spark, layout,
+            q.withColumn("bound", F.lit(r * (1.0 + 1e-12) + 1e-15)), rw, tw,
         ),
+        corpus, _pose_group_rows(layout),
+        lambda r: _make_se3_radius_group(r, rw, tw),
+        "query_id string, pose_id string, dist double",
+        _ONESHOT_CACHES if cache_registry is None else cache_registry,
     )
 
-    def gen(batches):
-        la = bc.value
-        p_lo = la[4]
-        g_lo = la[9]
-        for rb in batches:
-            if rb.num_rows == 0 or len(p_lo) == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            Qraw = np.column_stack([_pa_np(tbl, c) for c in QCOLS])
-            T = np.column_stack([_pa_np(tbl, c) for c in TCOLS])
-            QR = Qraw * canon_sign_np(Qraw)[:, None]
-            # chunk on the GROUP matrix (partition + leaf stages are
-            # pair-expanded — never dense)
-            chunk = max(256, 8_000_000 // max(len(g_lo), 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P3 = T[sl]
-                b = np.full(len(P3), r_pad)
-                # rotation-aware admission: tw*d_trans_lb + rw*d_rot_lb <= r
-                # (round-3 was translation-only — rotation-dominant weights
-                # degraded it toward admit-everything)
-                qi, pid = _se3_partition_candidates(
-                    P3, QR[sl], b, la, tw, rw
-                )
-                if len(qi) == 0:
-                    continue
-                g = np.asarray(qi) + c0
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "query_id": pc.take(qid_arr, pa.array(g)),
-                        **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
-                        **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
-                        "pid": pa.array(pid),
-                    }
-                )
 
-    cand = q.mapInArrow(
-        gen,
-        schema="query_id string, "
-        + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
-        + ", pid long",
-    ).join(pid_salts, "pid").drop("pid")
-    # cache + ONE collect (counts): InSet pushdown + heavy-group split
-    # (see engine._split_heavy_cogroups)
-    cand = _register_cache(cand, cache_registry)
-    cand, corp_probe, gcols = _split_heavy_cogroups(
-        spark, cand, corpus, _pose_group_rows(layout)
-    )
-
+def _make_se3_radius_group(r: float, rw: float, tw: float):
+    """SE(3) radius cogroup kernel: a 7-D embedded k-d radius scan at
+    both rotation signs, then the exact libm compound distance."""
     # embedded-space scan radius: dist = rw*ang + tw*dt >=
     # sqrt((tw*dt)^2 + (rw*chord)^2) = L2 in the 7-D embedding
     # (tw*t, rw*c) with c the CANONICAL quaternion coefficients and the
@@ -2018,16 +2014,7 @@ def _se3_radius_on_index(
             }
         )
 
-    hits = (
-        cand.groupby(*gcols)
-        .cogroup(corp_probe.groupby(*gcols))
-        .applyInArrow(
-            radius_group, schema="query_id string, pose_id string, dist double"
-        )
-    )
-    # a pose lives in exactly one partition, a query row carries exactly
-    # one gsalt per admitted partition — no dedupe needed
-    return hits
+    return radius_group
 
 
 def se3_knn_join(
@@ -2054,15 +2041,8 @@ def se3_knn_join(
     ``rot_weight * pi/2`` diameter slack enters only the fallback for
     queries whose home partition holds fewer than k poses.
     One-shot convenience over :class:`Se3Index` (corpus unpersisted)."""
-    if level is None:
-        n = n_poses_hint if n_poses_hint is not None else poses.count()
-        level = level_for_poses(n, dims=3)
-    bounds = _trans_bounds(poses)
-    b3 = [(lo, max(hi - lo, 1e-9)) for lo, hi in bounds]
-    layout = _se3_layout(poses, b3, level, max_cell_rows)
-    leaf_expr = leaf_key_sql(list(TCOLS), b3, layout)
-    corpus = _salted(poses, spark, layout, leaf_expr, "pose_id").select(
-        "pose_id", *QCOLS, *TCOLS, "part_key"
+    corpus, layout, b3, leaf_expr = _se3_corpus(
+        spark, poses, level, max_cell_rows, n_poses_hint
     )
     return _se3_knn_on_index(
         spark, corpus, layout, queries, k, rot_weight, trans_weight, b3, leaf_expr
@@ -2133,24 +2113,10 @@ def _se3_knn_on_index(
         cache_registry = _ONESHOT_CACHES
     _release_registry(cache_registry)
     rw, tw = float(rot_weight), float(trans_weight)
-    rot_diam = rw * (np.pi / 2.0)
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     leaf_salts = _leaf_salts(spark, layout)
-    pid_salts = _pid_salts(spark, layout)
-    leaf_pid = _cached(
-        layout, spark, "leaf_pid",
-        lambda: F.broadcast(
-            spark.createDataFrame(
-                _leaf_pid_df(spark, layout), schema="key bigint, pid bigint"
-            )
-        ),
-    )
+    leaf_pid = _leaf_pid(spark, layout)
 
-    q = (
-        queries.filter(_finite_pred(list(QCOLS) + list(TCOLS)))
-        .select("query_id", *QCOLS, *TCOLS)
-        .repartition(shuffle_n)
-    )
+    q = _se3_queries(spark, queries)
 
     # ---- phase 1: home-partition probe (all salts) — TRUE compound bound
     q_home = q.withColumn("key", F.expr(leaf_expr))
@@ -2204,101 +2170,8 @@ def _se3_knn_on_index(
     )
 
     # ---- phase 2: partition admission within the compound bound ---------
-    bc = _cached(
-        layout, spark, "se3knn_bc",
-        lambda: spark.sparkContext.broadcast(
-            (
-                *_f32_leaf_pack(layout),
-                *_f32_outward(layout.p_lo, layout.p_hi),
-                *_f32_pair(layout.p_slo, layout.p_shi),
-                layout.p_start,
-                layout.g_counts,
-                *_f32_outward(layout.g_lo, layout.g_hi),
-                *_f32_pair(layout.g_slo, layout.g_shi),
-                layout.g_start,
-            )
-        ),
-    )
-    vmin_a = np.array([lo for lo, _ in b3])
-    vspan_a = np.array([span for _, span in b3])
-
-    def gen(batches):
-        (lo, hi, slo, shi,
-         p_lo, p_hi, p_slo, p_shi, p_start,
-         g_counts, g_lo, g_hi, g_slo, g_shi, g_start) = bc.value
-        G = len(g_counts)
-        la = (lo, hi, slo, shi, p_lo, p_hi, p_slo, p_shi, p_start,
-              g_lo, g_hi, g_slo, g_shi, g_start)
-        for rb in batches:
-            if rb.num_rows == 0 or G == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            qid_arr = tbl.column("query_id").chunk(0)
-            Qraw = np.column_stack([_pa_np(tbl, c) for c in QCOLS])
-            T = np.column_stack([_pa_np(tbl, c) for c in TCOLS])
-            QR = Qraw * canon_sign_np(Qraw)[:, None]
-            given = _pa_np(tbl, "bound")
-            home = tbl.column("home_pid").to_numpy(zero_copy_only=False)
-            hk = tbl.column("hk").to_numpy(zero_copy_only=False)
-            n_leaf = (np.int64(1) << (hk >> LVL_SHIFT)).astype(np.int64)
-            chunk = max(256, 8_000_000 // max(G, 1))
-            for c0 in range(0, rb.num_rows, chunk):
-                sl = slice(c0, min(c0 + chunk, rb.num_rows))
-                P3 = T[sl]
-                b = given[sl].copy()
-                nb = np.nonzero(~np.isfinite(b))[0]
-                if len(nb) > 0:
-                    # fallback count-bound at GROUP granularity (home had
-                    # < k poses): compound upper bound — union-box dmax
-                    # covers every member pose, rotation term from group
-                    # rotation bboxes when carried, else angular diameter
-                    dmin, dmax = _bbox_min_max_dist(P3[nb], g_lo, g_hi)
-                    if rw > 0.0 and g_slo is not None:
-                        ub = tw * dmax + rw * _rot_ub(QR[sl][nb], g_slo, g_shi)
-                    else:
-                        ub = tw * dmax + rot_diam
-                    order = np.argsort(ub, axis=1, kind="stable")
-                    cum = np.cumsum(g_counts[order], axis=1)
-                    need = np.argmax(cum >= k, axis=1)
-                    enough = cum[:, -1] >= k
-                    need = np.where(enough, need, G - 1)
-                    rr = np.arange(len(need))
-                    b[nb] = np.where(
-                        enough,
-                        np.take_along_axis(ub, order, axis=1)[rr, need],
-                        np.inf,
-                    )
-                # home-edge early exit in COMPOUND units against the
-                # query's OWN leaf cell boundary (level-aware width)
-                edge = tw * _grid_home_edge(P3, vmin_a, vspan_a, n_leaf[sl])
-                alive = ~(b < edge)
-                rows = np.nonzero(alive)[0]
-                if len(rows) == 0:
-                    continue
-                qi, pid = _se3_partition_candidates(
-                    P3[rows], QR[sl][rows], b[rows], la, tw, rw,
-                    home_pid=home[sl][rows],
-                )
-                if len(qi) == 0:
-                    continue
-                g = np.asarray(rows[qi]) + c0
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "query_id": pc.take(qid_arr, pa.array(g)),
-                        **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
-                        **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
-                        "pid": pa.array(pid),
-                    }
-                )
-
-    p2_cand = q_b.mapInArrow(
-        gen,
-        schema="query_id string, "
-        + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
-        + ", pid long",
-    )
     p2_cand = _register_cache(
-        p2_cand.join(pid_salts, "pid").drop("pid"), cache_registry
+        _se3_admission(spark, layout, q_b, rw, tw, k, b3=b3), cache_registry
     )
     # ONE Spark job: the split planner's count-collect fills both
     # caches + InSet probe pushdown AND splits a critical-path cogroup

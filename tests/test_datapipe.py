@@ -255,22 +255,6 @@ def test_image_stats_matches_expected_pixels(spark, sf0001_fixtures):
         assert r["mean_g"] == round(float(m[1]), 6)
 
 
-def test_media_features_stub_and_fake(spark, sf0001_fixtures):
-    images = spark.read.parquet(str(sf0001_fixtures / "images.parquet")).limit(20)
-    # fake path: plumbing (schema, batching) is real
-    res = datapipe.media_features(images, "audio", fake=True).toPandas()
-    assert len(res) == 20
-    assert all(len(f) == 32 for f in res["features"])
-    # deterministic
-    res2 = datapipe.media_features(images, "audio", fake=True).toPandas()
-    a = res.sort_values("media_id").reset_index(drop=True)
-    b = res2.sort_values("media_id").reset_index(drop=True)
-    assert a.equals(b)
-    # stub raises cleanly when not faked
-    with pytest.raises(Exception, match="(?i)audio decoding|NotImplemented"):
-        datapipe.media_features(images, "audio", fake=False).toPandas()
-
-
 def test_lang_id_deterministic(spark, docs):
     a = datapipe.lang_id_score(docs).toPandas().sort_values("doc_id")
     b = datapipe.lang_id_score(docs).toPandas().sort_values("doc_id")

@@ -7,7 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from sparkkd import so3engine, synth
+from sparkkd import engine, so3engine, synth
 
 pytestmark = pytest.mark.spark
 
@@ -398,9 +398,11 @@ def test_leaf_broadcast_budget_invariance(spark, pose_data, monkeypatch):
 
 
 def _record_splits(monkeypatch, **force):
-    """Wrap the pose engines' split planner (forcing any ``force``
-    keyword arguments); returns a list that gets, per phase-2 cogroup
-    planned, whether the gsalt fan-out ran."""
+    """Wrap the pose joins' split planner (forcing any ``force`` keyword
+    arguments) where each path looks it up: so3engine for the pose kNN
+    orchestrations, engine for the shared radius orchestration.  Returns
+    a list that gets, per phase-2 cogroup planned, whether the gsalt
+    fan-out ran."""
     orig = so3engine._split_heavy_cogroups
     seen: list[bool] = []
 
@@ -410,6 +412,7 @@ def _record_splits(monkeypatch, **force):
         return c, p, gcols
 
     monkeypatch.setattr(so3engine, "_split_heavy_cogroups", wrapped)
+    monkeypatch.setattr(engine, "_split_heavy_cogroups", wrapped)
     return seen
 
 

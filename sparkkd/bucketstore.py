@@ -12,16 +12,18 @@ it:
 * ``save_geo_index`` writes the salted projection as a parquet table
   bucketed by ``part_key`` (Spark's ``bucketBy`` — files are hash-split by
   the same murmur3 the shuffle would use) with an in-file sort.
-* ``BucketedGeoIndex`` answers kNN / radius joins through the SAME
-  ``_knn_join_on_index`` plan, but the corpus side's cogroup requirement
-  (hash distribution by part_key) is satisfied by the bucketed SCAN — the
-  plan shows no Exchange above the corpus file scan; only the (small)
-  query/candidate side shuffles.  Verified by tests/test_bucketstore.py,
-  which counts Exchange nodes in the executed plan.
+* ``BucketedGeoIndex`` answers kNN / radius joins through the SAME plans
+  as ``engine.GeoIndex`` (kNN: the single pass of ``_knn_join_on_index``
+  — one admission, one cogroup, one merge), but the corpus side's cogroup
+  requirement (hash distribution by part_key) is satisfied by the bucketed
+  SCAN — the plan shows no Exchange above the corpus file scan; only the
+  (small) query/candidate side shuffles.  Verified by
+  tests/test_bucketstore.py, which counts Exchange nodes in the executed
+  plan.
 
-Pruning statistics (CellStats) are persisted as JSON next to the data, so
-a fresh session reconstructs driver-side state without touching the
-corpus.  The table survives session restarts: load() re-issues the
+Pruning statistics (CellStats, leaf table included) are persisted as JSON
+next to the data, so a fresh session reconstructs driver-side state
+without touching the corpus.  The table survives session restarts: load() re-issues the
 ``CREATE TABLE ... USING PARQUET CLUSTERED BY ... LOCATION`` DDL when the
 (in-memory) catalog lost it.
 """
@@ -54,25 +56,37 @@ def _stats_to_json(stats: engine.CellStats) -> str:
             "refinements": [
                 [f, t, hot.tolist()] for f, t, hot in stats.refinements
             ],
+            "leaf_start": stats.leaf_start.tolist(),
+            "leaf_counts": stats.leaf_counts.tolist(),
+            "leaf_bbox": stats.leaf_bbox.tolist(),
         }
     )
 
 
 def _stats_from_json(text: str) -> engine.CellStats:
+    """A stats.json written before the leaf table existed loads with one
+    leaf per key (the key's own count and bbox): kNN admission then
+    bounds from cell-level statistics, exactly as before."""
     d = json.loads(text)
+    keys = np.array(d["keys"], np.int64)
+    counts = np.array(d["counts"], np.int64)
+    box = [np.array(d[c], np.float64) for c in ("min_x", "min_y", "max_x", "max_y")]
     return engine.CellStats(
-        keys=np.array(d["keys"], np.int64),
-        counts=np.array(d["counts"], np.int64),
-        min_x=np.array(d["min_x"], np.float64),
-        min_y=np.array(d["min_y"], np.float64),
-        max_x=np.array(d["max_x"], np.float64),
-        max_y=np.array(d["max_y"], np.float64),
+        keys=keys,
+        counts=counts,
+        min_x=box[0],
+        min_y=box[1],
+        max_x=box[2],
+        max_y=box[3],
         salt_n=np.array(d["salt_n"], np.int64),
         level=int(d["level"]),
         refinements=[
             (int(f), int(t), np.array(hot, np.int64))
             for f, t, hot in d["refinements"]
         ],
+        leaf_start=np.array(d.get("leaf_start", range(len(keys) + 1)), np.int64),
+        leaf_counts=np.array(d.get("leaf_counts", counts), np.int64),
+        leaf_bbox=np.array(d.get("leaf_bbox", np.column_stack(box)), np.float64).reshape(-1, 4),
     )
 
 
@@ -134,7 +148,10 @@ class BucketedGeoIndex:
         self.img_salted = spark.table(self.name)
         self.stats = _stats_from_json((self.path / "stats.json").read_text())
         self.part_keys = F.broadcast(
-            spark.createDataFrame(engine._candidate_part_keys(self.stats))
+            spark.createDataFrame(
+                engine._candidate_part_keys(self.stats),
+                schema=engine._PART_KEYS_SCHEMA,
+            )
         )
         # per-index intermediate-cache registry (see engine.GeoIndex)
         self._caches: list[DataFrame] = []
@@ -155,7 +172,6 @@ class BucketedGeoIndex:
             queries,
             k,
             max_radius=max_radius,
-            cache_registry=self._caches,
         )
 
     def radius_join(self, queries: DataFrame, r: float) -> DataFrame:

@@ -74,14 +74,15 @@ def _parallelism(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-# Intermediate caches (phase-1 top-k, phase-2 candidates) are tracked in a
-# REGISTRY scoped to the issuing context: GeoIndex instances each own one
-# (a new join on the SAME index releases that index's previous
-# intermediates only — other indexes' and sessions' in-flight joins are
-# untouched), and one-shot joins share a module registry released by the
-# next one-shot call (their results are consumed once by contract).  A
-# still-lazy earlier result remains CORRECT after release (Spark recomputes
-# the evicted subtree); only already-materialized reuse is affected.
+# Intermediate caches (radius candidates; planar kNN persists nothing)
+# are tracked in a REGISTRY scoped to the issuing context: GeoIndex
+# instances each own one (a new join on the SAME index releases that
+# index's previous intermediates only — other indexes' and sessions'
+# in-flight joins are untouched), and one-shot joins share a module
+# registry released by the next one-shot call (their results are consumed
+# once by contract).  A still-lazy earlier result remains CORRECT after
+# release (Spark recomputes the evicted subtree); only already-materialized
+# reuse is affected.
 _ONESHOT_CACHES: list[DataFrame] = []
 
 
@@ -185,6 +186,12 @@ class CellStats:
     # refinement schedule: list of (from_level, to_level, hot_cell_ids) —
     # a point's key descends through every matching refinement step
     refinements: list[tuple[int, int, np.ndarray]]
+    # leaf table, CSR by key: key i's leaves are rows leaf_start[i] :
+    # leaf_start[i + 1] — its occupied sub-cells up to 3 levels below the
+    # key (the kNN admission's per-query count bound)
+    leaf_start: np.ndarray  # (C+1,) int64
+    leaf_counts: np.ndarray  # (N,) int64
+    leaf_bbox: np.ndarray  # (N, 4) float64 min_x, min_y, max_x, max_y
 
     @property
     def total(self) -> int:
@@ -357,8 +364,9 @@ def collect_cell_stats(
         cur = nxt
 
     # final per-key stats: descend each fine row through the schedule, then
-    # roll up (sum counts, union bboxes) per final key — identical to
-    # re-aggregating in Spark at key_sql granularity
+    # roll up (sum counts, union bboxes) per leaf — the row's ancestor at
+    # min(its level, key level + 3) — and the leaves per final key:
+    # identical to re-aggregating in Spark at key_sql granularity
     key_level = np.full(len(cell_arr), level, np.int64)
     for from_lvl, to_lvl, hot in refinements:
         # rows coarser than from_lvl survived an extension un-decomposed —
@@ -371,24 +379,34 @@ def collect_cell_stats(
             anc[m] = _coarsen(cell_arr[m], int(lv), from_lvl)
         m = (key_level == from_lvl) & np.isin(anc, hot)
         key_level[m] = to_lvl
-    final_cell = np.empty(len(cell_arr), np.int64)
+    # code = key << 8 | (leaf depth below the key) << 6 | the leaf's local
+    # (iy, ix) in the key's 8x8 descendant grid: ONE int64 sort orders rows
+    # by key then leaf, so both roll-ups are reduceats over the same order
+    code = np.empty(len(cell_arr), np.int64)
     for lv in np.unique(lvl_arr):
         for kl in np.unique(key_level):
             m = (lvl_arr == lv) & (key_level == kl)
-            if m.any():
-                final_cell[m] = _coarsen(cell_arr[m], int(lv), int(kl))
-    keys_all = (key_level << LEVEL_SHIFT) + final_cell
-    uniq, inv = np.unique(keys_all, return_inverse=True)
-    counts = np.zeros(len(uniq), np.int64)
-    np.add.at(counts, inv, cnt_arr)
-    mnx = np.full(len(uniq), np.inf)
-    mny = np.full(len(uniq), np.inf)
-    mxx = np.full(len(uniq), -np.inf)
-    mxy = np.full(len(uniq), -np.inf)
-    np.minimum.at(mnx, inv, bbox_arr[:, 0])
-    np.minimum.at(mny, inv, bbox_arr[:, 1])
-    np.maximum.at(mxx, inv, bbox_arr[:, 2])
-    np.maximum.at(mxy, inv, bbox_arr[:, 3])
+            if not m.any():
+                continue
+            depth = min(int(lv), int(kl) + 3) - int(kl)
+            leaf = _coarsen(cell_arr[m], int(lv), int(kl) + depth)
+            n_l, sub = np.int64(1 << (int(kl) + depth)), (1 << depth) - 1
+            local = (((leaf // n_l) & sub) << 3) | ((leaf % n_l) & sub)
+            key = (np.int64(kl) << LEVEL_SHIFT) + _coarsen(cell_arr[m], int(lv), int(kl))
+            code[m] = (key << 8) | (depth << 6) | local
+    order = np.argsort(code, kind="stable")
+    code = code[order]
+    starts = np.flatnonzero(np.diff(code, prepend=-1))  # codes are >= 0
+    bb = bbox_arr[order]
+    leaf_counts = np.add.reduceat(cnt_arr[order], starts)
+    leaf_bbox = np.hstack(
+        [np.minimum.reduceat(bb[:, :2], starts), np.maximum.reduceat(bb[:, 2:], starts)]
+    )
+    leaf_key = code[starts] >> 8
+    kstarts = np.flatnonzero(np.diff(leaf_key, prepend=-1))
+    counts = np.add.reduceat(leaf_counts, kstarts)
+    lo = np.minimum.reduceat(leaf_bbox[:, :2], kstarts)
+    hi = np.maximum.reduceat(leaf_bbox[:, 2:], kstarts)
     # hash-salt fan-out is capped by its bit budget (SALT_SHIFT): a cell
     # needing more than 4096 salts (~33.5M duplicate-coordinate rows at
     # defaults) degrades to coarser salting rather than corrupting keys
@@ -396,15 +414,18 @@ def collect_cell_stats(
         -(-counts // max_cell_rows), 1, np.int64(1 << SALT_SHIFT)
     ).astype(np.int64)
     return CellStats(
-        keys=uniq,
+        keys=leaf_key[kstarts],
         counts=counts,
-        min_x=mnx,
-        min_y=mny,
-        max_x=mxx,
-        max_y=mxy,
+        min_x=lo[:, 0],
+        min_y=lo[:, 1],
+        max_x=hi[:, 0],
+        max_y=hi[:, 1],
         salt_n=salt_n,
         level=level,
         refinements=refinements,
+        leaf_start=np.append(kstarts, len(leaf_key)).astype(np.int64),
+        leaf_counts=leaf_counts,
+        leaf_bbox=leaf_bbox,
     )
 
 
@@ -437,14 +458,12 @@ def _salted_images(spark: SparkSession, img: DataFrame, stats: CellStats) -> Dat
 
 
 # explicit so an EMPTY corpus yields an empty frame (inference would raise)
-_PART_KEYS_SCHEMA = "key bigint, part_key bigint, salt_n bigint"
+_PART_KEYS_SCHEMA = "key bigint, part_key bigint"
 
 
 def _candidate_part_keys(stats: CellStats) -> pd.DataFrame:
-    """(key, part_key, salt_n) exploded over salts — broadcast-joined to
-    candidates so a probed cell probes ALL of its salted sub-trees; salt_n
-    lets the phase-1 kernel finalize ranks for single-salt cells without a
-    corpus-sized window exchange."""
+    """(key, part_key) exploded over salts — broadcast-joined to
+    candidates so a probed cell probes ALL of its salted sub-trees."""
     reps = stats.salt_n
     key = np.repeat(stats.keys, reps)
     off = np.concatenate([[0], np.cumsum(reps)])[: len(reps)]
@@ -453,7 +472,6 @@ def _candidate_part_keys(stats: CellStats) -> pd.DataFrame:
         {
             "key": key,
             "part_key": (key << SALT_SHIFT) + salt,
-            "salt_n": np.repeat(reps, reps),
         }
     )
 
@@ -513,9 +531,12 @@ def _count_bound(dmax: np.ndarray, counts: np.ndarray, k: int) -> np.ndarray:
     fallback for rows without a finite bound): walk the (rows, C) regions
     in ascending farthest-point distance dmax until their counts cover k;
     that dmax upper-bounds the kth-NN distance (>= k points provably lie
-    within it).  inf when all C regions together hold fewer than k."""
+    within it).  inf when all C regions together hold fewer than k.
+    ``counts`` is (C,) shared by every row, or (rows, C) per row."""
     order = np.argsort(dmax, axis=1, kind="stable")
-    cum = np.cumsum(counts[order], axis=1)
+    cum = np.cumsum(
+        np.take_along_axis(np.broadcast_to(counts, dmax.shape), order, axis=1), axis=1
+    )
     need = np.argmax(cum >= k, axis=1)
     enough = cum[:, -1] >= k
     need = np.where(enough, need, dmax.shape[1] - 1)
@@ -525,25 +546,66 @@ def _count_bound(dmax: np.ndarray, counts: np.ndarray, k: int) -> np.ndarray:
     )
 
 
+def _key_of(x: np.ndarray, y: np.ndarray, level: int, refinements) -> np.ndarray:
+    """NumPy twin of CellStats.key_sql: the encoded key of each point."""
+    key = (np.int64(level) << LEVEL_SHIFT) + cells.cell_id(x, y, level)
+    for from_lvl, to_lvl, hot in refinements:
+        m = np.isin(cells.cell_id(x, y, from_lvl), hot)
+        key[m] = (np.int64(to_lvl) << LEVEL_SHIFT) + cells.cell_id(x[m], y[m], to_lvl)
+    return key
+
+
+def _knn_bound(px, py, bound, k, home, keys, counts, boxes, lstart, lcounts, lbox):
+    """Per-query kNN admission bound: ``bound`` (max_radius) capped by
+    _count_bound over the leaves of each query's ``home`` key; rows still
+    at +inf (home key unoccupied or holding < k rows) take _count_bound
+    over every cell (``boxes`` = the cells' min_x, min_y, max_x, max_y).
+    Any leaf set holding >= k points bounds the kth distance, so home
+    only decides how tight the bound is, never whether it is exact."""
+    hk = np.minimum(np.searchsorted(keys, home), len(keys) - 1)
+    r = np.flatnonzero(keys[hk] == home)
+    if len(r):
+        first, n = lstart[hk[r]], np.diff(lstart)[hk[r]]
+        j = np.arange(n.max())
+        valid = j[None, :] < n[:, None]
+        li = np.where(valid, first[:, None] + j[None, :], 0)
+        dmax = cells.bbox_max_dist(
+            px[r][:, None], py[r][:, None],
+            lbox[li, 0], lbox[li, 1], lbox[li, 2], lbox[li, 3],
+        )
+        dmax[~valid] = np.inf
+        bound[r] = np.minimum(
+            bound[r], _count_bound(dmax, np.where(valid, lcounts[li], 0), k)
+        )
+    nb = np.flatnonzero(bound == np.inf)
+    if len(nb):
+        dmax = cells.bbox_max_dist(
+            px[nb][:, None], py[nb][:, None], *(b[None, :] for b in boxes)
+        )
+        bound[nb] = _count_bound(dmax, counts, k)
+    return bound
+
+
 def _planar_admission(
     spark: SparkSession,
     queries: DataFrame,
     stats: CellStats,
     part_keys: DataFrame,
     k: int | None = None,
-    exclude_home: bool = False,
-    spread: bool = True,
 ) -> DataFrame:
-    """The planar admission generator, shared by kNN phase 2 and radius:
-    queries (query_id, x, y, bound [, home_key]) -> candidate rows
-    (query_id, x, y, part_key), one per admitted (query, cell salt).
+    """The planar admission generator, shared by kNN and radius: queries
+    (query_id, x, y, bound) -> candidate rows (query_id, x, y, part_key,
+    bound), one per admitted (query, cell salt).
 
     Cells with min-dist <= bound become candidates — the cross-cell
     ``shouldTraverse`` (``src/_kdtree_median.hpp:136-138``), vectorized
-    over query batches against broadcast cell stats.  kNN phase 2 passes
-    its phase-1 kth distance and ``exclude_home=True`` (the home_key cell
-    was fully probed); radius passes r.  Rows without a finite bound
-    fall back to _count_bound over k (radius bounds are always finite).
+    over query batches against broadcast cell stats.  Radius passes r.
+    kNN passes max_radius and, given k, tightens it per query to the
+    _count_bound over the leaves of the query's home key (>= k points
+    provably lie within it, so it is >= the true kth distance: the
+    reference's bounded search seeded with maxRadius,
+    ``src/_kdtree_median.hpp:131-137``).  A home key that is unoccupied
+    or holds fewer than k rows falls back to _count_bound over all cells.
     """
     g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start = _coarse_groups(stats)
 
@@ -552,18 +614,19 @@ def _planar_admission(
             stats.keys, stats.counts,
             stats.min_x, stats.min_y, stats.max_x, stats.max_y,
             g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start,
+            stats.leaf_start, stats.leaf_counts, stats.leaf_bbox,
         )
     )
-    if spread:
-        # queries usually arrive as one small parquet file = ONE partition;
-        # spread the vectorized pruning work across the cluster first
-        # (spread=False when the input already comes out of a shuffle)
-        queries = queries.repartition(_parallelism(spark))
+    # queries usually arrive as one small parquet file = ONE partition;
+    # spread the vectorized pruning work across the cluster first
+    queries = queries.repartition(_parallelism(spark))
+    level, refinements = stats.level, stats.refinements
 
     def gen(batches):
         (
             keys, counts, mnx, mny, mxx, mxy,
             gmnx, gmny, gmxx, gmxy, gorder, gstart,
+            lstart, lcounts, lbox,
         ) = bc.value
         C = len(keys)
         G_ = len(gmnx)
@@ -575,26 +638,16 @@ def _planar_admission(
             qx = _pa_np(tbl, "x")
             qy = _pa_np(tbl, "y")
             given = _pa_np(tbl, "bound")
-            home = (
-                tbl.column("home_key").to_numpy(zero_copy_only=False)
-                if exclude_home
-                else None
-            )
             chunk = max(256, 8_000_000 // max(G_, 1))
             for c0 in range(0, rb.num_rows, chunk):
                 sl = slice(c0, min(c0 + chunk, rb.num_rows))
                 px, py = qx[sl], qy[sl]
-                gb = given[sl]
-                bound = gb.copy()
-                nb = np.nonzero(~np.isfinite(gb))[0]
-                if len(nb) > 0:
-                    # count-bound only for the (few) rows lacking a phase-1
-                    # bound — full member sweep for just those rows
-                    dmax = cells.bbox_max_dist(
-                        px[nb][:, None], py[nb][:, None],
-                        mnx[None, :], mny[None, :], mxx[None, :], mxy[None, :],
+                bound = given[sl].copy()
+                if k is not None:
+                    bound = _knn_bound(
+                        px, py, bound, k, _key_of(px, py, level, refinements),
+                        keys, counts, (mnx, mny, mxx, mxy), lstart, lcounts, lbox,
                     )
-                    bound[nb] = _count_bound(dmax, counts, k)
                 # level 1: group boxes
                 dmin_g = cells.bbox_min_dist(
                     px[:, None], py[:, None],
@@ -612,8 +665,6 @@ def _planar_admission(
                         mxx[mem][None, :], mxy[mem][None, :],
                     )
                     adm = dmin <= bound[rows_g][:, None]
-                    if home is not None:
-                        adm &= keys[mem][None, :] != home[sl][rows_g][:, None]
                     qi_l, ci_l = np.nonzero(adm)
                     if len(qi_l) > 0:
                         out_qi.append(rows_g[qi_l])
@@ -628,13 +679,16 @@ def _planar_admission(
                         "x": pa.array(qx[qi + c0]),
                         "y": pa.array(qy[qi + c0]),
                         "key": pa.array(keys[ci]),
+                        "bound": pa.array(bound[qi]),
                     }
                 )
 
     cand = queries.mapInArrow(
-        gen, schema="query_id string, x double, y double, key long"
+        gen, schema="query_id string, x double, y double, key long, bound double"
     )
-    return cand.join(part_keys, "key").select("query_id", "x", "y", "part_key")
+    return cand.join(part_keys, "key").select(
+        "query_id", "x", "y", "part_key", "bound"
+    )
 
 
 # ---------------------------------------------------------------- kNN join
@@ -650,102 +704,48 @@ def _tie_rank(ids) -> np.ndarray:
     return tie
 
 
-def _make_knn_group(
-    k: int,
-    carry_xy: bool = False,
-    max_radius: float = np.inf,
-    emit_rank: bool = False,
-):
-    """Arrow-native cogroup kernel: build a k-d tree over the cell's
-    images, run the batched bounded kNN for the cell's candidate queries
-    (ties broken by image_id lexicographic rank so the global merge is
-    deterministic).  Output rows are assembled with Arrow take/array calls
-    — no pandas object-string round trip (guide §4.2).
-    carry_xy=True passes the query coordinates through (lets phase 2 derive
-    its inputs from phase-1 output without re-joining the query table).
-    max_radius seeds the admission bound (reference Q2's maxRadius,
-    ``src/_kdtree_median.hpp:456-472``).
-    emit_rank=True additionally emits per-query (rank, cnt, final): for a
-    SINGLE-SALT home cell the group holds the query's entire home probe, so
-    rank/cnt are final right here and the corpus-sized window exchange is
-    skipped for those rows (final=false rows — multi-salt cells — still
-    merge through the window)."""
-    empty = {c: _EMPTY_PAIRS.column(c) for c in _EMPTY_PAIRS.column_names}
-    if carry_xy:
-        empty.update(
-            {"x": pa.array([], pa.float64()), "y": pa.array([], pa.float64())}
-        )
-    if emit_rank:
-        empty.update(
-            {
-                "rank": pa.array([], pa.int32()),
-                "cnt": pa.array([], pa.int64()),
-                "final": pa.array([], pa.bool_()),
-                "home_edge": pa.array([], pa.float64()),
-            }
-        )
-    empty_tbl = pa.table(empty)
+def _make_knn_group(k: int):
+    """Arrow-native cogroup kernel: build a k-d tree over the group's
+    images and run the batched kNN for its candidate queries, each seeded
+    with its admission bound (reference maxRadius seeding,
+    ``src/_kdtree_median.hpp:131-137``); ties broken by image_id
+    lexicographic rank so the global merge is deterministic.  Output rows
+    are assembled with Arrow take/array calls — no pandas object-string
+    round trip (guide §4.2)."""
 
     def knn_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
-            return empty_tbl
+            return _EMPTY_PAIRS
         pts = np.column_stack([_pa_np(right, "x"), _pa_np(right, "y")])
         ids = right.column("image_id")
         tie = _tie_rank(ids)
         tree = kernel.build(pts)
         qpts = np.column_stack([_pa_np(left, "x"), _pa_np(left, "y")])
-        qi, idx, dist = kernel.knn(tree, qpts, k, tie_key=tie, max_radius=max_radius)
-        out = {
-            "query_id": pc.take(left.column("query_id"), pa.array(qi)),
-            "image_id": pc.take(ids, pa.array(idx)),
-            "dist": pa.array(dist),
-        }
-        if carry_xy:
-            out["x"] = pa.array(qpts[qi, 0])
-            out["y"] = pa.array(qpts[qi, 1])
-        if emit_rank:
-            # kernel output is sorted by (qi, dist, tie): in-group ranks
-            if len(qi) > 0:
-                starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-                lens = np.diff(np.append(starts, len(qi)))
-                out["rank"] = pa.array(
-                    (np.arange(len(qi)) - np.repeat(starts, lens) + 1).astype(
-                        np.int32
-                    )
-                )
-                out["cnt"] = pa.array(np.repeat(lens, lens).astype(np.int64))
-            else:
-                out["rank"] = pa.array([], pa.int32())
-                out["cnt"] = pa.array([], pa.int64())
-            out["final"] = pa.array(
-                np.full(len(qi), left.column("salt_n")[0].as_py() == 1, dtype=bool)
-            )
-            # distance from each query to the nearest edge of its home GRID
-            # cell (decoded from the group's part_key) — phase 2's early
-            # exit: every point of every other cell is >= edge away.  The
-            # 1e-9 deg margin absorbs float rounding between this boundary
-            # arithmetic and the cell-assignment formula.  Computed here in
-            # NumPy because the SQL rendering inlines the nested-CASE key
-            # expression ~15x when Catalyst pushes the filter through the
-            # projection (measured 30 us/row interpreted — vs free here).
-            key = left.column("part_key")[0].as_py() >> SALT_SHIFT
-            lvl = key >> LEVEL_SHIFT
-            n = 1 << lvl
-            cell = key & ((1 << LEVEL_SHIFT) - 1)
-            wx, wy = cells.X_SPAN / n, cells.Y_SPAN / n
-            lo_x = cells.X_MIN + (cell % n) * wx
-            lo_y = cells.Y_MIN + (cell // n) * wy
-            qxv, qyv = qpts[qi, 0], qpts[qi, 1]
-            out["home_edge"] = pa.array(
-                np.minimum(
-                    np.minimum(qxv - lo_x, lo_x + wx - qxv),
-                    np.minimum(qyv - lo_y, lo_y + wy - qyv),
-                )
-                - 1e-9
-            )
-        return pa.table(out)
+        qi, idx, dist = kernel.knn(
+            tree, qpts, k, tie_key=tie, max_radius=_pa_np(left, "bound")
+        )
+        return pa.table(
+            {
+                "query_id": pc.take(left.column("query_id"), pa.array(qi)),
+                "image_id": pc.take(ids, pa.array(idx)),
+                "dist": pa.array(dist),
+            }
+        )
 
     return knn_group
+
+
+def _check_knn_args(k, max_radius: float = float("inf")) -> tuple[int, float]:
+    """Every space's kNN entry check, before any Spark job: k must be an
+    integer >= 1 (NumPy integers accepted, bool rejected) and max_radius
+    must not be NaN.  A finite negative max_radius is legal: it admits
+    nothing, so the join is empty."""
+    if isinstance(k, bool) or not isinstance(k, (int, np.integer)) or k < 1:
+        raise ValueError(f"kNN join needs an integer k >= 1, got k={k!r}")
+    max_radius = float(max_radius)
+    if np.isnan(max_radius):
+        raise ValueError(f"kNN join needs a non-NaN max_radius, got max_radius={max_radius}")
+    return int(k), max_radius
 
 
 def knn_join(
@@ -773,6 +773,7 @@ def knn_join(
     results; pre-filter with functions.l2_is_valid to reject them loudly
     instead.
     """
+    k, max_radius = _check_knn_args(k, max_radius)
     _, stats, img_salted, part_keys = _planar_corpus(
         spark, images, level, max_cell_rows, n_images_hint
     )
@@ -789,159 +790,35 @@ def _knn_join_on_index(
     queries: DataFrame,
     k: int,
     max_radius: float = float("inf"),
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)  # PREVIOUS call in this scope only
+    """Planar kNN in one pass: admission (each query bounded by its home
+    key's leaf statistics, capped at max_radius) -> ONE cogroup with the
+    persisted corpus, each query's kernel seeded with its bound -> ONE
+    (dist, image_id) window merge.  Exact: the bound is >= the true kth
+    distance, every cell holding a point within it is probed, and every
+    comparison is <=.  Runs no Spark job at call time and persists
+    nothing.
+
+    Every group's rows go through the merge window, also those of queries
+    admitted to a single group (already final in-group): splitting them
+    off runs the cogroup UDF once per branch (Spark does not share a
+    non-exchange subtree between two consumers), which measured slower
+    than exchanging them."""
+    k, mr = _check_knn_args(k, max_radius)
     q = queries.select(
         "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
     ).filter(_FINITE_QUERY)
-    schema = "query_id string, image_id string, dist double"
-    key_expr = stats.key_sql("x", "y")
-
-    # ---- phase 1: probe each query's HOME cell (all salts of it) --------
-    # This is the first descent of the reference search: it yields a TRUE
-    # kth-distance bound per query, so phase 2 probes almost nothing.
-    q_home = q.withColumn("key", F.expr(key_expr))
-    p1_cand = q_home.join(part_keys, "key").select(
-        "query_id", "x", "y", "part_key", "salt_n"
-    )
-    p1 = (
-        p1_cand.groupby("part_key")
+    cand = _planar_admission(spark, q.withColumn("bound", F.lit(mr)), stats, part_keys, k)
+    w = Window.partitionBy("query_id").orderBy("dist", "image_id")
+    return (
+        cand.groupby("part_key")
         .cogroup(img_salted.groupby("part_key"))
         .applyInArrow(
-            _make_knn_group(k, carry_xy=True, max_radius=max_radius, emit_rank=True),
-            schema=schema
-            + ", x double, y double, rank int, cnt long, final boolean,"
-            " home_edge double",
+            _make_knn_group(k), schema="query_id string, image_id string, dist double"
         )
-    )
-    w = Window.partitionBy("query_id").orderBy("dist", "image_id")
-    wq = Window.partitionBy("query_id")
-    # p1 feeds the final/merge split, bound rows, the p2 exclusion AND the
-    # final union; cache it once (fills during the p2_cand materialization
-    # below — no separate count() job).
-    p1 = _register_cache(p1, cache_registry)
-    # single-salt home cells (the overwhelming majority): the kernel's
-    # in-group rank/cnt ARE final — those rows skip the Q-sized window
-    # exchange entirely.  Only multi-salt cells merge through the window.
-    p1_final = p1.filter(F.col("final")).drop("final")
-    p1_merge = (
-        p1.filter(~F.col("final"))
-        .drop("rank", "cnt", "final")
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn("cnt", F.count("*").over(wq))
-    )
-    # ALSO cache the merged top-k: bound_rows (job A) and the untouched/
-    # touched branches (job B) all consume it — without this cache job B
-    # re-ran the p1 window merge once per branch (2 extra exchanges).
-    p1_topk = _register_cache(
-        p1_final.unionByName(p1_merge).filter(F.col("rank") <= k),
-        cache_registry,
-    )
-
-    # ---- phase 2: probe remaining cells within the bound ----------------
-    # Home is always excluded: phase 1 returned min(k, |home|) rows, which
-    # covers the home cell completely in both the cnt>=k and cnt<k cases.
-    # Bound rows come straight from p1_topk: cnt counts SURVIVING candidate
-    # rows (radius-capped in the kernel), so the query's last surviving row
-    # is exactly rank == least(k, cnt) — no extra window needed.  The bound
-    # is the kth distance when cnt >= k, else inf, capped at max_radius.
-    mr = float(max_radius)
-    bound_rows = p1_topk.filter(
-        F.col("rank") == F.least(F.lit(k), F.col("cnt"))
-    ).select(
-        "query_id",
-        "x",
-        "y",
-        F.least(
-            F.when(F.col("cnt") >= k, F.col("dist")).otherwise(
-                F.lit(float("inf"))
-            ),
-            F.lit(mr),
-        ).alias("bound"),
-        F.expr(key_expr).alias("home_key"),
-        "home_edge",
-    )
-    # queries whose home cell holds no images never reach p1: recover them
-    # with a BROADCAST anti join against the (small) part_keys table.
-    # (With a finite max_radius a query CAN also vanish from p1 because all
-    # home-cell points are out of radius — those queries are NOT in
-    # bound_rows; recover them through the same anti join on p1 query ids.)
-    absent = (
-        q_home.join(part_keys, "key", "left_anti")
-        .select(
-            "query_id", "x", "y",
-            F.lit(mr).alias("bound"),
-            F.col("key").alias("home_key"),
-            F.lit(0.0).alias("home_edge"),  # empty home: always probe
-        )
-    )
-    if np.isfinite(mr):
-        emptied = (
-            q_home.join(part_keys, "key", "left_semi")
-            .join(
-                F.broadcast(p1_topk.select("query_id").distinct()),
-                "query_id",
-                "left_anti",
-            )
-            .select(
-                "query_id", "x", "y",
-                F.lit(mr).alias("bound"),
-                F.col("key").alias("home_key"),
-                F.lit(0.0).alias("home_edge"),
-            )
-        )
-        absent = absent.unionByName(emptied)
-    q_b = bound_rows.unionByName(absent)
-    # home-edge early exit (the dominant pruning term at scale — the
-    # O(Q x C) cell sweep otherwise): a query whose bound is STRICTLY
-    # inside its home grid cell cannot be improved by any other cell (all
-    # their points are >= edge away; keys partition space, so other cells'
-    # regions are disjoint even across refinement levels).  Strict '<'
-    # keeps exact tie semantics: an outside point at dist == bound could
-    # still displace the kth by image_id order, so bound == edge probes.
-    q_b = q_b.filter(~(F.col("bound") < F.col("home_edge"))).drop("home_edge")
-    p2_cand = _register_cache(
-        _planar_admission(
-            spark, q_b, stats, part_keys, k, exclude_home=True, spread=False
-        ),
-        cache_registry,
-    )
-    # ONE builder job (round-4, VERDICT #5): collecting the probed
-    # part_keys materializes the p1_topk cache (upstream) AND the p2_cand
-    # cache as a side effect, and replaces the probe-keys broadcast
-    # exchange with an InSet pushdown on the corpus — the round-3 floor
-    # (explicit count job + broadcast job) is gone.  Probing only the
-    # touched cells still matters: without it the whole corpus
-    # re-shuffles for a handful of boundary queries.
-    keys = [r["part_key"] for r in p2_cand.select("part_key").distinct().collect()]
-    img_probe = _probe_filter(spark, img_salted, keys)
-    p2 = (
-        p2_cand.groupby("part_key")
-        .cogroup(img_probe.groupby("part_key"))
-        .applyInArrow(_make_knn_group(k, max_radius=max_radius), schema=schema)
-    )
-
-    # re-rank ONLY queries that phase 2 probed (broadcast semi/anti joins —
-    # no Q-sized shuffle); everyone else's phase-1 ranks are already final
-    affected = F.broadcast(p2_cand.select("query_id").distinct())
-    untouched = p1_topk.join(affected, "query_id", "left_anti").select(
-        "query_id", "image_id", "dist", F.col("rank").cast("int")
-    )
-    touched_p1 = p1_topk.join(affected, "query_id", "left_semi").select(
-        "query_id", "image_id", "dist"
-    )
-    reranked = (
-        touched_p1.unionByName(p2)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "image_id", "dist", F.col("rank").cast("int"))
     )
-    # p1_topk/p2_cand stay persisted until the NEXT join call releases them
-    # (they must outlive the lazy returned plan's execution)
-    return untouched.unionByName(reranked)
 
 
 # ------------------------------------------------------------- GeoIndex
@@ -972,7 +849,7 @@ class GeoIndex:
         )
         self.level = self.stats.level
         # persist PRE-PARTITIONED on the cogroup key: the cached partitioning
-        # satisfies both phases' clustered-distribution requirement, so query
+        # satisfies the cogroup's clustered-distribution requirement, so query
         # batches shuffle only the (small) candidate side — the in-memory
         # twin of the bucket-stored layout (bucketstore.py); verified by
         # tests/test_engine_spark.py::test_geoindex_no_corpus_exchange
@@ -980,8 +857,8 @@ class GeoIndex:
             _parallelism(spark), "part_key"
         ).persist()
         self.img_salted.count()  # materialize
-        # per-index intermediate-cache registry: a new join on THIS index
-        # releases THIS index's previous intermediates (consume or
+        # per-index intermediate-cache registry (radius candidates): a new
+        # radius join on THIS index releases THIS index's previous ones (consume or
         # materialize the previous result first if you need both); other
         # indexes / sessions are never touched.
         self._caches: list[DataFrame] = []
@@ -1015,7 +892,6 @@ class GeoIndex:
             queries,
             k,
             max_radius=max_radius,
-            cache_registry=self._caches,
         )
 
     def radius_join(self, queries: DataFrame, r: float) -> DataFrame:
@@ -1296,7 +1172,7 @@ def _radius_on_index(
 ) -> DataFrame:
     """The ONE radius orchestration (planar, SO(3), SE(3)).  A radius join
     is the reference's bounded search seeded with a constant maxRadius
-    (``src/_kdtree_median.hpp:131-137``), i.e. the space's kNN phase-2
+    (``src/_kdtree_median.hpp:131-137``), i.e. the space's kNN
     admission at a constant bound: ``admit(r)`` returns its candidate rows
     keyed by part_key, ``make_kernel(r)`` the space's Arrow cogroup kernel.
     A NaN or infinite r is rejected before either is built.  Drains the

@@ -208,7 +208,7 @@ def knn(
     queries: np.ndarray,
     k: int,
     tie_key: np.ndarray | None = None,
-    max_radius: float = np.inf,
+    max_radius: float | np.ndarray = np.inf,
     chunk: int = 4096,
 ):
     """Exact bounded kNN for a batch of queries against one tree.
@@ -220,7 +220,7 @@ def knn(
     tie_key: per-ORIGINAL-point int64 sort key for deterministic tie breaks
     (engine passes the rank of image_id); defaults to original index.
     max_radius seeds the admission bound (reference Q3 radius seeding,
-    ``src/_kdtree_median.hpp:131-137``).
+    ``src/_kdtree_median.hpp:131-137``): a scalar, or one bound per query.
     """
     assert k >= 1
     dt = tree.points.dtype
@@ -275,7 +275,9 @@ def knn(
         countq = np.diff(np.append(first, len(q1)))
         kth_pos = first + np.minimum(k, np.maximum(countq, 1)) - 1
         bound = np.where(countq >= k, d1[np.minimum(kth_pos, len(d1) - 1)], np.inf)
-        bound = np.minimum(bound, max_radius)
+        bound = np.minimum(
+            bound, max_radius if np.ndim(max_radius) == 0 else max_radius[c0 : c0 + Q]
+        )
 
         # phase 2: distToRegion pruning over the remaining leaves
         scan2 = (dmin <= bound[:, None] * pad) & ~scan1

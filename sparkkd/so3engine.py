@@ -77,6 +77,7 @@ from pyspark.sql import functions as F
 
 from . import kernel
 from .engine import (
+    _check_knn_args,
     _count_bound,
     _pa_np,
     _radius_on_index,
@@ -1112,6 +1113,7 @@ class So3Index:
     def knn_join(
         self, queries: DataFrame, k: int = 8, max_radius: float = float("inf")
     ) -> DataFrame:
+        k, max_radius = _check_knn_args(k, max_radius)
         return _so3_knn_on_index(
             self.spark, self.corpus, self.layout, queries, k,
             max_radius=max_radius, cache_registry=self._caches,
@@ -1201,6 +1203,7 @@ def so3_knn_join(
     One-shot convenience over :class:`So3Index` (kept unpersisted: the
     corpus is consumed once, exactly like engine.knn_join vs GeoIndex).
     """
+    k, max_radius = _check_knn_args(k, max_radius)
     corpus, layout = _so3_corpus(spark, poses, level, max_cell_rows, n_poses_hint)
     return _so3_knn_on_index(spark, corpus, layout, queries, k, max_radius=max_radius)
 
@@ -1716,6 +1719,7 @@ class Se3Index:
         rot_weight: float = 1.0,
         trans_weight: float = 1.0,
     ) -> DataFrame:
+        k, _ = _check_knn_args(k)
         return _se3_knn_on_index(
             self.spark, self.corpus, self.layout, queries, k,
             rot_weight, trans_weight, self.b3, self.leaf_expr,
@@ -2041,6 +2045,7 @@ def se3_knn_join(
     ``rot_weight * pi/2`` diameter slack enters only the fallback for
     queries whose home partition holds fewer than k poses.
     One-shot convenience over :class:`Se3Index` (corpus unpersisted)."""
+    k, _ = _check_knn_args(k)
     corpus, layout, b3, leaf_expr = _se3_corpus(
         spark, poses, level, max_cell_rows, n_poses_hint
     )

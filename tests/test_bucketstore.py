@@ -2,6 +2,7 @@
 no-corpus-shuffle property (the whole point: at 10^12 rows the per-query
 corpus exchange is the cost the bucketed layout removes)."""
 
+import json
 import re
 
 import pytest
@@ -45,6 +46,35 @@ def test_bucketed_knn_matches_inmemory(spark, data, tmp_path_factory):
     ra = idx.radius_join(queries, 2.0).count()
     rb = engine.radius_join(spark, images, queries, r=2.0, n_images_hint=2000).count()
     assert ra == rb
+
+
+def _sorted_knn(df):
+    return df.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+
+
+def test_bucketed_legacy_stats_answer_exactly(spark, data, tmp_path_factory):
+    """A stats.json written before the leaf table existed (no leaf_*
+    fields) still loads — one leaf per key, the key's own count and bbox —
+    and kNN through that cell-level bound stays exact."""
+    images, queries = data
+    root = tmp_path_factory.mktemp("geoidx_legacy")
+    bucketstore.save_geo_index(
+        spark, images, "t_geoidx_legacy", root, n_images_hint=2000
+    )
+    stats = json.loads((root / "stats.json").read_text())
+    assert len(stats["leaf_counts"]) > len(stats["keys"])
+    for field in ("leaf_start", "leaf_counts", "leaf_bbox"):
+        del stats[field]
+    (root / "stats.json").write_text(json.dumps(stats))
+    idx = bucketstore.BucketedGeoIndex.load(spark, root)
+    assert (idx.stats.leaf_counts == idx.stats.counts).all()
+    for k in (1, 8):
+        a = _sorted_knn(idx.knn_join(queries, k=k))
+        b = _sorted_knn(
+            engine.knn_join(spark, images, queries, k=k, n_images_hint=2000)
+        )
+        assert len(a) == k * queries.count()
+        assert a.equals(b)
 
 
 def test_bucketed_load_fresh_catalog(spark, data, tmp_path_factory):

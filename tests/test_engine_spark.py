@@ -231,6 +231,7 @@ def test_geoindex_no_corpus_exchange(spark, tables):
                     "x": [0.0],
                     "y": [0.0],
                     "part_key": [int(idx.stats.keys[0]) << engine.SALT_SHIFT],
+                    "bound": [float("inf")],
                 }
             )
         )

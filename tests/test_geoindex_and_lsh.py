@@ -82,16 +82,19 @@ def test_token_counts_reasonable(spark):
     assert r["bpe_tokens"] == 5  # a b , c !
 
 
-def test_steady_batch_single_builder_job(spark, sf0001_fixtures):
-    """Round-4 (VERDICT #5): on a PREBUILT index, constructing a kNN batch
-    must cost exactly ONE driver job (the probe-keys collect that also
-    fills the phase-1/phase-2 caches) — the round-3 floor was an explicit
-    count job PLUS a broadcast-exchange job.  Results must be unchanged."""
+def test_steady_batch_runs_no_job_and_persists_nothing(spark, sf0001_fixtures):
+    """Planar kNN is one lazy pass: on a PREBUILT index, constructing a
+    kNN batch runs NO driver action (the two-phase path ran one, the
+    probe-keys collect), and materializing it leaves no persisted
+    intermediate behind (the two-phase path held its phase-1 and
+    candidate caches until the next call).  Results must be complete."""
     images = spark.read.parquet(str(sf0001_fixtures / "images.parquet"))
     queries = spark.read.parquet(str(sf0001_fixtures / "queries.parquet"))
     idx = engine.GeoIndex(spark, images, n_images_hint=2000)
+    jsc = spark.sparkContext._jsc
     try:
-        idx.knn_join(queries, k=8).count()  # warm (registers/releases caches)
+        idx.knn_join(queries, k=8).count()  # warm
+        n_persisted = jsc.getPersistentRDDs().size()
 
         def n_execs():
             # SQL executions = driver-side actions (AQE splits one action
@@ -102,9 +105,10 @@ def test_steady_batch_single_builder_job(spark, sf0001_fixtures):
             )
 
         before = n_execs()
-        df = idx.knn_join(queries, k=8)  # builder only — NO action yet
+        df = idx.knn_join(queries, k=8)  # builder only — NO action
         builder_actions = n_execs() - before
-        assert builder_actions == 1, builder_actions
+        assert builder_actions == 0, builder_actions
         assert df.count() == 8 * queries.count()
+        assert jsc.getPersistentRDDs().size() == n_persisted
     finally:
         idx.unpersist()

@@ -147,13 +147,11 @@ def _q_snapshot_append_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubling rule, then answer kNN from the compacted snapshot.  The oracle
     runs the same query over the full corpus — append/compact/query must be
     indistinguishable from a static build."""
-    import tempfile
-
-    from sparkkd.snapshots import SnapshotStore
+    from sparkkd.snapshots import SnapshotStore, temp_store_dir
 
     images = _images(spark, sf_dir)
     half = f"img{_n_images(sf_dir) // 2:08d}"
-    store = SnapshotStore(tempfile.mkdtemp(prefix="sparkkd-snap-"))
+    store = SnapshotStore(temp_store_dir("sparkkd-snap-"))
     store.write(images.filter(F.col("image_id") < half))
     store.append(images.filter(F.col("image_id") >= half))
     if store.needs_compaction():
@@ -281,15 +279,13 @@ def _q_snapshot_append_so3(spark: SparkSession, sf_dir: str) -> DataFrame:
     So3Index over the compacted snapshot and answer angular kNN.  Oracle =
     full-corpus angular kNN — append/compact/build must be
     indistinguishable from a static build."""
-    import tempfile
-
     from sparkkd import so3engine
-    from sparkkd.snapshots import SnapshotStore
+    from sparkkd.snapshots import SnapshotStore, temp_store_dir
 
     poses = _poses(spark, sf_dir)
     n = synth.POSE_SIZES[_tag(sf_dir)][0]
     half = f"pose{n // 2:08d}"
-    store = SnapshotStore(tempfile.mkdtemp(prefix="sparkkd-so3snap-"))
+    store = SnapshotStore(temp_store_dir("sparkkd-so3snap-"))
     store.write(poses.filter(F.col("pose_id") < half))
     store.append(poses.filter(F.col("pose_id") >= half))
     if store.needs_compaction():

@@ -119,9 +119,7 @@ def worker(n_exec: int) -> None:
     from pyspark.sql import SparkSession
 
     from sparkkd import so3engine, synth
-    from sparkkd.envtune import disable_thp
 
-    disable_thp()
     root = synth.fixtures_root() / TAG
     spark = SparkSession.builder.appName(f"sparkkd-lc-{n_exec}x").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

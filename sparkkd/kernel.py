@@ -379,6 +379,7 @@ def knn_compound(
     rot_weight: float,
     trans_weight: float,
     tie_key: np.ndarray | None = None,
+    max_radius: float | np.ndarray = np.inf,
     bound_pool: int = 32,
     chunk: int = 4096,
 ):
@@ -402,7 +403,10 @@ def knn_compound(
     SIMD arccos is used for SELECTION only; every candidate within a
     relative 1e-12 margin of the kth selection distance is returned so the
     caller can rescale (ldot, et) with libm acos and let the final window
-    cut oracle-exactly.  Returns (qi, idx_original, ldot, et)."""
+    cut oracle-exactly.  max_radius caps the phase-A bound (reference
+    maxRadius seeding, ``src/_kdtree_median.hpp:131-137``): a scalar, or
+    one bound per query; only candidates whose selection distance is
+    <= it are returned.  Returns (qi, idx_original, ldot, et)."""
     rw, tw = float(rot_weight), float(trans_weight)
     qt = np.ascontiguousarray(q_trans, dtype=np.float64)
     qr = np.ascontiguousarray(q_rot, dtype=np.float64)
@@ -459,7 +463,10 @@ def knn_compound(
         bound = np.where(countq >= k, d1[np.minimum(kth_pos, len(d1) - 1)], np.inf)
         # pad: the SIMD-arccos bound may sit 1 ulp below the true kth —
         # widen so no borderline leaf/pose is pruned before libm rescoring
-        bound = bound * (1.0 + 1e-12) + 1e-15
+        bound = np.minimum(
+            bound * (1.0 + 1e-12) + 1e-15,
+            max_radius if np.ndim(max_radius) == 0 else max_radius[c0 : c0 + Q],
+        )
 
         # phase B: remaining leaves within the compound lower bound
         scan2 = (tw * dmin <= bound[:, None]) & ~scan1

@@ -27,14 +27,26 @@ swapping.
 
 from __future__ import annotations
 
+import atexit
 import json
 import shutil
+import tempfile
 import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from . import engine
+
+
+def temp_store_dir(prefix: str) -> str:
+    """A fresh directory under the system temp dir for a throwaway
+    SnapshotStore, removed at interpreter exit rather than when the caller
+    returns: a lazy frame read from the store stays valid while the
+    process lives, and the store no longer outlives it."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 class SnapshotStore:

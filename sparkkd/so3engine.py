@@ -4,16 +4,17 @@ The reference's raison d'être is nearest-neighbor search in rotation /
 rigid-motion spaces for motion planning (``/root/reference/README.md:6``;
 active test matrix ``test/kdtree_test.cpp:385-417`` runs StaticBuildAndQuery
 and dynamic Add/KNN for SO3, SO3Alt, SO3RL, SE3 and weighted SE3).  This
-module is the distributed twin, following the exact plan shape of the geo
-engine (``sparkkd.engine``), including its TWO-PHASE search and its
-SKEW-ADAPTIVE layout:
+module is the distributed twin of the geo engine (``sparkkd.engine``),
+with its SKEW-ADAPTIVE layout.  A kNN query's search is seeded with a
+bound >= its kth distance (reference ``src/_kdtree_median.hpp:131-137``):
 
-* **phase 1 (home probe)**: every query probes its own partition first —
-  the distributed analogue of the reference's first descent — yielding a
-  TRUE kth-distance bound far tighter than any statistics-only bound;
-* **phase 2**: remaining partitions are admitted against that bound
-  through leaf-cell statistics; queries whose bound is strictly inside
-  their home grid cell (home-edge early exit) skip phase 2 entirely.
+* **SO(3), two phases**: every query probes its own partition first,
+  whose true top-k gives the bound; phase 2 admits the other partitions
+  against it through leaf-cell statistics, except for queries whose bound
+  is strictly inside their home grid cell (home-edge early exit);
+* **SE(3), one pass**: the bound is the query's distance to its
+  kth-nearest pose in a fixed corpus sample (below); admission, ONE
+  cogroup seeded with the bound and ONE merge window follow.
 
 ADAPTIVE LAYOUT (round-3, after sf2 profiling): pruning statistics live at
 LEAF grid cells — a base fine level L everywhere, except inside HOT base
@@ -45,13 +46,14 @@ almost surely, so it contributes no phase-1 kernel work either).
 
 SE(3) — compound space (``src/_spaces.hpp:369-421``): distance is
 ``rot_weight * angular + trans_weight * L2(translation)``.  The partition
-key is a grid over translation; a cell's compound lower bound is
-``trans_weight * dist-to-bbox`` (rotation contributes >= 0).  The phase-1
-home probe returns true compound kth distances, so the slack
-``rot_weight * pi/2`` term that inflated the round-2 statistics-only bound
-never enters the hot path.  Per-partition kernels run
-``kernel.knn_compound`` — branch-and-bound over a translation k-d tree —
-so big partitions stay leaf-log, never dense.
+key is a grid over translation; a partition's compound lower bound adds
+``trans_weight * dist-to-bbox`` and a rotation-box term.  Rotations span
+every leaf, so leaf statistics give only a loose kNN upper bound (up to
+``rot_weight * pi/2`` of rotation slack).  The index instead keeps a fixed
+corpus SAMPLE, every pose with ``pmod(xxhash64(pose_id), m) = 0`` for
+m = max(16, ceil(n / 65,536)): any k corpus poses bound the kth distance.
+Per-partition kernels run ``kernel.knn_compound`` — branch-and-bound over
+a translation k-d tree — so big partitions stay leaf-log, never dense.
 
 IEEE parity with the DuckDB oracle: the final ranking distance is computed
 with term-for-term the same expression the oracle uses —
@@ -129,8 +131,8 @@ CELL_MASK = (np.int64(1) << LVL_SHIFT) - 1
 GROUP_SHIFT = 1  # partitions pack under the base level's ancestor this far up
 REFINE_STEP = 3  # hot base cells refine this many levels deeper
 MAX_LEAF_LEVEL = 10
-# kNN-phase-2 heavy-group split target, in (candidate rows x partition
-# poses) work units, for batches past _KNN_SPLIT_GATE.  Higher
+# SO(3) kNN-phase-2 heavy-group split target, in (candidate rows x
+# partition poses) work units, for batches past _KNN_SPLIT_GATE.  Higher
 # than the radius default (4M): a radius group emits output proportional
 # to its work, so Arrow materialization already dominates small groups,
 # while a kNN group emits only ~k rows per candidate — per-unit kernel
@@ -142,7 +144,7 @@ MAX_LEAF_LEVEL = 10
 # so the single heaviest task WAS the stage wall; at 1e8 the heaviest
 # group splits ~11-way (~8 s worst task).
 _KNN_SPLIT_TARGET = 100_000_000
-# A kNN batch splits only when its heaviest group's work exceeds this
+# An SO(3) kNN batch splits only when its heaviest group's work exceeds this
 # multiple of the balanced per-core share total_work / defaultParallelism
 # (engine._plan_group_splits): a split re-exchanges the whole probed
 # corpus (not just the split groups') and rebuilds each split group's
@@ -153,7 +155,8 @@ _KNN_SPLIT_TARGET = 100_000_000
 # 4.57 s; the sf0.1 se3/so3 kNN rows 1.27 and 0.74, min-of-3 7.39 ->
 # 6.58 s and 6.61 -> 5.55 s.  Where splitting won, the heaviest group
 # dwarfed a share: sf2 kNN tasks ranged 5 s -> 90 s, and the sf0.1
-# se3/so3 batches at parallelism 32 sit at ~10x/~6x.
+# se3/so3 batches at parallelism 32 sit at ~10x/~6x.  (SE(3) kNN is one
+# pass and runs no planner: see _se3_knn_on_index.)
 _KNN_SPLIT_GATE = 2.0
 
 QCOLS = ("qw", "qx", "qy", "qz")
@@ -232,22 +235,6 @@ def grid_cell_sql(
     for p in parts[1:]:
         expr = f"(({expr}) * CAST({n} AS BIGINT) + {p})"
     return expr
-
-
-def so3_cell_sql(level: int) -> str:
-    """4-D grid id over the CANONICALIZED coefficients in [-1, 1]^4."""
-    s = canon_sign_sql()
-    return grid_cell_sql(
-        [f"({s} * {c})" for c in QCOLS], [(-1.0, 2.0)] * 4, level
-    )
-
-
-def trans_cell_sql(bounds: list[tuple[float, float]], level: int) -> str:
-    """3-D grid id over translation with DATA-DERIVED bounds (literals, so
-    the expression is identical across the stats and salted passes)."""
-    return grid_cell_sql(
-        list(TCOLS), [(lo, max(hi - lo, 1e-9)) for lo, hi in bounds], level
-    )
 
 
 # ------------------------------------------------------- layout (adaptive)
@@ -925,7 +912,6 @@ def _se3_partition_candidates(
     layout_arrays,
     tw: float,
     rw: float,
-    home_pid: np.ndarray | None = None,
 ):
     """Compound-space twin of :func:`_partition_candidates`: admit a
     (query, partition) pair when the SUM of per-sub-space lower bounds
@@ -953,9 +939,6 @@ def _se3_partition_candidates(
         dmin_p = tw * _bbox_min_dist(T, p_lo, p_hi)
         ADMIT_STATS["dense_cells"] += dmin_p.size
         qi_a, pi_a = np.nonzero(dmin_p <= bound[:, None])
-        if home_pid is not None and len(qi_a) > 0:
-            keep = pi_a != home_pid[qi_a]
-            qi_a, pi_a = qi_a[keep], pi_a[keep]
         if use_rot and len(qi_a) > 0:
             extra = rw * _rot_lb_pairs(R[qi_a], p_rlo[pi_a], p_rhi[pi_a])
             keep = dmin_p[qi_a, pi_a] + extra <= bound[qi_a]
@@ -974,8 +957,6 @@ def _se3_partition_candidates(
         ADMIT_STATS["pair_tests"] += len(qq)
         d = tw * _bbox_min_dist_pairs(T[qq], p_lo[pi_a], p_hi[pi_a])
         ok = d <= bound[qq]
-        if home_pid is not None:
-            ok &= pi_a != home_pid[qq]
         if use_rot:
             idx = np.nonzero(ok)[0]
             if len(idx) > 0:
@@ -1079,13 +1060,12 @@ def _pose_lineage(index) -> DataFrame:
 
 
 def _persist_by_part_key(spark: SparkSession, corpus: DataFrame) -> DataFrame:
-    """Persist a salted corpus PRE-PARTITIONED on part_key (materialized),
-    so repeat query batches shuffle only the candidate side."""
-    out = corpus.repartition(
+    """Persist a salted corpus PRE-PARTITIONED on part_key, so repeat query
+    batches shuffle only the candidate side.  The caller's first action
+    over it materializes it."""
+    return corpus.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "part_key"
     ).persist()
-    out.count()  # materialize
-    return out
 
 
 class So3Index:
@@ -1108,6 +1088,7 @@ class So3Index:
         )
         self.level = self.layout.level
         self.corpus = _persist_by_part_key(spark, corpus)
+        self.corpus.count()  # materialize
         self._caches: list[DataFrame] = []
 
     def knn_join(
@@ -1694,7 +1675,8 @@ class Se3Index:
     """Build-once / query-many SE(3) index: refinement-salted corpus
     persisted PRE-PARTITIONED on the translation-grid part_key (same
     layout as GeoIndex/So3Index) — repeat batches shuffle only the
-    candidate side."""
+    candidate side — plus a fixed corpus sample (_se3_sample) that bounds
+    every kNN query's kth distance."""
 
     def __init__(
         self,
@@ -1705,11 +1687,13 @@ class Se3Index:
         n_poses_hint: int | None = None,
     ):
         self.spark = spark
-        corpus, self.layout, self.b3, self.leaf_expr = _se3_corpus(
+        corpus, self.layout = _se3_corpus(
             spark, poses, level, max_cell_rows, n_poses_hint
         )
         self.level = self.layout.level
         self.corpus = _persist_by_part_key(spark, corpus)
+        # collecting the sample is the action that materializes the corpus
+        self.sample = _se3_sample(self.corpus, self.layout.total)
         self._caches: list[DataFrame] = []
 
     def knn_join(
@@ -1721,9 +1705,8 @@ class Se3Index:
     ) -> DataFrame:
         k, _ = _check_knn_args(k)
         return _se3_knn_on_index(
-            self.spark, self.corpus, self.layout, queries, k,
-            rot_weight, trans_weight, self.b3, self.leaf_expr,
-            cache_registry=self._caches,
+            self.spark, self.corpus, self.layout, self.sample, queries, k,
+            rot_weight, trans_weight,
         )
 
     lineage = _pose_lineage
@@ -1749,7 +1732,7 @@ def _se3_corpus(spark, poses, level, max_cell_rows, n_poses_hint):
     """The SE(3) corpus builder (Se3Index and the one-shot joins): data-
     derived translation bounds, the adaptive translation-grid layout
     (level None: derived from the row count), salt.  Returns (corpus
-    (pose_id, qw..qz, tx..tz, part_key), layout, b3, leaf_expr)."""
+    (pose_id, qw..qz, tx..tz, part_key), layout)."""
     if level is None:
         n = n_poses_hint if n_poses_hint is not None else poses.count()
         level = level_for_poses(n, dims=3)
@@ -1759,7 +1742,22 @@ def _se3_corpus(spark, poses, level, max_cell_rows, n_poses_hint):
     corpus = _salted(poses, spark, layout, leaf_expr, "pose_id").select(
         "pose_id", *QCOLS, *TCOLS, "part_key"
     )
-    return corpus, layout, b3, leaf_expr
+    return corpus, layout
+
+
+def _se3_sample(corpus: DataFrame, n: int) -> np.ndarray:
+    """The kNN bound sample (S, 7: rotation, translation), in one job:
+    poses with pmod(xxhash64(pose_id), m) = 0, m = max(16, ceil(n /
+    65,536)).  On 200k poses x 5,000 queries, 1/8, 1/16 and 1/32 took
+    0.74, 0.55 and 0.39 s to bound and sent 46k, 60k and 81k rows into
+    the merge window (single thread)."""
+    m = max(16, -(-n // 65_536))
+    t = (
+        corpus.filter(F.pmod(F.xxhash64("pose_id"), F.lit(m)) == 0)
+        .select(*QCOLS, *TCOLS)
+        .toArrow()
+    )
+    return np.column_stack([t.column(c).to_numpy() for c in (*QCOLS, *TCOLS)])
 
 
 def _se3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
@@ -1772,6 +1770,22 @@ def _se3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
     )
 
 
+def _sample_kth_bound(sample_tree, sample_rot, T, R, k, rw, tw) -> np.ndarray:
+    """Per-query compound distance to the kth-nearest sample pose (inf if
+    the sample holds fewer than k), padded like knn_compound's phase A
+    for its SIMD arccos."""
+    out = np.full(len(T), np.inf)
+    qi, _, ldot, et = kernel.knn_compound(sample_tree, T, R, sample_rot, k, rw, tw)
+    if len(qi) == 0:
+        return out
+    d = rw * np.arccos(ldot) + tw * et  # knn_compound's selection distance
+    first = np.searchsorted(qi, np.arange(len(T)))
+    cnt = np.diff(np.append(first, len(qi)))
+    ok = np.nonzero(cnt >= k)[0]
+    out[ok] = d[first[ok] + k - 1] * (1.0 + 1e-12) + 1e-15
+    return out
+
+
 def _se3_admission(
     spark: SparkSession,
     layout: PoseLayout,
@@ -1779,17 +1793,16 @@ def _se3_admission(
     rw: float,
     tw: float,
     k: int | None = None,
-    b3: list[tuple[float, float]] | None = None,
+    sample: np.ndarray | None = None,
 ) -> DataFrame:
-    """The SE(3) admission generator, shared by kNN phase 2 and radius:
-    frame (query_id, qw..qz, tx..tz, bound [, hk, home_pid]) -> candidate
-    rows (query_id, qw..qz, tx..tz, part_key) per admitted (query,
-    partition salt), by the rotation-aware compound lower bound
-    (_se3_partition_candidates).  kNN phase 2 passes its translation grid
-    ``b3``: each query's home partition (home_pid, -1 when unoccupied) was
-    fully probed in phase 1 and is skipped, and the home-edge exit
-    applies.  Rows without a finite bound fall back to a count-bound over
-    k (radius bounds are always finite)."""
+    """The SE(3) admission generator, shared by kNN and radius: frame
+    (query_id, qw..qz, tx..tz, bound) -> candidate rows (query_id, qw..qz,
+    tx..tz, bound, part_key) per admitted (query, partition salt), by the
+    rotation-aware compound lower bound (_se3_partition_candidates).
+    Radius passes the padded r.  kNN passes k and the index's corpus
+    ``sample``: each query is bounded by its kth-nearest sample pose
+    (_sample_kth_bound), or, while the sample holds fewer than k poses,
+    by a count-bound over the admission groups."""
     rot_diam = rw * (np.pi / 2.0)
     bc = _cached(
         layout, spark, "se3knn_bc",
@@ -1806,10 +1819,14 @@ def _se3_admission(
             )
         ),
     )
-    home = b3 is not None
-    if home:
-        vmin_a = np.array([lo for lo, _ in b3])
-        vspan_a = np.array([span for _, span in b3])
+    if k is not None:
+        # the sample tree is built once per (layout, session), driver-side
+        sbc = _cached(
+            layout, spark, "se3_sample_bc",
+            lambda: spark.sparkContext.broadcast(
+                (kernel.build(sample[:, 4:]), sample[:, :4])
+            ),
+        )
 
     def gen(batches):
         (lo, hi, slo, shi,
@@ -1818,6 +1835,8 @@ def _se3_admission(
         G = len(g_counts)
         la = (lo, hi, slo, shi, p_lo, p_hi, p_slo, p_shi, p_start,
               g_lo, g_hi, g_slo, g_shi, g_start)
+        if k is not None:
+            s_tree, s_rot = sbc.value
         for rb in batches:
             if rb.num_rows == 0 or G == 0:
                 continue
@@ -1827,10 +1846,6 @@ def _se3_admission(
             T = np.column_stack([_pa_np(tbl, c) for c in TCOLS])
             QR = Qraw * canon_sign_np(Qraw)[:, None]
             given = _pa_np(tbl, "bound")
-            if home:
-                home_pid = tbl.column("home_pid").to_numpy(zero_copy_only=False)
-                hk = tbl.column("hk").to_numpy(zero_copy_only=False)
-                n_leaf = (np.int64(1) << (hk >> LVL_SHIFT)).astype(np.int64)
             # chunk on the GROUP matrix (partition + leaf stages are
             # pair-expanded — never dense)
             chunk = max(256, 8_000_000 // max(G, 1))
@@ -1838,39 +1853,33 @@ def _se3_admission(
                 sl = slice(c0, min(c0 + chunk, rb.num_rows))
                 P3 = T[sl]
                 b = given[sl].copy()
+                if k is not None:
+                    b = np.minimum(
+                        b, _sample_kth_bound(s_tree, s_rot, P3, QR[sl], k, rw, tw)
+                    )
                 nb = np.nonzero(~np.isfinite(b))[0]
                 if len(nb) > 0:
-                    # fallback count-bound at GROUP granularity (home had
-                    # < k poses): compound upper bound — union-box dmax
-                    # covers every member pose, rotation term from group
-                    # rotation bboxes when carried, else angular diameter
+                    # fallback count-bound at GROUP granularity (the
+                    # sample holds < k poses): compound upper bound —
+                    # union-box dmax covers every member pose, rotation
+                    # term from group rotation bboxes when carried, else
+                    # angular diameter
                     dmax = _bbox_min_max_dist(P3[nb], g_lo, g_hi)[1]
                     if rw > 0.0 and g_slo is not None:
                         ub = tw * dmax + rw * _rot_ub(QR[sl][nb], g_slo, g_shi)
                     else:
                         ub = tw * dmax + rot_diam
                     b[nb] = _count_bound(ub, g_counts, k)
-                if home:
-                    # home-edge early exit in COMPOUND units against the
-                    # query's OWN leaf cell boundary (level-aware width)
-                    edge = tw * _grid_home_edge(P3, vmin_a, vspan_a, n_leaf[sl])
-                    rows = np.nonzero(~(b < edge))[0]
-                else:
-                    rows = np.arange(len(P3))
-                if len(rows) == 0:
-                    continue
-                qi, pid = _se3_partition_candidates(
-                    P3[rows], QR[sl][rows], b[rows], la, tw, rw,
-                    home_pid=home_pid[sl][rows] if home else None,
-                )
+                qi, pid = _se3_partition_candidates(P3, QR[sl], b, la, tw, rw)
                 if len(qi) == 0:
                     continue
-                g = np.asarray(rows[qi]) + c0
+                g = qi + c0
                 yield pa.RecordBatch.from_pydict(
                     {
                         "query_id": pc.take(qid_arr, pa.array(g)),
                         **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
                         **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
+                        "bound": pa.array(b[qi]),
                         "pid": pa.array(pid),
                     }
                 )
@@ -1879,7 +1888,7 @@ def _se3_admission(
         frame.mapInArrow(
             gen,
             schema="query_id string, "
-            + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
+            + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS, "bound"))
             + ", pid long",
         )
         .join(_pid_salts(spark, layout), "pid")
@@ -1910,9 +1919,7 @@ def se3_radius_join(
     with trans_weight == 0 everything is admitted — correct, dense), and
     the EXACT libm compound distance makes the final cut.  One-shot
     convenience over :class:`Se3Index.radius_join`."""
-    corpus, layout, _, _ = _se3_corpus(
-        spark, poses, level, max_cell_rows, n_poses_hint
-    )
+    corpus, layout = _se3_corpus(spark, poses, level, max_cell_rows, n_poses_hint)
     return _se3_radius(
         spark, corpus, layout, queries, r, rot_weight, trans_weight
     )
@@ -2039,65 +2046,50 @@ def se3_knn_join(
     (query_id, pose_id, dist, rank).
 
     Partition key: adaptive grid over translation (data-derived bounds,
-    hot cells refined, leaves bin-packed).  Cell pruning is exact: lower
-    bound = trans_weight * dist-to-bbox (rotation contributes >= 0); the
-    phase-1 home probe supplies TRUE compound kth distances, so the
-    ``rot_weight * pi/2`` diameter slack enters only the fallback for
-    queries whose home partition holds fewer than k poses.
-    One-shot convenience over :class:`Se3Index` (corpus unpersisted)."""
+    hot cells refined, leaves bin-packed).  Partition pruning is exact:
+    each query's bound is its compound distance to its kth-nearest pose
+    in a fixed corpus sample (_se3_sample, collected here with one job),
+    and a partition is admitted when its compound lower bound is within
+    it.  One-shot convenience over :class:`Se3Index` (corpus
+    unpersisted)."""
     k, _ = _check_knn_args(k)
-    corpus, layout, b3, leaf_expr = _se3_corpus(
-        spark, poses, level, max_cell_rows, n_poses_hint
-    )
+    corpus, layout = _se3_corpus(spark, poses, level, max_cell_rows, n_poses_hint)
     return _se3_knn_on_index(
-        spark, corpus, layout, queries, k, rot_weight, trans_weight, b3, leaf_expr
+        spark, corpus, layout, _se3_sample(corpus, layout.total), queries, k,
+        rot_weight, trans_weight,
     )
 
 
-def _make_se3_group(k: int, rw: float, tw: float, carry: bool):
+def _make_se3_group(k: int, rw: float, tw: float):
     """Cogroup kernel: branch-and-bound compound search via
     kernel.knn_compound — a k-d tree over the partition's TRANSLATIONS
     prunes with the trans_weight * distToLeaf lower bound, so per-query
-    work is leaf-log + admitted scans instead of a dense Q x P matrix.
-    Selection runs on SIMD arccos padded by a relative 1e-12 margin;
-    final values are libm-rescored from the returned (ldot, et), so the
-    downstream window (ordered by the EXACT dist) decides oracle-exactly.
-    carry=True passes the query pose through (phase 1 feeds bound rows)."""
-
-    empty = {
-        "query_id": pa.array([], pa.string()),
-        "pose_id": pa.array([], pa.string()),
-        "dist": pa.array([], pa.float64()),
-    }
-    if carry:
-        empty.update({c: pa.array([], pa.float64()) for c in (*QCOLS, *TCOLS)})
-    empty_tbl = pa.table(empty)
+    work is leaf-log + admitted scans instead of a dense Q x P matrix —
+    each query seeded with its admission bound.  Selection runs on SIMD
+    arccos padded by a relative 1e-12 margin; final values are
+    libm-rescored from the returned (ldot, et), so the downstream window
+    (ordered by the EXACT dist) decides oracle-exactly."""
 
     def se3_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
-            return empty_tbl
+            return _PAIR_DIST_EMPTY
         QR = np.column_stack([_pa_np(left, c) for c in QCOLS])
         QT = np.column_stack([_pa_np(left, c) for c in TCOLS])
         PR = np.column_stack([_pa_np(right, c) for c in QCOLS])
         PT = np.column_stack([_pa_np(right, c) for c in TCOLS])
         ids = right.column("pose_id")
-        tie = _tie_rank(ids)
-        tree = kernel.build(PT)
         qi, idx, ldot, et = kernel.knn_compound(
-            tree, QT, QR, PR, k, rw, tw, tie_key=tie
+            kernel.build(PT), QT, QR, PR, k, rw, tw,
+            tie_key=_tie_rank(ids), max_radius=_pa_np(left, "bound"),
         )
-        out = {
-            "query_id": pc.take(left.column("query_id"), pa.array(qi)),
-            "pose_id": pc.take(ids, pa.array(idx)),
-            # FINAL values via libm acos — oracle-bit-exact
-            "dist": pa.array(rw * acos_exact(ldot) + tw * et),
-        }
-        if carry:
-            for j, c in enumerate(QCOLS):
-                out[c] = pa.array(QR[qi, j])
-            for j, c in enumerate(TCOLS):
-                out[c] = pa.array(QT[qi, j])
-        return pa.table(out)
+        return pa.table(
+            {
+                "query_id": pc.take(left.column("query_id"), pa.array(qi)),
+                "pose_id": pc.take(ids, pa.array(idx)),
+                # FINAL values via libm acos — oracle-bit-exact
+                "dist": pa.array(rw * acos_exact(ldot) + tw * et),
+            }
+        )
 
     return se3_group
 
@@ -2106,107 +2098,31 @@ def _se3_knn_on_index(
     spark: SparkSession,
     corpus: DataFrame,
     layout: PoseLayout,
+    sample: np.ndarray,
     queries: DataFrame,
     k: int,
     rot_weight: float,
     trans_weight: float,
-    b3: list[tuple[float, float]],
-    leaf_expr: str,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)
+    """SE(3) kNN in one pass: admission (each query bounded by its
+    kth-nearest corpus-sample pose) -> ONE cogroup with the corpus, each
+    query's kernel seeded with its bound -> ONE (dist, pose_id) window
+    merge.  Exact: the bound is >= the true kth distance, every partition
+    holding a pose within it is admitted, and every comparison is <=.
+    Runs no Spark job at call time and persists nothing.  No heavy group
+    is split: the split planner's count-collect is an eager job, and in
+    the pose_knn benchmark that job cost more than the split saved."""
     rw, tw = float(rot_weight), float(trans_weight)
-    leaf_salts = _leaf_salts(spark, layout)
-    leaf_pid = _leaf_pid(spark, layout)
-
-    q = _se3_queries(spark, queries)
-
-    # ---- phase 1: home-partition probe (all salts) — TRUE compound bound
-    q_home = q.withColumn("key", F.expr(leaf_expr))
-    p1_cand = q_home.join(leaf_salts, "key").select(
-        "query_id", *QCOLS, *TCOLS, "part_key"
-    )
-    carry_schema = (
-        "query_id string, pose_id string, dist double, "
-        + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS))
-    )
-    p1 = (
-        p1_cand.groupby("part_key")
-        .cogroup(corpus.groupby("part_key"))
-        .applyInArrow(_make_se3_group(k, rw, tw, carry=True), schema=carry_schema)
-    )
+    q = _se3_queries(spark, queries).withColumn("bound", F.lit(float("inf")))
+    cand = _se3_admission(spark, layout, q, rw, tw, k, sample=sample)
     w = Window.partitionBy("query_id").orderBy("dist", "pose_id")
-    wq = Window.partitionBy("query_id")
-    p1 = _register_cache(p1, cache_registry)
-    # cache the windowed top-k too (see _so3_knn_on_index): bound_rows and
-    # the untouched/touched branches all read it
-    p1_topk = _register_cache(
-        p1.withColumn("rank", F.row_number().over(w))
-        .withColumn("cnt", F.count("*").over(wq))
-        .filter(F.col("rank") <= k),
-        cache_registry,
-    )
-    # the window is ordered by dist, so the rank == least(k, cnt) row's
-    # OWN dist IS max(dist) over the top-k — the extra max()-window pass
-    # was redundant (round-6)
-    bound_rows = (
-        p1_topk.filter(F.col("rank") == F.least(F.lit(k), F.col("cnt")))
-        .select(
-            "query_id", *QCOLS, *TCOLS,
-            F.when(F.col("cnt") >= k, F.col("dist"))
-            .otherwise(F.lit(float("inf")))
-            .alias("bound"),
-        )
-    )
-    absent = (
-        q_home.join(leaf_salts, "key", "left_anti")
-        .select("query_id", *QCOLS, *TCOLS, F.lit(float("inf")).alias("bound"))
-    )
-    q_b = (
-        bound_rows.unionByName(absent)
-        .withColumn("hk", F.expr(leaf_expr))
-        .join(
-            leaf_pid.withColumnRenamed("key", "hk").withColumnRenamed("pid", "home_pid"),
-            "hk", "left",
-        )
-        .fillna({"home_pid": -1})
-    )
-
-    # ---- phase 2: partition admission within the compound bound ---------
-    p2_cand = _register_cache(
-        _se3_admission(spark, layout, q_b, rw, tw, k, b3=b3), cache_registry
-    )
-    # ONE Spark job: the split planner's count-collect fills both
-    # caches + InSet probe pushdown AND splits a critical-path cogroup
-    # query-side (see _so3_knn_on_index — the sf2 straggler measurement)
-    cand_g, corp_probe, gcols = _split_heavy_cogroups(
-        spark, p2_cand, corpus, _pose_group_rows(layout),
-        split_target=_KNN_SPLIT_TARGET, gate=_KNN_SPLIT_GATE,
-    )
-    p2 = (
-        cand_g.groupby(*gcols)
-        .cogroup(corp_probe.groupby(*gcols))
+    return (
+        cand.groupby("part_key")
+        .cogroup(corpus.groupby("part_key"))
         .applyInArrow(
-            _make_se3_group(k, rw, tw, carry=False),
+            _make_se3_group(k, rw, tw),
             schema="query_id string, pose_id string, dist double",
         )
-    )
-
-    # no dedupe needed: a pose lives in exactly one partition — home poses
-    # only in phase 1, others only in phase 2 (single probe point)
-    affected = F.broadcast(p2_cand.select("query_id").distinct())
-    untouched = (
-        p1_topk.join(affected, "query_id", "left_anti")
-        .select("query_id", "pose_id", "dist", F.col("rank").cast("int"))
-    )
-    reranked = (
-        p1_topk.join(affected, "query_id", "left_semi")
-        .select("query_id", "pose_id", "dist")
-        .unionByName(p2)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "pose_id", "dist", F.col("rank").cast("int"))
     )
-    return untouched.unionByName(reranked)

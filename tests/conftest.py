@@ -5,10 +5,6 @@ import pytest
 def spark():
     from pyspark.sql import SparkSession
 
-    from sparkkd.envtune import disable_thp
-
-    disable_thp()
-
     s = (
         SparkSession.builder.master("local[8]")
         .appName("sparkkd-tests")

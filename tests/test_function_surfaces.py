@@ -12,6 +12,22 @@ from sparkkd import datapipe, functions as fx, so3engine as S
 pytestmark = pytest.mark.spark
 
 
+def so3_cell_sql(level: int) -> str:
+    """Oracle: 4-D grid id over the CANONICALIZED coefficients in
+    [-1, 1]^4."""
+    s = S.canon_sign_sql()
+    return S.grid_cell_sql(
+        [f"({s} * {c})" for c in S.QCOLS], [(-1.0, 2.0)] * 4, level
+    )
+
+
+def trans_cell_sql(bounds: list[tuple[float, float]], level: int) -> str:
+    """Oracle: 3-D grid id over translation with data-derived bounds."""
+    return S.grid_cell_sql(
+        list(S.TCOLS), [(lo, max(hi - lo, 1e-9)) for lo, hi in bounds], level
+    )
+
+
 def test_md5_hash60_spark_duckdb_parity(spark):
     """The shared 60-bit md5 hash family must produce IDENTICAL values in
     both engines — the foundation of every minhash/simhash/LSH oracle."""
@@ -57,7 +73,7 @@ def test_so3_cell_sql_matches_base_leaf_keys(spark):
     )
     assert lay.refine_level is None  # big budget: no refinement
     got = (
-        canon.withColumn("cell", F.expr(S.so3_cell_sql(level)))
+        canon.withColumn("cell", F.expr(so3_cell_sql(level)))
         .groupBy("cell").count().toPandas().sort_values("cell")
     )
     want_cells = lay.leaf_keys & S.CELL_MASK
@@ -76,7 +92,7 @@ def test_trans_cell_sql_grid_assignment(spark):
     bounds = [(-5.0, 5.0)] * 3
     lvl = 2
     got = df.withColumn(
-        "cell", F.expr(S.trans_cell_sql(bounds, lvl))
+        "cell", F.expr(trans_cell_sql(bounds, lvl))
     ).toPandas()["cell"].to_numpy(np.int64)
     n = 1 << lvl
     idx = np.clip(np.floor((t + 5.0) / 10.0 * n), 0, n - 1).astype(np.int64)

@@ -158,6 +158,40 @@ def test_knn_compound_vs_brute_force():
             assert np.allclose([d for d, _ in mine], [d for d, _ in want], atol=1e-9)
 
 
+def test_knn_compound_max_radius_cuts_unseeded_output():
+    """Seeding knn_compound with max_radius=b returns exactly its unseeded
+    output cut to selection distance <= b, for b = inf, 0, a bound between
+    each query's (k-1)th and kth distances, and one above the kth — as a
+    scalar and as one bound per query.  Half the corpus sits on 40 exact
+    duplicate poses so ties cross the cut."""
+    rng = np.random.default_rng(12)
+    n, nq, k, rw, tw = 2000, 120, 6, 2.0, 0.5
+    PT = rng.uniform(-5, 5, size=(n, 3))
+    PR = rng.normal(size=(n, 4)); PR /= np.linalg.norm(PR, axis=1, keepdims=True)
+    dup = rng.integers(0, 40, n // 2)
+    PT[: n // 2], PR[: n // 2] = PT[n // 2 :][dup], PR[n // 2 :][dup]
+    QT = rng.uniform(-5, 5, size=(nq, 3))
+    QR = rng.normal(size=(nq, 4)); QR /= np.linalg.norm(QR, axis=1, keepdims=True)
+    tree = kernel.build(PT)
+
+    def run(**kw):
+        qi, idx, ldot, et = kernel.knn_compound(tree, QT, QR, PR, k, rw, tw, **kw)
+        return qi, idx, rw * np.arccos(ldot) + tw * et
+
+    qi, idx, d = run()
+    first = np.searchsorted(qi, np.arange(nq))
+    kth, prev = d[first + k - 1], d[first + k - 2]
+    assert (prev < kth).sum() > nq // 2  # most queries have a gap to cut in
+    for b in (np.inf, 0.0, 0.5 * (prev + kth), 1.5 * kth + 0.1):
+        for mr in ([b] if np.ndim(b) else [b, np.full(nq, b)]):
+            got = run(max_radius=mr)
+            keep = d <= (mr if np.ndim(mr) == 0 else mr[qi])
+            for a, want in zip(got, (qi[keep], idx[keep], d[keep])):
+                assert np.array_equal(a, want)
+    below = run(max_radius=0.5 * (prev + kth))
+    assert len(below[0]) < len(qi)
+
+
 @pytest.mark.parametrize("dist_kind", list(DISTS))
 @pytest.mark.parametrize("k", [1, 4, 8])
 def test_knn_float32_matches_float32_brute_force(dist_kind, k):

@@ -283,7 +283,7 @@ def test_group_admission_identical_to_dense_partition_admission(monkeypatch):
 def test_dense_bypass_matches_group_path(monkeypatch):
     """Small-P fast path (round 5): admission with the (chunk, P) dense
     bypass must return EXACTLY the pairs of the 3-level group path, for
-    both engines, home-pid mask included."""
+    both engines (SO(3) with its home-pid mask)."""
     rng = np.random.default_rng(11)
     P = 400
     (leaf_lo, leaf_hi, p_lo, p_hi, p_start,
@@ -306,9 +306,7 @@ def test_dense_bypass_matches_group_path(monkeypatch):
     for tag, thresh in (("group", 0), ("dense", 10**6)):
         monkeypatch.setattr(S, "DENSE_P_MAX", thresh)
         qi, pid = S._partition_candidates(Q, bound, la, home_pid=home)
-        qi2, pid2 = S._se3_partition_candidates(
-            Q, QR, bound, la14, 0.5, 2.0, home_pid=home
-        )
+        qi2, pid2 = S._se3_partition_candidates(Q, QR, bound, la14, 0.5, 2.0)
         results[tag] = (
             set(zip(qi.tolist(), pid.tolist())),
             set(zip(qi2.tolist(), pid2.tolist())),

@@ -82,21 +82,26 @@ def test_radius_rejects_nonfinite_r(spark, space):
 
 
 def test_radius_reuses_knn_admission_broadcast(spark):
-    """Radius runs each pose space's kNN phase-2 admission generator, so a
-    layout holds ONE admission broadcast: after a kNN and a radius join on
-    the same index, the layout cache holds the kNN broadcast (the radius
-    call built none of its own) and no radius-only broadcast."""
-    for space, bc_name in (("so3", "so3knn_bc"), ("se3", "se3knn_bc")):
+    """Radius runs each pose space's kNN admission generator, so a layout
+    holds ONE admission broadcast: after a kNN and a radius join on the
+    same index, the layout cache holds the kNN broadcast (the radius call
+    built none of its own) and no radius-only broadcast.  SE(3) kNN also
+    broadcasts its corpus-sample tree, which radius does not read."""
+    for space, bc_names in (
+        ("so3", {"so3knn_bc"}), ("se3", {"se3knn_bc", "se3_sample_bc"})
+    ):
         idx, queries, kw, r_ok = _SPACES[space](spark)
         try:
             idx.knn_join(queries, k=4, **kw).count()
             cache = so3engine._layout_cache(idx.layout)
-            key = (bc_name, spark.sparkContext.applicationId)
+            key = (f"{space}knn_bc", spark.sparkContext.applicationId)
             bc = cache[key]
+            before = set(cache)
             assert idx.radius_join(queries, r_ok, **kw).count() > 0
             names = {name for name, _ in cache}
+            assert set(cache) == before
             assert cache[key] is bc
             assert not names & {"so3rad_bc", "se3rad_bc"}
-            assert [n for n in names if n.endswith("_bc")] == [bc_name]
+            assert {n for n in names if n.endswith("_bc")} == bc_names
         finally:
             idx.unpersist()

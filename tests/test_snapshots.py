@@ -135,3 +135,34 @@ def test_query_metrics_and_latency_histogram(spark, tmp_path):
         assert spark.read.parquet(out + "-hist").count() == len(hist)
     finally:
         idx.unpersist()
+
+
+def test_temp_store_dir_lives_until_interpreter_exit(tmp_path):
+    """A throwaway store directory (`__spark_entry__`'s snapshot-append
+    rows make one per call, ~650 MB at sf0.1) must exist for the rest of
+    the process, so the lazy frame read from it stays valid, and be gone
+    once the process exits."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    code = (
+        "from pathlib import Path\n"
+        "from sparkkd.snapshots import temp_store_dir\n"
+        "d = Path(temp_store_dir('sparkkd-snap-'))\n"
+        "(d / 'part.parquet').write_bytes(b'x' * 1024)\n"
+        "assert d.is_dir()\n"
+        "print(d)\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path),
+           "PYTHONPATH": os.pathsep.join([str(repo), os.environ.get("PYTHONPATH", "")])}
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=repo,
+        capture_output=True, text=True, check=True,
+    )
+    made = Path(out.stdout.strip().splitlines()[-1])
+    assert made.parent == tmp_path and made.name.startswith("sparkkd-snap-")
+    assert not made.exists()
+    assert list(tmp_path.iterdir()) == []

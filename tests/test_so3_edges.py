@@ -378,3 +378,96 @@ def test_layout_cache_evicts_dead_application_ids():
     assert set(so3engine._layout_cache(lay)) == {("bc", "app-new")}
     assert so3engine._cached(lay, new, "bc", build("rebuilt")) == "new-bc"
     assert builds == ["old-bc", "old-salts", "new-bc"]
+
+
+def _unit_rows(rng, n):
+    q = rng.normal(size=(n, 4))
+    return q / np.linalg.norm(q, axis=1, keepdims=True)
+
+
+def _se3_exact_topk(Q, QT, P, PT, pids, k, rw, tw):
+    """Brute-force SE(3) top-k in the oracle's exact arithmetic (left-
+    associated dot, libm acos), ties by pose_id: {query row: (ids, d)}."""
+    dot = Q[:, None, 0] * P[None, :, 0]
+    for j in (1, 2, 3):
+        dot = dot + Q[:, None, j] * P[None, :, j]
+    ang = so3engine.acos_exact(np.minimum(1.0, np.abs(dot)).ravel()).reshape(dot.shape)
+    d = QT[:, None, :] - PT[None, :, :]
+    D = rw * ang + tw * np.sqrt((d * d).sum(axis=2))
+    out = {}
+    for i in range(len(Q)):
+        srt = np.lexsort((pids, D[i]))[:k]
+        out[i] = (list(pids[srt]), D[i][srt])
+    return out
+
+
+def _assert_se3_index_exact(spark, P, PT, Q, QT, k, rw, tw, **index_kw):
+    """Se3Index kNN on (P, PT) for queries (Q, QT) must equal brute force
+    row for row: ids in rank order, distances bit-exact.  Returns the
+    index's sample size."""
+    pids = np.array([f"pose{i:06d}" for i in range(len(P))])
+    idx = so3engine.Se3Index(
+        spark, _pose_df(spark, P, PT), n_poses_hint=len(P), **index_kw
+    )
+    try:
+        n_sample = len(idx.sample)
+        res = (
+            idx.knn_join(_query_df(spark, Q, QT), k=k, rot_weight=rw, trans_weight=tw)
+            .toPandas().sort_values(["query_id", "rank"])
+        )
+    finally:
+        idx.unpersist()
+    want = _se3_exact_topk(Q, QT, P, PT, pids, k, rw, tw)
+    assert len(res) == len(Q) * min(k, len(P))
+    for i, (ids, d) in want.items():
+        got = res[res["query_id"] == f"q{i:06d}"]
+        assert list(got["rank"]) == list(range(1, len(ids) + 1))
+        assert list(got["pose_id"]) == ids, i
+        assert np.array_equal(got["dist"].to_numpy(), d), i
+    return n_sample
+
+
+def test_se3_knn_sample_smaller_than_k_falls_back_exact(spark):
+    """A corpus under 16*k poses leaves the kNN bound sample (every 16th
+    pose by id hash at this size) with fewer than k poses: every query
+    then takes the group count-bound, and results stay exact."""
+    rng = np.random.default_rng(21)
+    n, k = 100, 12  # 10 of these 100 ids hash into the sample
+    P, PT = _unit_rows(rng, n), rng.uniform(0, 4, size=(n, 3))
+    Q, QT = _unit_rows(rng, 15), rng.uniform(-1, 5, size=(15, 3))
+    n_sample = _assert_se3_index_exact(spark, P, PT, Q, QT, k, 2.0, 0.5)
+    assert n_sample < k
+
+
+def test_se3_knn_point_mass_in_uniform_corpus_ties_by_id(spark):
+    """3,000 copies of ONE pose (ids scattered through the id order) inside
+    a uniform corpus: queries at or near the point mass tie across all
+    copies, so the top-k must be the k smallest ids among them.  A small
+    max_cell_rows hash-salts the point-mass leaf over several part_keys,
+    so ties are merged across cogroups."""
+    rng = np.random.default_rng(22)
+    n_mass, n_uni = 3000, 2000
+    P, PT = _unit_rows(rng, n_mass + n_uni), rng.uniform(0, 10, (n_mass + n_uni, 3))
+    mass = rng.permutation(n_mass + n_uni)[:n_mass]
+    P[mass], PT[mass] = P[mass[0]], [5.0, 5.0, 5.0]
+    Q = np.vstack([np.tile(P[mass[0]], (8, 1)), _unit_rows(rng, 16)])
+    QT = np.vstack(
+        [
+            np.full((8, 3), 5.0),
+            5.0 + rng.normal(scale=0.05, size=(8, 3)),
+            rng.uniform(0, 10, size=(8, 3)),
+        ]
+    )
+    _assert_se3_index_exact(spark, P, PT, Q, QT, 8, 2.0, 0.5, max_cell_rows=256)
+
+
+@pytest.mark.parametrize("rw, tw", [(2.0, 0.0), (0.0, 0.5)])
+def test_se3_knn_single_term_weights_exact(spark, rw, tw):
+    """trans_weight=0 leaves no translation pruning (every kernel scans
+    its whole group densely) and rot_weight=0 makes the metric plain L2
+    over translation; the sample bound must stay exact for both."""
+    rng = np.random.default_rng(23)
+    n = 1500
+    P, PT = _unit_rows(rng, n), rng.uniform(0, 6, size=(n, 3))
+    Q, QT = _unit_rows(rng, 30), rng.uniform(0, 6, size=(30, 3))
+    _assert_se3_index_exact(spark, P, PT, Q, QT, 5, rw, tw)

@@ -417,43 +417,36 @@ def _record_splits(monkeypatch, **force):
 
 
 def test_knn_p2_heavy_group_split_identity(spark, pose_data, monkeypatch):
-    """Round 5: kNN phase-2 cogroups split query-side when estimated work
-    (candidates x partition poses) exceeds _KNN_SPLIT_TARGET — measured at
-    sf2, unsplit per-task kernel time varied 5 s -> 90 s at ~uniform
-    candidate counts, making one task the stage wall at any core count.
-    Query-side splitting is exact (every subgroup sees the partition's
-    full corpus; the rerank dedupes by (query, pose)), so forcing EVERY
-    group to split (target=1, 2 candidate rows per sub-group, split gate
-    off) must be bit-identical to no split (target=huge), and the forced
-    run must really have fanned out."""
+    """Round 5: SO(3) kNN phase-2 cogroups split query-side when estimated
+    work (candidates x partition poses) exceeds _KNN_SPLIT_TARGET —
+    measured at sf2, unsplit per-task kernel time varied 5 s -> 90 s at
+    ~uniform candidate counts, making one task the stage wall at any core
+    count.  Query-side splitting is exact (every subgroup sees the
+    partition's full corpus; the rerank dedupes by (query, pose)), so
+    forcing EVERY group to split (target=1, 2 candidate rows per
+    sub-group, split gate off) must be bit-identical to no split
+    (target=huge), and the forced run must really have fanned out.  SE(3)
+    kNN is one pass with no split planner, so it has nothing to force."""
     poses, queries, ppdf, _ = pose_data
 
-    def both():
-        knn = (
+    def knn():
+        return (
             so3engine.so3_knn_join(
                 spark, poses, queries, k=4, n_poses_hint=len(ppdf)
             ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
         )
-        sknn = (
-            so3engine.se3_knn_join(
-                spark, poses, queries, k=4, rot_weight=2.0, trans_weight=0.5,
-                n_poses_hint=len(ppdf),
-            ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-        )
-        return knn, sknn
 
     monkeypatch.setattr(so3engine, "_KNN_SPLIT_TARGET", 10**18)
-    unsplit = both()
+    unsplit = knn()
     monkeypatch.setattr(so3engine, "_KNN_SPLIT_TARGET", 1)
     monkeypatch.setattr(so3engine, "_KNN_SPLIT_GATE", 0.0)
     seen = _record_splits(monkeypatch, min_rows_per_split=2)
-    forced = both()
-    # both joins must have exercised the gsalt fan-out — otherwise this
+    forced = knn()
+    # the join must have exercised the gsalt fan-out — otherwise this
     # test silently compares unsplit output to unsplit output
-    assert seen == [True, True]
-    for u, f in zip(unsplit, forced):
-        pd.testing.assert_frame_equal(u, f)
-        assert len(u) > 0
+    assert seen == [True]
+    pd.testing.assert_frame_equal(unsplit, forced)
+    assert len(unsplit) > 0
 
 
 def test_radius_heavy_group_split_identity(spark, pose_data, monkeypatch):
@@ -491,43 +484,26 @@ def test_radius_heavy_group_split_identity(spark, pose_data, monkeypatch):
         assert len(u) > 0
 
 
-def test_se3_index_unsplit_phase2_reads_cached_corpus_layout(
-    spark, pose_data, monkeypatch
-):
-    """The pose twin of test_geoindex_no_corpus_exchange: when the split
-    planner does not split, the Se3Index phase-2 cogroup carries no gsalt
-    and shuffles ONLY the candidate side — the corpus flows in through
-    its cached hash(part_key) layout with no ENSURE_REQUIREMENTS
-    exchange.  (A split re-keys on (part_key, gsalt) and re-exchanges the
-    whole probed corpus, which is why the planner gates it.)"""
+def test_se3_index_knn_reads_cached_corpus_layout(spark, pose_data, monkeypatch):
+    """The pose twin of test_geoindex_no_corpus_exchange: the Se3Index kNN
+    cogroup shuffles ONLY the candidate side — the corpus flows in
+    through its cached hash(part_key) layout with no ENSURE_REQUIREMENTS
+    exchange of its own, and no split planner keys it on gsalt.  The
+    one other exchange is the (dist, pose_id) merge window's, on
+    query_id."""
     import re
 
     poses, queries, ppdf, _ = pose_data
-    orig = so3engine._split_heavy_cogroups
     planned = []
-
-    def capture(*a, **kw):
-        planned.append(orig(*a, **kw))
-        return planned[-1]
-
-    monkeypatch.setattr(so3engine, "_split_heavy_cogroups", capture)
+    monkeypatch.setattr(
+        so3engine, "_split_heavy_cogroups", lambda *a, **kw: planned.append(a)
+    )
     idx = so3engine.Se3Index(spark, poses, n_poses_hint=len(ppdf))
     try:
-        idx.knn_join(queries, k=4, rot_weight=2.0, trans_weight=0.5).count()
-        assert len(planned) == 1
-        cand, probe, gcols = planned[0]
-        assert gcols == ["part_key"]
-        assert "gsalt" not in cand.columns and "gsalt" not in probe.columns
-        p2 = (
-            cand.groupby(*gcols)
-            .cogroup(probe.groupby(*gcols))
-            .applyInArrow(
-                so3engine._make_se3_group(4, 2.0, 0.5, carry=False),
-                schema="query_id string, pose_id string, dist double",
-            )
-        )
-        p2.count()
-        plan = p2._jdf.queryExecution().executedPlan().toString()
+        df = idx.knn_join(queries, k=4, rot_weight=2.0, trans_weight=0.5)
+        assert df.count() == 4 * queries.count()
+        assert planned == []
+        plan = df._jdf.queryExecution().executedPlan().toString()
         # drop the cached plans printed under each InMemoryRelation (their
         # one-time build shuffles are not per-query work)
         outer, depth = [], None
@@ -543,8 +519,42 @@ def test_se3_index_unsplit_phase2_reads_cached_corpus_layout(
             ln for ln in outer
             if re.search(r"Exchange hashpartitioning.*ENSURE_REQUIREMENTS", ln)
         ]
-        assert len(ex) == 1, outer_plan  # the candidate side's
-        assert outer_plan.count("InMemoryTableScan") == 2, outer_plan
+        assert len(ex) == 2, outer_plan
+        assert sum("hashpartitioning(part_key" in ln for ln in ex) == 1, outer_plan
+        assert sum("hashpartitioning(query_id" in ln for ln in ex) == 1, outer_plan
+        assert outer_plan.count("InMemoryTableScan") == 1, outer_plan
         assert "gsalt" not in outer_plan
+    finally:
+        idx.unpersist()
+
+
+def test_se3_steady_batch_runs_no_job_and_persists_nothing(spark, pose_data):
+    """The pose twin of test_steady_batch_runs_no_job_and_persists_nothing:
+    on a PREBUILT Se3Index, constructing a kNN batch runs NO driver action
+    (the two-phase path ran the split planner's count-collect), and
+    materializing it leaves nothing persisted beyond the index's own
+    corpus (the two-phase path held its phase-1, top-k and candidate
+    caches until the next call).  Results must be complete."""
+    poses, queries, ppdf, _ = pose_data
+    jsc = spark.sparkContext._jsc
+    idx = so3engine.Se3Index(spark, poses, n_poses_hint=len(ppdf))
+    try:
+        n_persisted = jsc.getPersistentRDDs().size()
+        kw = dict(k=4, rot_weight=2.0, trans_weight=0.5)
+        idx.knn_join(queries, **kw).count()  # warm
+
+        def n_execs():
+            # SQL executions = driver-side actions (AQE splits one action
+            # into many JOBS, so job counts can't express the floor)
+            return (
+                spark._jsparkSession.sharedState()
+                .statusStore().executionsCount()
+            )
+
+        before = n_execs()
+        df = idx.knn_join(queries, **kw)  # builder only — NO action
+        assert n_execs() - before == 0
+        assert df.count() == 4 * queries.count()
+        assert jsc.getPersistentRDDs().size() == n_persisted
     finally:
         idx.unpersist()

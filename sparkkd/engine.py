@@ -479,7 +479,8 @@ def _candidate_part_keys(stats: CellStats) -> pd.DataFrame:
 def _planar_corpus(spark, images, level, max_cell_rows, n_images_hint):
     """The planar corpus builder (GeoIndex and the one-shot joins): derive
     coordinates, collect cell stats (level None: derived from the row
-    count), salt.  Returns (img, stats, img_salted, part_keys)."""
+    count), salt.  Returns (img, stats, img_salted, part_keys); img_salted
+    carries only what the kernels read: (image_id, x, y, part_key)."""
     img = with_coords(images).select("image_id", "x", "y")
     if level is None:
         n = n_images_hint if n_images_hint is not None else img.count()
@@ -488,7 +489,10 @@ def _planar_corpus(spark, images, level, max_cell_rows, n_images_hint):
     part_keys = F.broadcast(spark.createDataFrame(
         _candidate_part_keys(stats), schema=_PART_KEYS_SCHEMA
     ))
-    return img, stats, _salted_images(spark, img, stats), part_keys
+    img_salted = _salted_images(spark, img, stats).select(
+        "image_id", "x", "y", "part_key"
+    )
+    return img, stats, img_salted, part_keys
 
 
 # ------------------------------------------------------- candidate pruning
@@ -705,25 +709,31 @@ def _tie_rank(ids) -> np.ndarray:
 
 
 def _make_knn_group(k: int):
-    """Arrow-native cogroup kernel: build a k-d tree over the group's
-    images and run the batched kNN for its candidate queries, each seeded
-    with its admission bound (reference maxRadius seeding,
-    ``src/_kdtree_median.hpp:131-137``); ties broken by image_id
-    lexicographic rank so the global merge is deterministic.  Output rows
-    are assembled with Arrow take/array calls — no pandas object-string
-    round trip (guide §4.2)."""
+    """Arrow-native cogroup kernel: the batched kNN of the group's
+    candidate queries against its images, each seeded with its admission
+    bound (reference maxRadius seeding, ``src/_kdtree_median.hpp:131-137``);
+    ties broken by image_id lexicographic rank so the global merge is
+    deterministic.  A small group (kernel.use_tile) is scored as one
+    distance tile, ranking only its candidates' ids; a larger one builds a
+    k-d tree.  Output rows are assembled with Arrow take/array calls — no
+    pandas object-string round trip (guide §4.2)."""
 
     def knn_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
             return _EMPTY_PAIRS
         pts = np.column_stack([_pa_np(right, "x"), _pa_np(right, "y")])
         ids = right.column("image_id")
-        tie = _tie_rank(ids)
-        tree = kernel.build(pts)
         qpts = np.column_stack([_pa_np(left, "x"), _pa_np(left, "y")])
-        qi, idx, dist = kernel.knn(
-            tree, qpts, k, tie_key=tie, max_radius=_pa_np(left, "bound")
-        )
+        bound = _pa_np(left, "bound")
+        if kernel.use_tile(len(qpts), len(pts)):
+            qi, idx, dist = kernel.knn_tile(
+                pts, qpts, k, tie_rank=lambda u: _tie_rank(ids.take(u)),
+                max_radius=bound,
+            )
+        else:
+            qi, idx, dist = kernel.knn(
+                kernel.build(pts), qpts, k, tie_key=_tie_rank(ids), max_radius=bound
+            )
         return pa.table(
             {
                 "query_id": pc.take(left.column("query_id"), pa.array(qi)),

@@ -38,6 +38,15 @@ This is the vectorized re-expression of the reference's core algorithms
   from step 2 over-estimates the true kth distance, so no true neighbor is
   ever pruned; step 4's final sort recovers the exact k.
 
+* **Tile below the crossover, tree above** — the reference builds its tree
+  to amortize it over many queries (``src/_kdtree_base.hpp:38-55``); a
+  cogroup group that gets few queries never repays the build.
+  ``knn_tile`` / ``knn_compound_tile`` score the group's whole (Q x P)
+  distance tile with the tree scan's per-pair arithmetic and summation
+  order, so every distance is bit-identical to the tree path's, and find
+  each row's kth with ``np.partition``.  ``use_tile(Q, P)`` is the rule
+  the cogroup kernels apply (measured crossover: see its constants).
+
 Coordinates default to float64 but ``build(..., dtype=np.float32)`` stores
 and computes in float32 — the analogue of the reference's multi-scalar
 support (float/double/long double, ``src/_tuple.hpp:43-46``, exercised by
@@ -507,6 +516,164 @@ def knn_compound(
     if not out_qi:
         z = np.empty(0, dtype=np.int64)
         return z, z, np.empty(0, dtype=np.float64), np.empty(0, dtype=np.float64)
+    return (
+        np.concatenate(out_qi),
+        np.concatenate(out_idx),
+        np.concatenate(out_ldot),
+        np.concatenate(out_et),
+    )
+
+
+# Crossover between the (Q x P) tile kernels and build-a-tree-then-search,
+# from a single-thread sweep (4-core x86-64, NumPy 1.26, float64; each side
+# timed as the cogroup kernels call it: tile vs kernel.build (+ the planar
+# id rank of the whole group) + search, k=8 planar, k=4 SE(3), each query
+# seeded with 1.5x its true kth distance; tree time / tile time):
+#   planar, P 300-16,384:  Q <= 32 wins 2.0-40x, Q = 64 wins 1.05-2.0x,
+#     Q = 128 loses or ties once P >= 1,000 (0.64-1.01x), Q = 256 loses
+#     0.40-0.76x; at k=1 Q <= 64 wins 1.9-10x, Q = 128 ties (0.94-1.22x);
+#   SE(3) rw=2 tw=0.5:     the tile wins 3.0-42x at every Q <= 256 tried
+#     (the translation tree barely prunes a rotation-heavy metric);
+#   SE(3) rw=0 tw=1:       Q <= 32 wins 1.22-43x, Q = 48 ties (0.97-1.22x),
+#     Q = 64 loses once P >= 2,000 (0.54-0.84x).
+#   Q x P = 65,536 (Q 64-2,048, P 1,024-32): the tile wins 1.01-8.1x in all
+#     three; Q x P = 128,000 (128 x 1,000) loses at rw=0 tw=1 (0.80x).
+# So a group takes the tile when it has at most TILE_MAX_Q queries or at
+# most TILE_MAX_PAIRS (query, point) pairs: the shapes where it won in
+# every space and weighting swept.
+TILE_MAX_Q = 32
+TILE_MAX_PAIRS = 65_536
+# (query, point) pairs per tile chunk: bounds each (Q x P) temporary to
+# 2 MB (see knn's note on first-touch cost of large fresh temporaries)
+_TILE_CHUNK_PAIRS = 1 << 18
+
+
+def use_tile(n_queries: int, n_points: int) -> bool:
+    """True when a group of n_queries against n_points should be scored
+    as a distance tile rather than through a k-d tree."""
+    return n_queries <= TILE_MAX_Q or n_queries * n_points <= TILE_MAX_PAIRS
+
+
+def _tile_dist(q: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """(Q, P) L2 distances, summed per dimension in index order like
+    ``_scan_pairs``'s ``(diff * diff).sum(axis=1)``: bit-identical."""
+    diff = q[:, 0][:, None] - p[:, 0][None, :]
+    d2 = diff * diff
+    for j in range(1, q.shape[1]):  # loop over dimensions, not rows
+        diff = q[:, j][:, None] - p[:, j][None, :]
+        d2 = d2 + diff * diff
+    return np.sqrt(d2)
+
+
+def _kth_per_row(d: np.ndarray, k: int) -> np.ndarray:
+    """Each row's kth-smallest value (inf when a row has fewer than k)."""
+    if d.shape[1] < k:
+        return np.full(d.shape[0], np.inf)
+    return np.partition(d, k - 1, axis=1)[:, k - 1]
+
+
+def knn_tile(
+    points: np.ndarray,
+    queries: np.ndarray,
+    k: int,
+    tie_rank=None,
+    max_radius: float | np.ndarray = np.inf,
+):
+    """``knn`` without a tree: exact top-k per query by (dist, tie) among
+    the points within max_radius (a scalar or one bound per query), from
+    the whole (Q x P) distance tile.  Same result as
+    ``knn(build(points), ...)``, distances bit-identical.
+
+    tie_rank(u) maps sorted unique point indices ``u`` to int64 keys that
+    order those points like the caller's ids; it is asked only for the
+    points at or below some row's kth distance, so a caller ranks a few
+    ids instead of the whole group.  None orders ties by point index.
+    Returns (qi, idx, dist) sorted by (qi, dist, tie)."""
+    assert k >= 1
+    p = np.ascontiguousarray(points, dtype=np.float64)
+    q = np.ascontiguousarray(queries, dtype=np.float64)
+    if len(p) == 0 or len(q) == 0:
+        z = np.empty(0, dtype=np.int64)
+        return z, z, np.empty(0, dtype=np.float64)
+    mr = np.broadcast_to(np.asarray(max_radius, dtype=np.float64), (len(q),))
+    out_qi: list[np.ndarray] = []
+    out_idx: list[np.ndarray] = []
+    out_dist: list[np.ndarray] = []
+    step = max(1, _TILE_CHUNK_PAIRS // len(p))
+    for c0 in range(0, len(q), step):  # memory-bounding chunk loop
+        d = _tile_dist(q[c0 : c0 + step], p)
+        thr = np.minimum(_kth_per_row(d, k), mr[c0 : c0 + step])
+        qi, idx = np.nonzero(d <= thr[:, None])
+        dist = d[qi, idx]
+        if tie_rank is None:
+            tie = idx
+        else:
+            u, inv = np.unique(idx, return_inverse=True)
+            tie = np.asarray(tie_rank(u), dtype=np.int64)[inv]
+        # a row holds more than k candidates only on a tie at its kth
+        srt = np.lexsort((tie, dist, qi))
+        qi, idx, dist = qi[srt], idx[srt], dist[srt]
+        rank = np.arange(len(qi)) - np.searchsorted(qi, qi)
+        keep = rank < k
+        out_qi.append(qi[keep] + c0)
+        out_idx.append(idx[keep])
+        out_dist.append(dist[keep])
+    return (
+        np.concatenate(out_qi),
+        np.concatenate(out_idx),
+        np.concatenate(out_dist),
+    )
+
+
+def knn_compound_tile(
+    p_trans: np.ndarray,
+    q_trans: np.ndarray,
+    q_rot: np.ndarray,
+    p_rot: np.ndarray,
+    k: int,
+    rot_weight: float,
+    trans_weight: float,
+    max_radius: float | np.ndarray = np.inf,
+):
+    """``knn_compound`` without a tree, same contract: every pose whose
+    selection distance is within the relative 1e-12 margin of its query's
+    kth and within max_radius, from the whole (Q x P) tile.  The
+    translation distance, the dot product and the SIMD-arccos selection
+    distance use ``knn_compound``'s per-pair arithmetic in the same order,
+    so the returned (qi, idx, ldot, et) set equals
+    ``knn_compound(build(p_trans), ...)``'s.  Row-major order."""
+    assert k >= 1
+    rw, tw = float(rot_weight), float(trans_weight)
+    pt = np.ascontiguousarray(p_trans, dtype=np.float64)
+    pr = np.ascontiguousarray(p_rot, dtype=np.float64)
+    qt = np.ascontiguousarray(q_trans, dtype=np.float64)
+    qr = np.ascontiguousarray(q_rot, dtype=np.float64)
+    if len(pt) == 0 or len(qt) == 0:
+        z = np.empty(0, dtype=np.int64)
+        return z, z, np.empty(0, dtype=np.float64), np.empty(0, dtype=np.float64)
+    mr = np.broadcast_to(np.asarray(max_radius, dtype=np.float64), (len(qt),))
+    out_qi: list[np.ndarray] = []
+    out_idx: list[np.ndarray] = []
+    out_ldot: list[np.ndarray] = []
+    out_et: list[np.ndarray] = []
+    step = max(1, _TILE_CHUNK_PAIRS // len(pt))
+    for c0 in range(0, len(qt), step):  # memory-bounding chunk loop
+        et = _tile_dist(qt[c0 : c0 + step], pt)
+        a = qr[c0 : c0 + step]
+        dot = a[:, 0][:, None] * pr[:, 0][None, :]
+        for j in range(1, 4):  # quaternion components, not rows
+            dot = dot + a[:, j][:, None] * pr[:, j][None, :]
+        ldot = np.minimum(1.0, np.abs(dot))
+        cd = rw * np.arccos(ldot) + tw * et
+        dk = _kth_per_row(cd, k)
+        keep = (cd <= mr[c0 : c0 + step, None]) & (
+            cd <= (dk * (1.0 + 1e-12) + 1e-15)[:, None]
+        )
+        qi, idx = np.nonzero(keep)
+        out_qi.append(qi + c0)
+        out_idx.append(idx)
+        out_ldot.append(ldot[qi, idx])
+        out_et.append(et[qi, idx])
     return (
         np.concatenate(out_qi),
         np.concatenate(out_idx),

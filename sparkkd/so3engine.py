@@ -53,7 +53,10 @@ every leaf, so leaf statistics give only a loose kNN upper bound (up to
 corpus SAMPLE, every pose with ``pmod(xxhash64(pose_id), m) = 0`` for
 m = max(16, ceil(n / 65,536)): any k corpus poses bound the kth distance.
 Per-partition kernels run ``kernel.knn_compound`` — branch-and-bound over
-a translation k-d tree — so big partitions stay leaf-log, never dense.
+a translation k-d tree — so big partitions stay leaf-log, never dense;
+groups below the ``kernel.use_tile`` crossover score their dense tile
+instead (``kernel.knn_compound_tile``), where building the tree costs
+more than it prunes.
 
 IEEE parity with the DuckDB oracle: the final ranking distance is computed
 with term-for-term the same expression the oracle uses —
@@ -2061,14 +2064,16 @@ def se3_knn_join(
 
 
 def _make_se3_group(k: int, rw: float, tw: float):
-    """Cogroup kernel: branch-and-bound compound search via
-    kernel.knn_compound — a k-d tree over the partition's TRANSLATIONS
-    prunes with the trans_weight * distToLeaf lower bound, so per-query
-    work is leaf-log + admitted scans instead of a dense Q x P matrix —
-    each query seeded with its admission bound.  Selection runs on SIMD
-    arccos padded by a relative 1e-12 margin; final values are
-    libm-rescored from the returned (ldot, et), so the downstream window
-    (ordered by the EXACT dist) decides oracle-exactly."""
+    """Cogroup kernel: compound kNN of the group's candidate queries, each
+    seeded with its admission bound.  A small group (kernel.use_tile) is
+    scored as one dense Q x P tile (kernel.knn_compound_tile); a larger
+    one runs branch-and-bound via kernel.knn_compound — a k-d tree over
+    the partition's TRANSLATIONS prunes with the trans_weight *
+    distToLeaf lower bound.  Selection runs on SIMD arccos padded by a
+    relative 1e-12 margin and keeps every pose within it, so no id rank
+    is needed here; final values are libm-rescored from the returned
+    (ldot, et), and the downstream (dist, pose_id) window (ordered by the
+    EXACT dist) decides oracle-exactly and breaks ties."""
 
     def se3_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
@@ -2078,10 +2083,15 @@ def _make_se3_group(k: int, rw: float, tw: float):
         PR = np.column_stack([_pa_np(right, c) for c in QCOLS])
         PT = np.column_stack([_pa_np(right, c) for c in TCOLS])
         ids = right.column("pose_id")
-        qi, idx, ldot, et = kernel.knn_compound(
-            kernel.build(PT), QT, QR, PR, k, rw, tw,
-            tie_key=_tie_rank(ids), max_radius=_pa_np(left, "bound"),
-        )
+        bound = _pa_np(left, "bound")
+        if kernel.use_tile(len(QT), len(PT)):
+            qi, idx, ldot, et = kernel.knn_compound_tile(
+                PT, QT, QR, PR, k, rw, tw, max_radius=bound
+            )
+        else:
+            qi, idx, ldot, et = kernel.knn_compound(
+                kernel.build(PT), QT, QR, PR, k, rw, tw, max_radius=bound
+            )
         return pa.table(
             {
                 "query_id": pc.take(left.column("query_id"), pa.array(qi)),

@@ -1,6 +1,12 @@
 import pytest
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "spark: needs the session-scoped local SparkSession"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

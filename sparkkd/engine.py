@@ -74,7 +74,7 @@ def _parallelism(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-# Intermediate caches (radius candidates; planar kNN persists nothing)
+# Intermediate caches (radius candidates; kNN persists nothing)
 # are tracked in a REGISTRY scoped to the issuing context: GeoIndex
 # instances each own one (a new join on the SAME index releases that
 # index's previous intermediates only — other indexes' and sessions'
@@ -127,10 +127,12 @@ def _probe_filter(spark: SparkSession, df: DataFrame, keys) -> DataFrame:
 
 def release_caches() -> None:
     """Unpersist intermediates from prior ONE-SHOT join calls (GeoIndex /
-    So3Index / Se3Index instances release their own on each new join /
-    unpersist()).  Also drains the pose engine's one-shot registry —
-    round 3 left pose-join intermediates pinned until the next one-shot
-    pose join in the process (ADVICE r3)."""
+    So3Index / Se3Index instances release their own on each new radius
+    join / unpersist()).  Only radius joins (and the datapipe operators)
+    cache intermediates: every kNN join is one pass and persists nothing.
+    Also drains the pose engine's one-shot registry — round 3 left
+    pose-join intermediates pinned until the next one-shot pose join in
+    the process (ADVICE r3)."""
     _release_registry(_ONESHOT_CACHES)
     from . import datapipe, so3engine
 
@@ -708,15 +710,27 @@ def _tie_rank(ids) -> np.ndarray:
     return tie
 
 
+def _knn_scan(pts: np.ndarray, qpts: np.ndarray, ids, k: int, bound: np.ndarray):
+    """One group's bounded kNN, ties by the rank of the Arrow id column
+    ``ids``: a small group (kernel.use_tile) is scored as one distance
+    tile, ranking only its candidates' ids; a larger one builds a k-d
+    tree.  Both give bit-identical distances.  Returns (qi, idx, dist)."""
+    if kernel.use_tile(len(qpts), len(pts)):
+        return kernel.knn_tile(
+            pts, qpts, k, tie_rank=lambda u: _tie_rank(ids.take(u)), max_radius=bound
+        )
+    return kernel.knn(
+        kernel.build(pts), qpts, k, tie_key=_tie_rank(ids), max_radius=bound
+    )
+
+
 def _make_knn_group(k: int):
     """Arrow-native cogroup kernel: the batched kNN of the group's
     candidate queries against its images, each seeded with its admission
     bound (reference maxRadius seeding, ``src/_kdtree_median.hpp:131-137``);
     ties broken by image_id lexicographic rank so the global merge is
-    deterministic.  A small group (kernel.use_tile) is scored as one
-    distance tile, ranking only its candidates' ids; a larger one builds a
-    k-d tree.  Output rows are assembled with Arrow take/array calls — no
-    pandas object-string round trip (guide §4.2)."""
+    deterministic (_knn_scan).  Output rows are assembled with Arrow
+    take/array calls — no pandas object-string round trip (guide §4.2)."""
 
     def knn_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
@@ -724,16 +738,7 @@ def _make_knn_group(k: int):
         pts = np.column_stack([_pa_np(right, "x"), _pa_np(right, "y")])
         ids = right.column("image_id")
         qpts = np.column_stack([_pa_np(left, "x"), _pa_np(left, "y")])
-        bound = _pa_np(left, "bound")
-        if kernel.use_tile(len(qpts), len(pts)):
-            qi, idx, dist = kernel.knn_tile(
-                pts, qpts, k, tie_rank=lambda u: _tie_rank(ids.take(u)),
-                max_radius=bound,
-            )
-        else:
-            qi, idx, dist = kernel.knn(
-                kernel.build(pts), qpts, k, tie_key=_tie_rank(ids), max_radius=bound
-            )
+        qi, idx, dist = _knn_scan(pts, qpts, ids, k, _pa_np(left, "bound"))
         return pa.table(
             {
                 "query_id": pc.take(left.column("query_id"), pa.array(qi)),
@@ -792,6 +797,35 @@ def knn_join(
     )
 
 
+def _knn_on_index(
+    cand: DataFrame, corpus: DataFrame, kernel_fn, schema: str, k: int
+) -> DataFrame:
+    """The ONE kNN orchestration (planar, SO(3), SE(3)): the space's
+    admission rows ``cand`` (each query bounded by >= its kth distance,
+    keyed by part_key) -> ONE cogroup with the corpus running
+    ``kernel_fn``, seeded with those bounds -> ONE window over the
+    kernel's (query_id, id, dist) ``schema`` ranking by (dist, id) ->
+    rank <= k.  Exact: every partition holding a point within a query's
+    bound is admitted and every comparison is <=.  Runs no Spark job at
+    call time and persists nothing.  No heavy group is split: the split
+    planner's count-collect is an eager job, and in the pose_knn
+    benchmark that job cost more than the split saved.
+
+    Every group's rows go through the merge window, also those of queries
+    admitted to a single group (already final in-group): splitting them
+    off runs the cogroup UDF once per branch (Spark does not share a
+    non-exchange subtree between two consumers), which measured slower
+    than exchanging them."""
+    hits = (
+        cand.groupby("part_key")
+        .cogroup(corpus.groupby("part_key"))
+        .applyInArrow(kernel_fn, schema=schema)
+    )
+    _, id_col, dist_col = hits.columns
+    w = Window.partitionBy("query_id").orderBy(dist_col, id_col)
+    return hits.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def _knn_join_on_index(
     spark: SparkSession,
     img_salted: DataFrame,
@@ -802,32 +836,15 @@ def _knn_join_on_index(
     max_radius: float = float("inf"),
 ) -> DataFrame:
     """Planar kNN in one pass: admission (each query bounded by its home
-    key's leaf statistics, capped at max_radius) -> ONE cogroup with the
-    persisted corpus, each query's kernel seeded with its bound -> ONE
-    (dist, image_id) window merge.  Exact: the bound is >= the true kth
-    distance, every cell holding a point within it is probed, and every
-    comparison is <=.  Runs no Spark job at call time and persists
-    nothing.
-
-    Every group's rows go through the merge window, also those of queries
-    admitted to a single group (already final in-group): splitting them
-    off runs the cogroup UDF once per branch (Spark does not share a
-    non-exchange subtree between two consumers), which measured slower
-    than exchanging them."""
+    key's leaf statistics, capped at max_radius), then _knn_on_index."""
     k, mr = _check_knn_args(k, max_radius)
     q = queries.select(
         "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
     ).filter(_FINITE_QUERY)
     cand = _planar_admission(spark, q.withColumn("bound", F.lit(mr)), stats, part_keys, k)
-    w = Window.partitionBy("query_id").orderBy("dist", "image_id")
-    return (
-        cand.groupby("part_key")
-        .cogroup(img_salted.groupby("part_key"))
-        .applyInArrow(
-            _make_knn_group(k), schema="query_id string, image_id string, dist double"
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _knn_on_index(
+        cand, img_salted, _make_knn_group(k),
+        "query_id string, image_id string, dist double", k,
     )
 
 
@@ -1011,32 +1028,25 @@ def _plan_group_splits(
     corpus_rows: np.ndarray,
     parallelism: int,
     split_target: int,
-    gate: float,
     min_rows_per_split: int = 64,
 ) -> dict[int, int]:
     """The split DECISION, Spark-free: part_key -> sub-group count for the
     groups to split query-side (empty = cogroup on part_key unsplit).
-    Work per group is candidate rows x corpus rows.  Nothing splits
-    unless the heaviest group exceeds ``gate`` x the balanced per-core
-    share total_work / parallelism (0 = no gate).  Any split re-keys the
-    cogroup on (part_key, gsalt), re-exchanging the WHOLE probed corpus
-    and rebuilding each split group's tree once per sub-group, so for
-    kNN it pays only when one group is the critical path (see
-    so3engine._KNN_SPLIT_GATE).
+    Work per group is candidate rows x corpus rows.
 
-    Past the gate the sizing is adaptive: aim for ~3 waves of
-    ``parallelism`` tasks (a few hot groups otherwise leave most cores
-    idle: event-log measurement, E=4x8 local-cluster, 9-14 phase-2 tasks
-    with max task ~= stage wall), never finer than split_target/64 and
-    never coarser than the static split_target; at most 256 sub-groups
-    and >= min_rows_per_split candidate rows each (finer buys no balance
-    and multiplies per-sub-group tree builds)."""
+    The sizing is adaptive: aim for ~3 waves of ``parallelism`` tasks (a
+    few hot groups otherwise leave most cores idle: event-log
+    measurement, E=4x8 local-cluster, 9-14 phase-2 tasks with max task ~=
+    stage wall), never finer than split_target/64 and never coarser than
+    the static split_target; at most 256 sub-groups and >=
+    min_rows_per_split candidate rows each (finer buys no balance and
+    multiplies per-sub-group tree builds)."""
     cand_rows = np.asarray(cand_rows, np.int64)
     work = cand_rows * np.asarray(corpus_rows, np.int64)
     total = int(work.sum())
-    par = max(1, int(parallelism))
-    if total == 0 or int(work.max()) * par <= gate * total:
+    if total == 0:
         return {}
+    par = max(1, int(parallelism))
     tgt = min(split_target, max(total // (3 * par), max(split_target // 64, 1)))
     n = np.minimum(256, np.maximum(1, -(-work // tgt)))
     n = np.minimum(n, np.maximum(1, cand_rows // min_rows_per_split))
@@ -1050,25 +1060,25 @@ def _split_heavy_cogroups(
     corpus: DataFrame,
     group_rows,
     split_target: int = 4_000_000,
-    gate: float = 0.0,
     min_rows_per_split: int = 64,
 ):
-    """The ONE phase-2 split planner (planar radius, SO(3) and SE(3) kNN
-    and radius).  A dense group receiving many probing rows hands ONE
-    cogroup task candidates x corpus rows of work (measured stragglers:
-    the se3 sf1 radius run serialized for minutes on one task), so such a
-    group is split query-side.  ONE collect over the cached candidate
-    side: the per-part_key candidate counts fill the cache, yield the
-    probed part_keys for the corpus probe filter AND feed
-    _plan_group_splits.  ``group_rows(keys)`` is the space's corpus row
-    count per cogroup key, as an int64 array aligned with ``keys``.
+    """The ONE split planner, used by the radius joins (planar, SO(3),
+    SE(3)); kNN is one pass with no planner (_knn_on_index).  A dense
+    group receiving many probing rows hands ONE cogroup task candidates x
+    corpus rows of work (measured stragglers: the se3 sf1 radius run
+    serialized for minutes on one task), so such a group is split
+    query-side.  ONE collect over the cached candidate side: the
+    per-part_key candidate counts fill the cache, yield the probed
+    part_keys for the corpus probe filter AND feed _plan_group_splits.
+    ``group_rows(keys)`` is the space's corpus row count per cogroup key,
+    as an int64 array aligned with ``keys``.
 
-    Radius joins keep the default ``gate=0``: candidates x corpus rows
-    underweights a hot radius group, whose output is ~all of its pairs
-    while a sparse group's is a small fraction.  Measured on sf0.1
-    radius_join_r2 at local[4]: heaviest group 0.67x a core's share by
-    that estimate, yet the unsplit cogroup's slowest task ran 4.6-5.6 s
-    of an 11.5 s stage: min-of-3 5.4-5.9 s unsplit vs 3.9-4.3 s split.
+    A heavy group splits whatever its share of the batch: candidates x
+    corpus rows underweights a hot radius group, whose output is ~all of
+    its pairs while a sparse group's is a small fraction.  Measured on sf0.1 radius_join_r2 at local[4]:
+    heaviest group 0.67x a core's share by that estimate, yet the
+    unsplit cogroup's slowest task ran 4.6-5.6 s of an 11.5 s stage:
+    min-of-3 5.4-5.9 s unsplit vs 3.9-4.3 s split.
 
     Returns (cand, probed corpus, cogroup key columns).  Unsplit, the
     keys are part_key alone and no gsalt column exists, so the cached
@@ -1080,7 +1090,7 @@ def _split_heavy_cogroups(
     counts = np.array([r_["count"] for r_ in crows], np.int64)
     splits = _plan_group_splits(
         keys, counts, group_rows(keys), spark.sparkContext.defaultParallelism,
-        split_target, gate, min_rows_per_split,
+        split_target, min_rows_per_split,
     )
     probe = _probe_filter(spark, corpus, keys.tolist())
     if not splits:
@@ -1110,8 +1120,7 @@ def _apply_group_splits(
     now keys on (part_key, gsalt), which the cached hash(part_key) corpus
     layout does not satisfy, so the WHOLE probed corpus is re-exchanged;
     each split group's tree is rebuilt once per sub-group; and the two
-    explode maps are createDataFrame broadcasts.  Hence the gate
-    in _plan_group_splits.
+    explode maps are createDataFrame broadcasts.
 
     Explicit schemas throughout: a bigint gsalt on ONE cogroup side
     hash-partitions differently from an int gsalt on the other and
@@ -1188,7 +1197,7 @@ def _radius_on_index(
     A NaN or infinite r is rejected before either is built.  Drains the
     caller's ``cache_registry`` and caches the candidates there; the split
     planner's ONE count-collect fills that cache, filters the corpus probe
-    and splits heavy groups (``gate=0``: see _split_heavy_cogroups).
+    and splits heavy groups (_split_heavy_cogroups).
     """
     r = float(r)
     if not np.isfinite(r):

@@ -6,15 +6,15 @@ active test matrix ``test/kdtree_test.cpp:385-417`` runs StaticBuildAndQuery
 and dynamic Add/KNN for SO3, SO3Alt, SO3RL, SE3 and weighted SE3).  This
 module is the distributed twin of the geo engine (``sparkkd.engine``),
 with its SKEW-ADAPTIVE layout.  A kNN query's search is seeded with a
-bound >= its kth distance (reference ``src/_kdtree_median.hpp:131-137``):
-
-* **SO(3), two phases**: every query probes its own partition first,
-  whose true top-k gives the bound; phase 2 admits the other partitions
-  against it through leaf-cell statistics, except for queries whose bound
-  is strictly inside their home grid cell (home-edge early exit);
-* **SE(3), one pass**: the bound is the query's distance to its
-  kth-nearest pose in a fixed corpus sample (below); admission, ONE
-  cogroup seeded with the bound and ONE merge window follow.
+bound >= its kth distance (reference ``src/_kdtree_median.hpp:131-137``).
+In both spaces that bound is the query's distance to its kth-nearest
+pose in a fixed corpus SAMPLE, every pose with
+``pmod(xxhash64(pose_id), m) = 0`` for m = max(16, ceil(n / 65,536)):
+any k corpus poses bound the kth distance.  Each index collects its
+sample at build (the action that materializes the persisted corpus), so
+a kNN call is one pass with no Spark job: admission of the partitions
+within the bound, ONE cogroup seeded with it and ONE merge window
+(engine._knn_on_index, shared with planar kNN).
 
 ADAPTIVE LAYOUT (round-3, after sf2 profiling): pruning statistics live at
 LEAF grid cells — a base fine level L everywhere, except inside HOT base
@@ -37,23 +37,22 @@ angular kNN over canonicalized points (q ~ -q collapsed to one sign) equals
 Euclidean R^4 kNN probed at BOTH +q and -q with the per-point best kept.
 The partition grid is over the canonicalized coefficients — the
 distributed analogue of the reference's 4-volume radix partition
-(``src/_so3space.hpp:594-658``).  Phase-2 extra for the minus probe:
-canonicalized corpus points all have ``cw >= 0``, so the minus probe (whose
-w coordinate is ``-cw_q <= 0``) is at least ``cw_q`` from EVERY corpus
-point — when the phase-1 bound is below that, the whole minus sweep dies on
-one scalar compare (and the minus probe's home partition is unoccupied
-almost surely, so it contributes no phase-1 kernel work either).
+(``src/_so3space.hpp:594-658``).  The kNN bound is the kth-nearest
+sample pose in chord space at +q and -q.  Admission extra for the minus
+probe: canonicalized corpus points all have ``cw >= 0``, so the minus
+probe (whose w coordinate is ``-cw_q <= 0``) is at least ``cw_q`` from
+EVERY corpus point — when the bound is below that, the whole minus sweep
+dies on one scalar compare.
 
 SE(3) — compound space (``src/_spaces.hpp:369-421``): distance is
 ``rot_weight * angular + trans_weight * L2(translation)``.  The partition
 key is a grid over translation; a partition's compound lower bound adds
 ``trans_weight * dist-to-bbox`` and a rotation-box term.  Rotations span
 every leaf, so leaf statistics give only a loose kNN upper bound (up to
-``rot_weight * pi/2`` of rotation slack).  The index instead keeps a fixed
-corpus SAMPLE, every pose with ``pmod(xxhash64(pose_id), m) = 0`` for
-m = max(16, ceil(n / 65,536)): any k corpus poses bound the kth distance.
-Per-partition kernels run ``kernel.knn_compound`` — branch-and-bound over
-a translation k-d tree — so big partitions stay leaf-log, never dense;
+``rot_weight * pi/2`` of rotation slack), which is why the bound comes
+from the corpus sample.  Per-partition kernels run ``kernel.knn_compound``
+— branch-and-bound over a translation k-d tree — so big partitions stay
+leaf-log, never dense;
 groups below the ``kernel.use_tile`` crossover score their dense tile
 instead (``kernel.knn_compound_tile``), where building the tree costs
 more than it prunes.
@@ -77,19 +76,18 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import kernel
 from .engine import (
     _check_knn_args,
     _count_bound,
+    _knn_on_index,
+    _knn_scan,
     _pa_np,
     _radius_on_index,
-    _register_cache,
     _release_registry,
-    _split_heavy_cogroups,
-    _tie_rank,
 )
 
 
@@ -134,34 +132,6 @@ CELL_MASK = (np.int64(1) << LVL_SHIFT) - 1
 GROUP_SHIFT = 1  # partitions pack under the base level's ancestor this far up
 REFINE_STEP = 3  # hot base cells refine this many levels deeper
 MAX_LEAF_LEVEL = 10
-# SO(3) kNN-phase-2 heavy-group split target, in (candidate rows x
-# partition poses) work units, for batches past _KNN_SPLIT_GATE.  Higher
-# than the radius default (4M): a radius group emits output proportional
-# to its work, so Arrow materialization already dominates small groups,
-# while a kNN group emits only ~k rows per candidate — per-unit kernel
-# cost is far lower, and only much larger groups amortize what a split
-# costs: the whole probed corpus is re-exchanged on (part_key, gsalt) and
-# each split group's tree is rebuilt once per sub-group.  Measured (sf2,
-# 400k x 4M, k=4): unsplit groups ran 5 s -> 90 s at ~uniform candidate
-# counts (per-candidate scan cost varies ~20x with local pose density),
-# so the single heaviest task WAS the stage wall; at 1e8 the heaviest
-# group splits ~11-way (~8 s worst task).
-_KNN_SPLIT_TARGET = 100_000_000
-# An SO(3) kNN batch splits only when its heaviest group's work exceeds this
-# multiple of the balanced per-core share total_work / defaultParallelism
-# (engine._plan_group_splits): a split re-exchanges the whole probed
-# corpus (not just the split groups') and rebuilds each split group's
-# tree once per sub-group, and a kNN group's output is only ~k rows per
-# candidate, so a near-balanced batch loses.  Measured on a 4-core
-# x86-64 host, heaviest/share ratios and split -> unsplit times:
-# perfbench pose_knn (5,000 queries/op) 1.2-1.3, median op 6.28 ->
-# 4.57 s; the sf0.1 se3/so3 kNN rows 1.27 and 0.74, min-of-3 7.39 ->
-# 6.58 s and 6.61 -> 5.55 s.  Where splitting won, the heaviest group
-# dwarfed a share: sf2 kNN tasks ranged 5 s -> 90 s, and the sf0.1
-# se3/so3 batches at parallelism 32 sit at ~10x/~6x.  (SE(3) kNN is one
-# pass and runs no planner: see _se3_knn_on_index.)
-_KNN_SPLIT_GATE = 2.0
-
 QCOLS = ("qw", "qx", "qy", "qz")
 TCOLS = ("tx", "ty", "tz")
 CCOLS = ("cw", "cx", "cy", "cz")  # canonicalized quaternion coefficients
@@ -583,30 +553,10 @@ def _salted(df: DataFrame, spark: SparkSession, layout: PoseLayout,
     )
 
 
-def _leaf_salts(spark: SparkSession, layout: PoseLayout) -> DataFrame:
-    """(leaf key, part_key) exploded over the leaf's partition's salts —
-    probes join this so a probed partition probes ALL of its salts.
-    Cached per (layout, session): one createDataFrame per index lifetime."""
-
-    def build():
-        reps = layout.p_salt_n[layout.leaf_pid]
-        key = np.repeat(layout.leaf_keys, reps)
-        pid = np.repeat(layout.leaf_pid, reps)
-        off = np.concatenate([[0], np.cumsum(reps)])[: len(reps)]
-        salt = np.arange(reps.sum(), dtype=np.int64) - np.repeat(off, reps)
-        return F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame({"key": key, "part_key": (pid << SALT_BITS) + salt}),
-                schema="key bigint, part_key bigint",  # empty-corpus safe
-            )
-        )
-
-    return _cached(layout, spark, "leaf_salts", build)
-
-
 def _pid_salts(spark: SparkSession, layout: PoseLayout) -> DataFrame:
-    """(pid, part_key) for phase-2 candidate emission (cached per layout +
-    session, see _leaf_salts)."""
+    """(pid, part_key) for admission's candidate emission: a probed
+    partition probes ALL of its salts.  Cached per (layout, session): one
+    createDataFrame per index lifetime."""
 
     def build():
         reps = layout.p_salt_n
@@ -638,20 +588,6 @@ def _trans_bounds(poses: DataFrame) -> list[tuple[float, float]]:
             lo, hi = 0.0, 1.0
         out.append((float(lo), float(hi)))
     return out
-
-
-def _leaf_pid(spark: SparkSession, layout: PoseLayout) -> DataFrame:
-    """(leaf key, pid) for the kNN home-partition lookups (cached per
-    layout + session, see _leaf_salts)."""
-    return _cached(
-        layout, spark, "leaf_pid",
-        lambda: F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame({"key": layout.leaf_keys, "pid": layout.leaf_pid}),
-                schema="key bigint, pid bigint",
-            )
-        ),
-    )
 
 
 # --------------------------------------------------- pruning geometry (d-D)
@@ -790,46 +726,31 @@ def _expand_ranges(qi: np.ndarray, gi: np.ndarray, starts: np.ndarray):
     return qq, mem, off
 
 
-def _partition_candidates(
-    P: np.ndarray,
-    bound: np.ndarray,
-    layout_arrays,
-    home_pid: np.ndarray | None = None,
-    scale: float = 1.0,
-):
+def _partition_candidates(P: np.ndarray, bound: np.ndarray, layout_arrays):
     """Admit (query, PARTITION) pairs through THREE levels — dense only at
     the top: (1) a (chunk, G) sweep of group union boxes (G ~ sqrt(P)),
     (2) paired tests of the admitted groups' member partitions, (3) paired
     tests of admitted partitions' member leaves (any-pass).  Per-chunk
     work is O(chunk * G + admitted-group members) — independent of P for
     selective queries (the reference's ordered volume traversal one level
-    up, ``src/_so3space.hpp:401-423``).  `home_pid` partitions are skipped
-    (fully probed in phase 1).  Returns (qi, pid) arrays."""
+    up, ``src/_so3space.hpp:401-423``).  Returns (qi, pid) arrays."""
     leaf_lo, leaf_hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start = layout_arrays
     z = np.empty(0, dtype=np.int64)
     if p_lo.shape[0] <= DENSE_P_MAX:
         # small P: the dense (chunk, P) sweep is cheaper than group
         # machinery and its memory is bounded by DENSE_P_MAX by definition
-        dmin_p = scale * _bbox_min_dist(P, p_lo, p_hi)
+        dmin_p = _bbox_min_dist(P, p_lo, p_hi)
         ADMIT_STATS["dense_cells"] += dmin_p.size
         qi_a, pi_a = np.nonzero(dmin_p <= bound[:, None])
-        if home_pid is not None and len(qi_a) > 0:
-            keep = pi_a != home_pid[qi_a]
-            qi_a, pi_a = qi_a[keep], pi_a[keep]
     else:
-        dmin_g = scale * _bbox_min_dist(P, g_lo, g_hi)
+        dmin_g = _bbox_min_dist(P, g_lo, g_hi)
         ADMIT_STATS["dense_cells"] += dmin_g.size
         qi_g, gi_g = np.nonzero(dmin_g <= bound[:, None])
         if len(qi_g) == 0:
             return z, z
         qq, pi_a, _ = _expand_ranges(qi_g, gi_g, g_start)
         ADMIT_STATS["pair_tests"] += len(qq)
-        ok = (
-            scale * _bbox_min_dist_pairs(P[qq], p_lo[pi_a], p_hi[pi_a])
-            <= bound[qq]
-        )
-        if home_pid is not None:
-            ok &= pi_a != home_pid[qq]
+        ok = _bbox_min_dist_pairs(P[qq], p_lo[pi_a], p_hi[pi_a]) <= bound[qq]
         qi_a, pi_a = qq[ok], pi_a[ok]
     if len(qi_a) == 0 or leaf_lo is None:
         # leaf arrays over the broadcast budget: partition-level
@@ -838,10 +759,7 @@ def _partition_candidates(
 
     def test(qq_, li):
         ADMIT_STATS["pair_tests"] += len(qq_)
-        return (
-            scale * _bbox_min_dist_pairs(P[qq_], leaf_lo[li], leaf_hi[li])
-            <= bound[qq_]
-        )
+        return _bbox_min_dist_pairs(P[qq_], leaf_lo[li], leaf_hi[li]) <= bound[qq_]
 
     ok = _leaf_any_pass(qi_a, pi_a, p_start, test)
     return qi_a[ok], pi_a[ok]
@@ -985,22 +903,6 @@ def _se3_partition_candidates(
     return qi_a[ok], pi_a[ok]
 
 
-def _grid_home_edge(
-    P: np.ndarray, vmin: np.ndarray, vspan: np.ndarray, n_rows: np.ndarray
-) -> np.ndarray:
-    """Distance from each point to the nearest boundary of its own grid
-    cell AT ITS OWN LEAF LEVEL (n_rows: per-row cells-per-axis), minus a
-    float-rounding margin: every point of every OTHER leaf is at least
-    this far away, so a query whose bound is strictly below it skips
-    phase 2 entirely."""
-    n = n_rows.astype(np.float64)[:, None]
-    idx = np.clip(np.floor((P - vmin) / vspan * n), 0, n - 1)
-    w = vspan / n
-    lo = vmin + idx * w
-    edge = np.minimum(P - lo, lo + w - P).min(axis=1)
-    return edge - 1e-9 * max(float(np.max(vspan)), 1e-30)
-
-
 import math as _math
 
 # np.arccos is NumPy's SIMD implementation and differs from libm's acos by
@@ -1062,6 +964,35 @@ def _pose_lineage(index) -> DataFrame:
     return index.spark.createDataFrame(pdf)
 
 
+def _pose_sample(corpus: DataFrame, n: int, cols) -> np.ndarray:
+    """The kNN bound sample of either pose space (S, len(cols)), in one
+    job: poses with pmod(xxhash64(pose_id), m) = 0, m = max(16, ceil(n /
+    65,536)).  On 200k SE(3) poses x 5,000 queries, 1/8, 1/16 and 1/32
+    took 0.74, 0.55 and 0.39 s to bound and sent 46k, 60k and 81k rows
+    into the merge window (single thread)."""
+    m = max(16, -(-n // 65_536))
+    t = (
+        corpus.filter(F.pmod(F.xxhash64("pose_id"), F.lit(m)) == 0)
+        .select(*cols)
+        .toArrow()
+    )
+    return np.column_stack([t.column(c).to_numpy() for c in cols])
+
+
+def _padded_kth(qi: np.ndarray, d: np.ndarray, n: int, k: int) -> np.ndarray:
+    """Each of n queries' kth distance from kNN output (qi, d) sorted by
+    query then distance (inf where a query has fewer than k), padded by a
+    relative 1e-12 so SIMD or summation-order ulps never undershoot it."""
+    out = np.full(n, np.inf)
+    if len(qi) == 0:
+        return out
+    first = np.searchsorted(qi, np.arange(n))
+    cnt = np.diff(np.append(first, len(qi)))
+    ok = np.nonzero(cnt >= k)[0]
+    out[ok] = d[first[ok] + k - 1] * (1.0 + 1e-12) + 1e-15
+    return out
+
+
 def _persist_by_part_key(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """Persist a salted corpus PRE-PARTITIONED on part_key, so repeat query
     batches shuffle only the candidate side.  The caller's first action
@@ -1075,7 +1006,9 @@ class So3Index:
     """Build-once / query-many SO(3) index (the reference's KDTree contract
     applied to the rotation space): canonicalized, refinement-salted corpus
     persisted PRE-PARTITIONED on part_key so repeat query batches shuffle
-    only the candidate side (same layout trick as engine.GeoIndex)."""
+    only the candidate side (same layout trick as engine.GeoIndex), plus a
+    fixed corpus sample (_pose_sample) that bounds every kNN query's kth
+    distance."""
 
     def __init__(
         self,
@@ -1091,7 +1024,8 @@ class So3Index:
         )
         self.level = self.layout.level
         self.corpus = _persist_by_part_key(spark, corpus)
-        self.corpus.count()  # materialize
+        # collecting the sample is the action that materializes the corpus
+        self.sample = _pose_sample(self.corpus, self.layout.total, CCOLS)
         self._caches: list[DataFrame] = []
 
     def knn_join(
@@ -1099,8 +1033,8 @@ class So3Index:
     ) -> DataFrame:
         k, max_radius = _check_knn_args(k, max_radius)
         return _so3_knn_on_index(
-            self.spark, self.corpus, self.layout, queries, k,
-            max_radius=max_radius, cache_registry=self._caches,
+            self.spark, self.corpus, self.layout, self.sample, queries, k,
+            max_radius,
         )
 
     lineage = _pose_lineage
@@ -1176,272 +1110,103 @@ def so3_knn_join(
     (query_id, pose_id, ang, rank).
 
     Plan: canonicalize -> adaptive leaf grid (hot cells refined) packed
-    into partitions -> phase-1 HOME-partition probe at both +q and -q
-    (true kth bound) -> phase-2 partition admission by member-leaf bboxes
-    within the bound -> per-partition 4-D k-d kernels inside cogroups ->
-    min per (query, pose) to dedupe antipodal double-hits -> window top-k.
-    Reference: SO3 build/query ``src/_so3space.hpp:594-658``, ordered
-    volume traversal with early exit ``src/_so3space.hpp:401-423``, test
-    matrix ``test/kdtree_test.cpp:385-417``.
+    into partitions -> each query bounded by its kth-nearest pose in a
+    fixed corpus sample (collected here with one job) at both +q and -q,
+    capped at max_radius -> partition admission by member-leaf bboxes
+    within the bound -> per-partition 4-D kernels inside ONE cogroup ->
+    dedupe of antipodal double-hits -> window top-k.  Reference: SO3
+    build/query ``src/_so3space.hpp:594-658``, ordered volume traversal
+    with early exit ``src/_so3space.hpp:401-423``, test matrix
+    ``test/kdtree_test.cpp:385-417``.
 
     One-shot convenience over :class:`So3Index` (kept unpersisted: the
     corpus is consumed once, exactly like engine.knn_join vs GeoIndex).
     """
     k, max_radius = _check_knn_args(k, max_radius)
     corpus, layout = _so3_corpus(spark, poses, level, max_cell_rows, n_poses_hint)
-    return _so3_knn_on_index(spark, corpus, layout, queries, k, max_radius=max_radius)
+    return _so3_knn_on_index(
+        spark, corpus, layout, _pose_sample(corpus, layout.total, CCOLS),
+        queries, k, max_radius,
+    )
+
+
+def _make_so3_knn_group(k: int, mr: float):
+    """SO(3) kNN cogroup kernel: each probe row's bounded chord-space kNN
+    (engine._knn_scan: tile or 4-D k-d tree, ties by pose_id rank),
+    seeded with its admission bound, then the exact libm angle and the
+    max_radius cut.  Both antipodal probes of a query can land in one
+    group (qw == ±0.0 shares a w cell; a tiny corpus packs into one
+    partition) and return the same pose, so (query, pose) is deduped
+    here; ang is bit-identical across probes (|dot(±q, p)| is sign-exact
+    in IEEE).  A pose lives in exactly one part_key, so no other group
+    can repeat the pair."""
+    ccols = list(CCOLS)
+
+    def so3_group(left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows == 0 or right.num_rows == 0:
+            return _PAIR_ANG_EMPTY
+        P = np.column_stack([_pa_np(right, c) for c in ccols])
+        ids = right.column("pose_id")
+        QP = np.column_stack([_pa_np(left, c) for c in ("pw", "px", "py", "pz")])
+        qi, idx, _ = _knn_scan(P, QP, ids, k, _pa_np(left, "bound"))
+        ang = _angular_np(QP[qi], P[idx])
+        if np.isfinite(mr):
+            keep = ang <= mr  # exact libm cut; the chord bound only added work
+            qi, idx, ang = qi[keep], idx[keep], ang[keep]
+        qids = left.column("query_id")
+        if len(qi) > 0:
+            qcode = (
+                qids.combine_chunks().dictionary_encode()
+                .indices.to_numpy(zero_copy_only=False)
+            )
+            _, sel = np.unique(
+                qcode[qi].astype(np.int64) * np.int64(len(P)) + idx,
+                return_index=True,
+            )
+            qi, idx, ang = qi[sel], idx[sel], ang[sel]
+        return pa.table(
+            {
+                "query_id": pc.take(qids, pa.array(qi)),
+                "pose_id": pc.take(ids, pa.array(idx)),
+                "ang": pa.array(ang),
+            }
+        )
+
+    return so3_group
 
 
 def _so3_knn_on_index(
     spark: SparkSession,
     corpus: DataFrame,
     layout: PoseLayout,
+    sample: np.ndarray,
     queries: DataFrame,
     k: int,
-    max_radius: float = float("inf"),
-    cache_registry: list[DataFrame] | None = None,
+    max_radius: float,
 ) -> DataFrame:
-    if cache_registry is None:
-        cache_registry = _ONESHOT_CACHES
-    _release_registry(cache_registry)
+    """SO(3) kNN in one pass: admission (each query bounded by its
+    kth-nearest corpus-sample pose in chord space, capped at the padded
+    chord of max_radius), then engine._knn_on_index."""
     mr = float(max_radius)
-    # chord-space seed for tree pruning (padded superset); the EXACT libm
-    # angle filters inside the kernels, so the pad only adds work and the
-    # phase-1 cnt/bound are computed over exactly the radius-admitted rows
     chord_pad = _padded_chord(mr) if np.isfinite(mr) else float("inf")
-    ccols = list(CCOLS)
-    qc = _so3_queries(spark, queries)
-    pos_leaf = leaf_key_sql(ccols, _B4, layout)
-    neg_leaf = leaf_key_sql([f"(- {c})" for c in ccols], _B4, layout)
-    leaf_salts = _leaf_salts(spark, layout)
-    leaf_pid = _leaf_pid(spark, layout)
-
-    # ---- phase 1: probe each probe-point's HOME partition (all salts) ---
-    probes = (
-        qc.withColumn("sgn", F.lit(1.0)).withColumn("key", F.expr(pos_leaf))
-    ).unionByName(
-        qc.withColumn("sgn", F.lit(-1.0)).withColumn("key", F.expr(neg_leaf))
-    )
-    p1_cand = probes.join(leaf_salts, "key").select(
-        "query_id", *ccols, "sgn", "part_key"
+    q = _so3_queries(spark, queries).withColumn("bound", F.lit(chord_pad))
+    return _knn_on_index(
+        _so3_admission(spark, layout, q, k, sample=sample), corpus,
+        _make_so3_knn_group(k, mr), "query_id string, pose_id string, ang double", k,
     )
 
-    p1_empty = pa.table(
-        {
-            "query_id": pa.array([], pa.string()),
-            "pose_id": pa.array([], pa.string()),
-            "ang": pa.array([], pa.float64()),
-            "eu": pa.array([], pa.float64()),
-            **{c: pa.array([], pa.float64()) for c in ccols},
-        }
-    )
 
-    def p1_group(left: pa.Table, right: pa.Table) -> pa.Table:
-        # Arrow-native kernel (guide §4.2): inputs stay Arrow — pose_id /
-        # query_id strings never become Python objects; outputs are
-        # take()/array() calls
-        if left.num_rows == 0 or right.num_rows == 0:
-            return p1_empty
-        P = np.column_stack([_pa_np(right, c) for c in ccols])
-        ids = right.column("pose_id")
-        tie = _tie_rank(ids)
-        tree = kernel.build(P)
-        C4 = np.column_stack([_pa_np(left, c) for c in ccols])
-        QP = C4 * _pa_np(left, "sgn")[:, None]
-        qi, idx, eu = kernel.knn(tree, QP, k, tie_key=tie, max_radius=chord_pad)
-        ang = _angular_np(QP[qi], P[idx])
-        if np.isfinite(mr):
-            keep = ang <= mr  # exact libm cut; chord pad only added work
-            qi, idx, ang, eu = qi[keep], idx[keep], ang[keep], eu[keep]
-        # DEDUPE (query, pose): when BOTH antipodal probes of a query land
-        # in this partition (reachable at qw == ±0.0 — the canonical cell
-        # of -0.0 equals +0.0's — or any tiny corpus packed into one
-        # partition), the same pose appears once per probe.  Without this,
-        # rank/cnt/eumax downstream count duplicates: the top-k window
-        # could keep a duplicate and drop the true kth neighbor, and the
-        # phase-2 bound could undershoot the kth-DISTINCT distance and
-        # prune partitions holding true neighbors.  Keep the min-eu row —
-        # min(|q-p|, |q+p|) is exactly chord(ang), so the kept eu stays a
-        # true upper bound per pose and eumax a true kth bound.  ang is
-        # bit-identical across probes (|dot(±q, p)| is sign-exact in IEEE).
-        if len(qi) > 0:
-            qcode = (
-                left.column("query_id")
-                .combine_chunks()
-                .dictionary_encode()
-                .indices.to_numpy(zero_copy_only=False)
-            )
-            pairk = qcode[qi].astype(np.int64) * np.int64(right.num_rows) + idx
-            o = np.lexsort((eu, pairk))
-            ks = pairk[o]
-            firsts = np.ones(len(o), dtype=bool)
-            firsts[1:] = ks[1:] != ks[:-1]
-            sel = np.sort(o[firsts])
-            qi, idx, ang, eu = qi[sel], idx[sel], ang[sel], eu[sel]
-        return pa.table(
-            {
-                "query_id": pc.take(left.column("query_id"), pa.array(qi)),
-                "pose_id": pc.take(ids, pa.array(idx)),
-                "ang": pa.array(ang),
-                "eu": pa.array(eu),
-                **{c: pa.array(C4[qi, j]) for j, c in enumerate(ccols)},
-            }
-        )
-
-    p1 = (
-        p1_cand.groupby("part_key")
-        .cogroup(corpus.groupby("part_key"))
-        .applyInArrow(
-            p1_group,
-            schema="query_id string, pose_id string, ang double, eu double,"
-            " cw double, cx double, cy double, cz double",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("ang", "pose_id")
-    wq = Window.partitionBy("query_id")
-    p1 = _register_cache(p1, cache_registry)
-    # cache the windowed top-k too: bound_rows (job A) and untouched/
-    # touched (job B) all consume it — without this, job B re-ran the
-    # p1 window merge once per branch
-    p1_topk = _register_cache(
-        p1.withColumn("rank", F.row_number().over(w))
-        .withColumn("cnt", F.count("*").over(wq))
-        .filter(F.col("rank") <= k),
-        cache_registry,
-    )
-
-    # ---- phase 2: bound rows, early exits, partition admission ----------
-    # The kth row's OWN eu is a valid phase-2 bound: eu >= chord(ang) for
-    # every row (min over signs), and any pose with ang < ang_k has
-    # min-chord chord(ang) <= chord(ang_k) <= eu_k, so the sign achieving
-    # the min is admitted.  This is TIGHTER than the old max(eu)-over-
-    # window bound (eu is not monotone in ang when only one probe saw the
-    # pose) and drops one window pass per call (round-6).
-    bound_rows = (
-        p1_topk.filter(F.col("rank") == F.least(F.lit(k), F.col("cnt")))
-        .select(
-            "query_id", *ccols,
-            F.least(
-                F.when(F.col("cnt") >= k, F.col("eu"))
-                .otherwise(F.lit(float("inf"))),
-                F.lit(chord_pad),
-            ).alias("bound"),
-        )
-    )
-    # occupied leaf keys, driver-built (leaf_keys are unique by
-    # construction — no distinct exchange) and cached per layout
-    occ = _cached(
-        layout, spark, "occ_keys",
-        lambda: F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame({"key": layout.leaf_keys}), schema="key bigint"
-            )
-        ),
-    )
-    qk = qc.withColumn("kp", F.expr(pos_leaf)).withColumn("kn", F.expr(neg_leaf))
-    absent = (
-        qk.join(F.broadcast(occ.withColumnRenamed("key", "kp")), "kp", "left_anti")
-        .join(F.broadcast(occ.withColumnRenamed("key", "kn")), "kn", "left_anti")
-        .select("query_id", *ccols, F.lit(chord_pad).alias("bound"))
-    )
-    if np.isfinite(mr):
-        # with a finite radius a query can ALSO vanish from p1 because all
-        # home-partition poses are out of radius — recover every query with
-        # at least one OCCUPIED home (either probe) that produced no p1 row
-        either = (
-            qk.join(F.broadcast(occ.withColumnRenamed("key", "kp")), "kp", "left_semi")
-            .unionByName(
-                qk.join(
-                    F.broadcast(occ.withColumnRenamed("key", "kn")), "kn", "left_semi"
-                )
-            )
-            .distinct()
-        )
-        emptied = (
-            either.join(
-                F.broadcast(p1_topk.select("query_id").distinct()),
-                "query_id", "left_anti",
-            )
-            .select("query_id", *ccols, F.lit(chord_pad).alias("bound"))
-        )
-        absent = absent.unionByName(emptied)
-    # home pids (-1 when unoccupied) + leaf keys (level decides edge width)
-    q_b = (
-        bound_rows.unionByName(absent)
-        .withColumn("kp", F.expr(pos_leaf))
-        .withColumn("kn", F.expr(neg_leaf))
-        .join(
-            leaf_pid.withColumnRenamed("key", "kp").withColumnRenamed("pid", "kp_pid"),
-            "kp", "left",
-        )
-        .join(
-            leaf_pid.withColumnRenamed("key", "kn").withColumnRenamed("pid", "kn_pid"),
-            "kn", "left",
-        )
-        .fillna({"kp_pid": -1, "kn_pid": -1})
-    )
-
-    p2_cand = _register_cache(
-        _so3_admission(spark, layout, q_b, k, home=True), cache_registry
-    )
-    # ONE Spark job: the split planner's count-collect fills the p1
-    # cache (upstream) + p2_cand cache, yields the probed part_keys as an
-    # InSet pushdown AND splits a critical-path cogroup query-side
-    # (measured at sf2: per-task kernel time varied 5 s -> 90 s at
-    # ~uniform candidate counts, so ONE task was the stage wall)
-    cand_g, corp_probe, gcols = _split_heavy_cogroups(
-        spark, p2_cand, corpus, _pose_group_rows(layout),
-        split_target=_KNN_SPLIT_TARGET, gate=_KNN_SPLIT_GATE,
-    )
-
-    def p2_group(left: pa.Table, right: pa.Table) -> pa.Table:
-        if left.num_rows == 0 or right.num_rows == 0:
-            return _PAIR_ANG_EMPTY
-        P = np.column_stack([_pa_np(right, c) for c in ccols])
-        ids = right.column("pose_id")
-        tie = _tie_rank(ids)
-        tree = kernel.build(P)
-        QP = np.column_stack(
-            [_pa_np(left, c) for c in ("pw", "px", "py", "pz")]
-        )
-        qi, idx, _ = kernel.knn(tree, QP, k, tie_key=tie, max_radius=chord_pad)
-        ang = _angular_np(QP[qi], P[idx])
-        if np.isfinite(mr):
-            keep = ang <= mr
-            qi, idx, ang = qi[keep], idx[keep], ang[keep]
-        return pa.table(
-            {
-                "query_id": pc.take(left.column("query_id"), pa.array(qi)),
-                "pose_id": pc.take(ids, pa.array(idx)),
-                "ang": pa.array(ang),
-            }
-        )
-
-    p2 = (
-        cand_g.groupby(*gcols)
-        .cogroup(corp_probe.groupby(*gcols))
-        .applyInArrow(p2_group, schema="query_id string, pose_id string, ang double")
-    )
-
-    # re-rank ONLY queries phase 2 touched; a phase-2 probe may re-hit a
-    # pose phase 1 saw from the other sign, so dedupe by min ang first
-    affected = F.broadcast(p2_cand.select("query_id").distinct())
-    untouched = p1_topk.join(affected, "query_id", "left_anti").select(
-        "query_id", "pose_id", "ang", F.col("rank").cast("int")
-    )
-    touched = (
-        p1_topk.join(affected, "query_id", "left_semi")
-        .select("query_id", "pose_id", "ang")
-        .unionByName(p2)
-        .groupBy("query_id", "pose_id")
-        .agg(F.min("ang").alias("ang"))
-    )
-    reranked = (
-        touched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "pose_id", "ang", F.col("rank").cast("int"))
-    )
-    return untouched.unionByName(reranked)
+def _sample_chord_bound(sample_tree, C4: np.ndarray, k: int) -> np.ndarray:
+    """Per-query chord to the kth-nearest sample pose at +q or -q (inf if
+    the sample holds fewer than k), padded.  ``sample_tree`` holds the
+    canonical sample AND its negation: min(|q - p|, |q + p|) is the chord
+    to p or to -p.  A pose fills two of the k slots only when the kth is
+    >= sqrt(2) (|q - p|^2 + |q + p|^2 = 4), which bounds every chord
+    anyway, so the kth is always a valid bound."""
+    if sample_tree.n < 2 * k:
+        return np.full(len(C4), np.inf)
+    qi, _, d = kernel.knn(sample_tree, C4, k)
+    return _padded_kth(qi, d, len(C4), k)
 
 
 def _so3_admission(
@@ -1449,17 +1214,17 @@ def _so3_admission(
     layout: PoseLayout,
     frame: DataFrame,
     k: int | None = None,
-    home: bool = False,
+    sample: np.ndarray | None = None,
 ) -> DataFrame:
-    """The SO(3) admission generator, shared by kNN phase 2 and radius:
-    frame (query_id, cw, cx, cy, cz, bound [, kp, kp_pid, kn_pid]) ->
-    candidate rows (query_id, pw, px, py, pz, part_key) per admitted
-    (signed probe, partition salt): both probes +q and -q admit partitions
-    within the chord-space bound (_partition_candidates).  kNN phase 2
-    passes ``home=True``: each probe's home partition (kp_pid / kn_pid,
-    -1 when unoccupied) was fully probed in phase 1 and is skipped, and
-    the +q home-edge exit applies.  Rows without a finite bound fall back
-    to a count-bound over k (radius bounds are always finite)."""
+    """The SO(3) admission generator, shared by kNN and radius: frame
+    (query_id, cw, cx, cy, cz, bound) -> candidate rows (query_id, pw, px,
+    py, pz, bound, part_key) per admitted (signed probe, partition salt):
+    both probes +q and -q admit partitions within the chord-space bound
+    (_partition_candidates).  Radius passes the padded chord of r.  kNN
+    passes k and the index's corpus ``sample``: each query's bound is
+    capped by its kth-nearest sample pose (_sample_chord_bound), or, while
+    the sample holds fewer than k poses, by a count-bound over the
+    admission groups."""
     ccols = list(CCOLS)
     bc = _cached(
         layout, spark, "so3knn_bc",
@@ -1472,14 +1237,21 @@ def _so3_admission(
             )
         ),
     )
+    if k is not None:
+        # the sample tree (sample and negation) is built once per (layout,
+        # session), driver-side
+        sbc = _cached(
+            layout, spark, "so3_sample_bc",
+            lambda: spark.sparkContext.broadcast(
+                kernel.build(np.vstack([sample, -sample]))
+            ),
+        )
 
     def gen(batches):
         (lo, hi, p_lo, p_hi, p_start,
          g_counts, g_lo, g_hi, g_start) = bc.value
         G = len(g_counts)
         la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
-        vmin = np.full(4, -1.0)
-        vspan = np.full(4, 2.0)
         for rb in batches:
             if rb.num_rows == 0 or G == 0:
                 continue
@@ -1487,11 +1259,6 @@ def _so3_admission(
             qid_arr = tbl.column("query_id").chunk(0)
             C4 = np.column_stack([_pa_np(tbl, c) for c in ccols])
             given = _pa_np(tbl, "bound")
-            if home:
-                kp = tbl.column("kp").to_numpy(zero_copy_only=False)
-                kp_pid = tbl.column("kp_pid").to_numpy(zero_copy_only=False)
-                kn_pid = tbl.column("kn_pid").to_numpy(zero_copy_only=False)
-                n_leaf = (np.int64(1) << (kp >> LVL_SHIFT)).astype(np.int64)
             # chunk on the GROUP matrix — (chunk, G) stays ~64 MB however
             # large the corpus (G ~ sqrt(P), not P)
             chunk = max(256, 8_000_000 // max(G, 1))
@@ -1499,6 +1266,8 @@ def _so3_admission(
                 sl = slice(c0, min(c0 + chunk, rb.num_rows))
                 P4 = C4[sl]
                 b = given[sl].copy()
+                if k is not None:
+                    b = np.minimum(b, _sample_chord_bound(sbc.value, P4, k))
                 nb = np.nonzero(~np.isfinite(b))[0]
                 if len(nb) > 0:
                     # statistics-only fallback at GROUP granularity: the
@@ -1515,25 +1284,15 @@ def _so3_admission(
                         _count_bound(dmax[1], g_counts, k),
                     )
                 for sgn in (1.0, -1.0):
-                    if sgn < 0:
-                        # canonical corpus points all have cw >= 0: the
-                        # minus probe is >= cw_q from every point
-                        alive = ~(b < P4[:, 0])
-                    elif home:
-                        # home-edge exit against the query's OWN leaf cell
-                        # (its level encodes the width — refined leaves
-                        # test tighter)
-                        alive = ~(b < _grid_home_edge(P4, vmin, vspan, n_leaf[sl]))
-                    else:
-                        alive = np.ones(len(P4), dtype=bool)
-                    rows = np.nonzero(alive)[0]
+                    # canonical corpus points all have cw >= 0: the minus
+                    # probe is >= cw_q from every point
+                    rows = (
+                        np.nonzero(~(b < P4[:, 0]))[0] if sgn < 0
+                        else np.arange(len(P4))
+                    )
                     if len(rows) == 0:
                         continue
-                    qi, pid = _partition_candidates(
-                        sgn * P4[rows], b[rows], la,
-                        home_pid=(kp_pid if sgn > 0 else kn_pid)[sl][rows]
-                        if home else None,
-                    )
+                    qi, pid = _partition_candidates(sgn * P4[rows], b[rows], la)
                     if len(qi) == 0:
                         continue
                     pr = sgn * P4[rows[qi]]
@@ -1546,6 +1305,7 @@ def _so3_admission(
                             "px": pa.array(pr[:, 1]),
                             "py": pa.array(pr[:, 2]),
                             "pz": pa.array(pr[:, 3]),
+                            "bound": pa.array(b[rows[qi]]),
                             "pid": pa.array(pid),
                         }
                     )
@@ -1554,10 +1314,10 @@ def _so3_admission(
         frame.mapInArrow(
             gen,
             schema="query_id string, pw double, px double, py double,"
-            " pz double, pid long",
+            " pz double, bound double, pid long",
         )
         .join(_pid_salts(spark, layout), "pid")
-        .select("query_id", "pw", "px", "py", "pz", "part_key")
+        .drop("pid")
     )
 
 
@@ -1579,7 +1339,7 @@ def so3_radius_join(
     ``sqrt(2 - 2 cos r)`` on the canonicalized R^4 coordinates (the
     angular metric is strictly increasing in the antipodal-min chord), so
     admission and the per-partition kernel run entirely in chord space —
-    no phase-1 probe needed; both antipodal probes admit partitions whose
+    no sample bound needed; both antipodal probes admit partitions whose
     member leaf bboxes come within the (slightly padded) chord, and the
     EXACT libm angle filters the final pairs, so the float padding can
     only add work, never wrong rows.  One-shot convenience over
@@ -1678,7 +1438,7 @@ class Se3Index:
     """Build-once / query-many SE(3) index: refinement-salted corpus
     persisted PRE-PARTITIONED on the translation-grid part_key (same
     layout as GeoIndex/So3Index) — repeat batches shuffle only the
-    candidate side — plus a fixed corpus sample (_se3_sample) that bounds
+    candidate side — plus a fixed corpus sample (_pose_sample) that bounds
     every kNN query's kth distance."""
 
     def __init__(
@@ -1696,7 +1456,7 @@ class Se3Index:
         self.level = self.layout.level
         self.corpus = _persist_by_part_key(spark, corpus)
         # collecting the sample is the action that materializes the corpus
-        self.sample = _se3_sample(self.corpus, self.layout.total)
+        self.sample = _pose_sample(self.corpus, self.layout.total, (*QCOLS, *TCOLS))
         self._caches: list[DataFrame] = []
 
     def knn_join(
@@ -1748,21 +1508,6 @@ def _se3_corpus(spark, poses, level, max_cell_rows, n_poses_hint):
     return corpus, layout
 
 
-def _se3_sample(corpus: DataFrame, n: int) -> np.ndarray:
-    """The kNN bound sample (S, 7: rotation, translation), in one job:
-    poses with pmod(xxhash64(pose_id), m) = 0, m = max(16, ceil(n /
-    65,536)).  On 200k poses x 5,000 queries, 1/8, 1/16 and 1/32 took
-    0.74, 0.55 and 0.39 s to bound and sent 46k, 60k and 81k rows into
-    the merge window (single thread)."""
-    m = max(16, -(-n // 65_536))
-    t = (
-        corpus.filter(F.pmod(F.xxhash64("pose_id"), F.lit(m)) == 0)
-        .select(*QCOLS, *TCOLS)
-        .toArrow()
-    )
-    return np.column_stack([t.column(c).to_numpy() for c in (*QCOLS, *TCOLS)])
-
-
 def _se3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
     """Finite query poses (query_id, qw..qz, tx..tz), spread over the
     shuffle partitions."""
@@ -1775,18 +1520,10 @@ def _se3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
 
 def _sample_kth_bound(sample_tree, sample_rot, T, R, k, rw, tw) -> np.ndarray:
     """Per-query compound distance to the kth-nearest sample pose (inf if
-    the sample holds fewer than k), padded like knn_compound's phase A
-    for its SIMD arccos."""
-    out = np.full(len(T), np.inf)
+    the sample holds fewer than k), padded."""
     qi, _, ldot, et = kernel.knn_compound(sample_tree, T, R, sample_rot, k, rw, tw)
-    if len(qi) == 0:
-        return out
-    d = rw * np.arccos(ldot) + tw * et  # knn_compound's selection distance
-    first = np.searchsorted(qi, np.arange(len(T)))
-    cnt = np.diff(np.append(first, len(qi)))
-    ok = np.nonzero(cnt >= k)[0]
-    out[ok] = d[first[ok] + k - 1] * (1.0 + 1e-12) + 1e-15
-    return out
+    # knn_compound's selection distance
+    return _padded_kth(qi, rw * np.arccos(ldot) + tw * et, len(T), k)
 
 
 def _se3_admission(
@@ -2051,15 +1788,15 @@ def se3_knn_join(
     Partition key: adaptive grid over translation (data-derived bounds,
     hot cells refined, leaves bin-packed).  Partition pruning is exact:
     each query's bound is its compound distance to its kth-nearest pose
-    in a fixed corpus sample (_se3_sample, collected here with one job),
+    in a fixed corpus sample (_pose_sample, collected here with one job),
     and a partition is admitted when its compound lower bound is within
     it.  One-shot convenience over :class:`Se3Index` (corpus
     unpersisted)."""
     k, _ = _check_knn_args(k)
     corpus, layout = _se3_corpus(spark, poses, level, max_cell_rows, n_poses_hint)
     return _se3_knn_on_index(
-        spark, corpus, layout, _se3_sample(corpus, layout.total), queries, k,
-        rot_weight, trans_weight,
+        spark, corpus, layout, _pose_sample(corpus, layout.total, (*QCOLS, *TCOLS)),
+        queries, k, rot_weight, trans_weight,
     )
 
 
@@ -2115,24 +1852,10 @@ def _se3_knn_on_index(
     trans_weight: float,
 ) -> DataFrame:
     """SE(3) kNN in one pass: admission (each query bounded by its
-    kth-nearest corpus-sample pose) -> ONE cogroup with the corpus, each
-    query's kernel seeded with its bound -> ONE (dist, pose_id) window
-    merge.  Exact: the bound is >= the true kth distance, every partition
-    holding a pose within it is admitted, and every comparison is <=.
-    Runs no Spark job at call time and persists nothing.  No heavy group
-    is split: the split planner's count-collect is an eager job, and in
-    the pose_knn benchmark that job cost more than the split saved."""
+    kth-nearest corpus-sample pose), then engine._knn_on_index."""
     rw, tw = float(rot_weight), float(trans_weight)
     q = _se3_queries(spark, queries).withColumn("bound", F.lit(float("inf")))
-    cand = _se3_admission(spark, layout, q, rw, tw, k, sample=sample)
-    w = Window.partitionBy("query_id").orderBy("dist", "pose_id")
-    return (
-        cand.groupby("part_key")
-        .cogroup(corpus.groupby("part_key"))
-        .applyInArrow(
-            _make_se3_group(k, rw, tw),
-            schema="query_id string, pose_id string, dist double",
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _knn_on_index(
+        _se3_admission(spark, layout, q, rw, tw, k, sample=sample), corpus,
+        _make_se3_group(k, rw, tw), "query_id string, pose_id string, dist double", k,
     )

@@ -283,7 +283,7 @@ def test_group_admission_identical_to_dense_partition_admission(monkeypatch):
 def test_dense_bypass_matches_group_path(monkeypatch):
     """Small-P fast path (round 5): admission with the (chunk, P) dense
     bypass must return EXACTLY the pairs of the 3-level group path, for
-    both engines (SO(3) with its home-pid mask)."""
+    both engines."""
     rng = np.random.default_rng(11)
     P = 400
     (leaf_lo, leaf_hi, p_lo, p_hi, p_start,
@@ -294,7 +294,6 @@ def test_dense_bypass_matches_group_path(monkeypatch):
     nq = 150
     Q = np.column_stack([rng.uniform(0, P, nq), np.zeros(nq), np.zeros(nq)])
     bound = rng.uniform(0.5, 25.0, nq)
-    home = rng.integers(0, P, nq)
     la = (leaf_lo, leaf_hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
     QR = rng.normal(size=(nq, 4))
     QR /= np.linalg.norm(QR, axis=1, keepdims=True)
@@ -305,7 +304,7 @@ def test_dense_bypass_matches_group_path(monkeypatch):
     results = {}
     for tag, thresh in (("group", 0), ("dense", 10**6)):
         monkeypatch.setattr(S, "DENSE_P_MAX", thresh)
-        qi, pid = S._partition_candidates(Q, bound, la, home_pid=home)
+        qi, pid = S._partition_candidates(Q, bound, la)
         qi2, pid2 = S._se3_partition_candidates(Q, QR, bound, la14, 0.5, 2.0)
         results[tag] = (
             set(zip(qi.tolist(), pid.tolist())),

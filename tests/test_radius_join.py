@@ -85,10 +85,11 @@ def test_radius_reuses_knn_admission_broadcast(spark):
     """Radius runs each pose space's kNN admission generator, so a layout
     holds ONE admission broadcast: after a kNN and a radius join on the
     same index, the layout cache holds the kNN broadcast (the radius call
-    built none of its own) and no radius-only broadcast.  SE(3) kNN also
+    built none of its own) and no radius-only broadcast.  Pose kNN also
     broadcasts its corpus-sample tree, which radius does not read."""
     for space, bc_names in (
-        ("so3", {"so3knn_bc"}), ("se3", {"se3knn_bc", "se3_sample_bc"})
+        ("so3", {"so3knn_bc", "so3_sample_bc"}),
+        ("se3", {"se3knn_bc", "se3_sample_bc"}),
     ):
         idx, queries, kw, r_ok = _SPACES[space](spark)
         try:

@@ -144,9 +144,9 @@ def test_dual_probe_same_partition_dedupe(spark):
     BOTH antipodal probes into w-cell 0; with a tiny corpus every occupied
     leaf bin-packs into one partition, so both probes cogroup against the
     SAME partition and (with k close to the corpus size) their top-k lists
-    overlap — the same pose is returned once per probe.  Phase 1 must
-    dedupe (query, pose) before ranking or a duplicate inside the top-k
-    evicts the true kth neighbor and inflates cnt/eumax."""
+    overlap — the same pose is returned once per probe.  The cogroup
+    kernel must dedupe (query, pose) before ranking or a duplicate inside
+    the top-k evicts the true kth neighbor."""
     rng = np.random.default_rng(41)
     P = rng.normal(size=(10, 4))
     P /= np.linalg.norm(P, axis=1, keepdims=True)
@@ -401,18 +401,21 @@ def _se3_exact_topk(Q, QT, P, PT, pids, k, rw, tw):
     return out
 
 
-def _assert_se3_index_exact(spark, P, PT, Q, QT, k, rw, tw, **index_kw):
+def _assert_pose_index_exact(spark, P, PT, Q, QT, k, rw, tw, so3=False, **index_kw):
     """Se3Index kNN on (P, PT) for queries (Q, QT) must equal brute force
-    row for row: ids in rank order, distances bit-exact.  Returns the
-    index's sample size."""
+    row for row: ids in rank order, distances bit-exact.  so3=True runs
+    So3Index instead, whose metric is the angle alone (pass rw=1, tw=0).
+    Returns the index's sample size."""
     pids = np.array([f"pose{i:06d}" for i in range(len(P))])
-    idx = so3engine.Se3Index(
-        spark, _pose_df(spark, P, PT), n_poses_hint=len(P), **index_kw
+    cls, kw, col = (
+        (so3engine.So3Index, {}, "ang") if so3
+        else (so3engine.Se3Index, dict(rot_weight=rw, trans_weight=tw), "dist")
     )
+    idx = cls(spark, _pose_df(spark, P, PT), n_poses_hint=len(P), **index_kw)
     try:
         n_sample = len(idx.sample)
         res = (
-            idx.knn_join(_query_df(spark, Q, QT), k=k, rot_weight=rw, trans_weight=tw)
+            idx.knn_join(_query_df(spark, Q, QT), k=k, **kw)
             .toPandas().sort_values(["query_id", "rank"])
         )
     finally:
@@ -423,20 +426,22 @@ def _assert_se3_index_exact(spark, P, PT, Q, QT, k, rw, tw, **index_kw):
         got = res[res["query_id"] == f"q{i:06d}"]
         assert list(got["rank"]) == list(range(1, len(ids) + 1))
         assert list(got["pose_id"]) == ids, i
-        assert np.array_equal(got["dist"].to_numpy(), d), i
+        assert np.array_equal(got[col].to_numpy(), d), i
     return n_sample
 
 
 def test_se3_knn_sample_smaller_than_k_falls_back_exact(spark):
     """A corpus under 16*k poses leaves the kNN bound sample (every 16th
     pose by id hash at this size) with fewer than k poses: every query
-    then takes the group count-bound, and results stay exact."""
+    then takes the group count-bound, and results stay exact — in both
+    pose spaces (SO(3) and SE(3))."""
     rng = np.random.default_rng(21)
     n, k = 100, 12  # 10 of these 100 ids hash into the sample
     P, PT = _unit_rows(rng, n), rng.uniform(0, 4, size=(n, 3))
     Q, QT = _unit_rows(rng, 15), rng.uniform(-1, 5, size=(15, 3))
-    n_sample = _assert_se3_index_exact(spark, P, PT, Q, QT, k, 2.0, 0.5)
-    assert n_sample < k
+    for so3, rw, tw in ((True, 1.0, 0.0), (False, 2.0, 0.5)):
+        n_sample = _assert_pose_index_exact(spark, P, PT, Q, QT, k, rw, tw, so3=so3)
+        assert n_sample < k
 
 
 def test_se3_knn_point_mass_in_uniform_corpus_ties_by_id(spark):
@@ -458,7 +463,7 @@ def test_se3_knn_point_mass_in_uniform_corpus_ties_by_id(spark):
             rng.uniform(0, 10, size=(8, 3)),
         ]
     )
-    _assert_se3_index_exact(spark, P, PT, Q, QT, 8, 2.0, 0.5, max_cell_rows=256)
+    _assert_pose_index_exact(spark, P, PT, Q, QT, 8, 2.0, 0.5, max_cell_rows=256)
 
 
 @pytest.mark.parametrize("rw, tw", [(2.0, 0.0), (0.0, 0.5)])
@@ -470,4 +475,4 @@ def test_se3_knn_single_term_weights_exact(spark, rw, tw):
     n = 1500
     P, PT = _unit_rows(rng, n), rng.uniform(0, 6, size=(n, 3))
     Q, QT = _unit_rows(rng, 30), rng.uniform(0, 6, size=(30, 3))
-    _assert_se3_index_exact(spark, P, PT, Q, QT, 5, rw, tw)
+    _assert_pose_index_exact(spark, P, PT, Q, QT, 5, rw, tw)

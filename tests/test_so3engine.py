@@ -163,8 +163,8 @@ def test_se3_index_build_once_query_many(spark, pose_data):
 
 
 def test_so3_knn_k_exceeds_home_cell(spark, pose_data):
-    """k larger than any home cell's population forces the statistics
-    fallback bound in phase 2 — results must still be exact."""
+    """k larger than any leaf cell's population: the sample bound must
+    admit many partitions per query, and results must still be exact."""
     poses, queries, ppdf, qpdf = pose_data
     small_q = queries.limit(40)
     k = 64  # >> level-1 cell occupancy at 2k poses
@@ -398,12 +398,10 @@ def test_leaf_broadcast_budget_invariance(spark, pose_data, monkeypatch):
 
 
 def _record_splits(monkeypatch, **force):
-    """Wrap the pose joins' split planner (forcing any ``force`` keyword
-    arguments) where each path looks it up: so3engine for the pose kNN
-    orchestrations, engine for the shared radius orchestration.  Returns
-    a list that gets, per phase-2 cogroup planned, whether the gsalt
-    fan-out ran."""
-    orig = so3engine._split_heavy_cogroups
+    """Wrap the shared radius orchestration's split planner (forcing any
+    ``force`` keyword arguments).  Returns a list that gets, per cogroup
+    planned, whether the gsalt fan-out ran."""
+    orig = engine._split_heavy_cogroups
     seen: list[bool] = []
 
     def wrapped(spark_, cand, corpus, group_rows, **kw):
@@ -411,46 +409,12 @@ def _record_splits(monkeypatch, **force):
         seen.append("gsalt" in c.columns and gcols == ["part_key", "gsalt"])
         return c, p, gcols
 
-    monkeypatch.setattr(so3engine, "_split_heavy_cogroups", wrapped)
     monkeypatch.setattr(engine, "_split_heavy_cogroups", wrapped)
     return seen
 
 
-def test_knn_p2_heavy_group_split_identity(spark, pose_data, monkeypatch):
-    """Round 5: SO(3) kNN phase-2 cogroups split query-side when estimated
-    work (candidates x partition poses) exceeds _KNN_SPLIT_TARGET —
-    measured at sf2, unsplit per-task kernel time varied 5 s -> 90 s at
-    ~uniform candidate counts, making one task the stage wall at any core
-    count.  Query-side splitting is exact (every subgroup sees the
-    partition's full corpus; the rerank dedupes by (query, pose)), so
-    forcing EVERY group to split (target=1, 2 candidate rows per
-    sub-group, split gate off) must be bit-identical to no split
-    (target=huge), and the forced run must really have fanned out.  SE(3)
-    kNN is one pass with no split planner, so it has nothing to force."""
-    poses, queries, ppdf, _ = pose_data
-
-    def knn():
-        return (
-            so3engine.so3_knn_join(
-                spark, poses, queries, k=4, n_poses_hint=len(ppdf)
-            ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-        )
-
-    monkeypatch.setattr(so3engine, "_KNN_SPLIT_TARGET", 10**18)
-    unsplit = knn()
-    monkeypatch.setattr(so3engine, "_KNN_SPLIT_TARGET", 1)
-    monkeypatch.setattr(so3engine, "_KNN_SPLIT_GATE", 0.0)
-    seen = _record_splits(monkeypatch, min_rows_per_split=2)
-    forced = knn()
-    # the join must have exercised the gsalt fan-out — otherwise this
-    # test silently compares unsplit output to unsplit output
-    assert seen == [True]
-    pd.testing.assert_frame_equal(unsplit, forced)
-    assert len(unsplit) > 0
-
-
 def test_radius_heavy_group_split_identity(spark, pose_data, monkeypatch):
-    """The RADIUS twin of the kNN split-identity test.  Regression: the
+    """Radius joins split heavy cogroups query-side.  Regression: the
     split explode map was built by createDataFrame without a schema, so a
     non-Arrow session inferred bigint for the int32 gsalt — the cogroup
     then hash-partitioned the two sides differently and (query, pose)
@@ -484,77 +448,83 @@ def test_radius_heavy_group_split_identity(spark, pose_data, monkeypatch):
         assert len(u) > 0
 
 
+# each pose index with its kNN keyword arguments
+_POSE_KNN = (
+    (so3engine.So3Index, {}),
+    (so3engine.Se3Index, {"rot_weight": 2.0, "trans_weight": 0.5}),
+)
+
+
 def test_se3_index_knn_reads_cached_corpus_layout(spark, pose_data, monkeypatch):
-    """The pose twin of test_geoindex_no_corpus_exchange: the Se3Index kNN
-    cogroup shuffles ONLY the candidate side — the corpus flows in
-    through its cached hash(part_key) layout with no ENSURE_REQUIREMENTS
-    exchange of its own, and no split planner keys it on gsalt.  The
-    one other exchange is the (dist, pose_id) merge window's, on
-    query_id."""
+    """The pose twin of test_geoindex_no_corpus_exchange, for both pose
+    indexes (SO(3) and SE(3)): the kNN cogroup shuffles ONLY the
+    candidate side — the corpus flows in through its cached
+    hash(part_key) layout with no ENSURE_REQUIREMENTS exchange of its
+    own, and no split planner keys it on gsalt.  The one other exchange
+    is the (dist, pose_id) merge window's, on query_id."""
     import re
 
     poses, queries, ppdf, _ = pose_data
     planned = []
     monkeypatch.setattr(
-        so3engine, "_split_heavy_cogroups", lambda *a, **kw: planned.append(a)
+        engine, "_split_heavy_cogroups", lambda *a, **kw: planned.append(a)
     )
-    idx = so3engine.Se3Index(spark, poses, n_poses_hint=len(ppdf))
-    try:
-        df = idx.knn_join(queries, k=4, rot_weight=2.0, trans_weight=0.5)
-        assert df.count() == 4 * queries.count()
-        assert planned == []
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # drop the cached plans printed under each InMemoryRelation (their
-        # one-time build shuffles are not per-query work)
-        outer, depth = [], None
-        for ln in plan.splitlines():
-            m = re.search(r"[A-Za-z*(]", ln)
-            pos = m.start() if m else 0
-            if depth is not None and pos > depth:
-                continue
-            depth = pos if "InMemoryRelation" in ln else None
-            outer.append(ln)
-        outer_plan = "\n".join(outer)
-        ex = [
-            ln for ln in outer
-            if re.search(r"Exchange hashpartitioning.*ENSURE_REQUIREMENTS", ln)
-        ]
-        assert len(ex) == 2, outer_plan
-        assert sum("hashpartitioning(part_key" in ln for ln in ex) == 1, outer_plan
-        assert sum("hashpartitioning(query_id" in ln for ln in ex) == 1, outer_plan
-        assert outer_plan.count("InMemoryTableScan") == 1, outer_plan
-        assert "gsalt" not in outer_plan
-    finally:
-        idx.unpersist()
+    for cls, kw in _POSE_KNN:
+        idx = cls(spark, poses, n_poses_hint=len(ppdf))
+        try:
+            df = idx.knn_join(queries, k=4, **kw)
+            assert df.count() == 4 * queries.count()
+            assert planned == []
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            # drop the cached plans printed under each InMemoryRelation
+            # (their one-time build shuffles are not per-query work)
+            outer, depth = [], None
+            for ln in plan.splitlines():
+                m = re.search(r"[A-Za-z*(]", ln)
+                pos = m.start() if m else 0
+                if depth is not None and pos > depth:
+                    continue
+                depth = pos if "InMemoryRelation" in ln else None
+                outer.append(ln)
+            outer_plan = "\n".join(outer)
+            ex = [
+                ln for ln in outer
+                if re.search(r"Exchange hashpartitioning.*ENSURE_REQUIREMENTS", ln)
+            ]
+            assert len(ex) == 2, outer_plan
+            assert sum("hashpartitioning(part_key" in ln for ln in ex) == 1, outer_plan
+            assert sum("hashpartitioning(query_id" in ln for ln in ex) == 1, outer_plan
+            assert outer_plan.count("InMemoryTableScan") == 1, outer_plan
+            assert "gsalt" not in outer_plan
+        finally:
+            idx.unpersist()
 
 
 def test_se3_steady_batch_runs_no_job_and_persists_nothing(spark, pose_data):
-    """The pose twin of test_steady_batch_runs_no_job_and_persists_nothing:
-    on a PREBUILT Se3Index, constructing a kNN batch runs NO driver action
-    (the two-phase path ran the split planner's count-collect), and
-    materializing it leaves nothing persisted beyond the index's own
-    corpus (the two-phase path held its phase-1, top-k and candidate
-    caches until the next call).  Results must be complete."""
+    """The pose twin of test_steady_batch_runs_no_job_and_persists_nothing,
+    for both pose indexes (SO(3) and SE(3)): on a PREBUILT index,
+    constructing a kNN batch runs NO driver action (the two-phase path
+    ran the split planner's count-collect), and materializing it leaves
+    nothing persisted beyond the index's own corpus (the two-phase path
+    held its phase-1, top-k and candidate caches until the next call).
+    Results must be complete."""
     poses, queries, ppdf, _ = pose_data
     jsc = spark.sparkContext._jsc
-    idx = so3engine.Se3Index(spark, poses, n_poses_hint=len(ppdf))
-    try:
-        n_persisted = jsc.getPersistentRDDs().size()
-        kw = dict(k=4, rot_weight=2.0, trans_weight=0.5)
-        idx.knn_join(queries, **kw).count()  # warm
 
-        def n_execs():
-            # SQL executions = driver-side actions (AQE splits one action
-            # into many JOBS, so job counts can't express the floor)
-            return (
-                spark._jsparkSession.sharedState()
-                .statusStore().executionsCount()
-            )
+    def n_execs():
+        # SQL executions = driver-side actions (AQE splits one action
+        # into many JOBS, so job counts can't express the floor)
+        return spark._jsparkSession.sharedState().statusStore().executionsCount()
 
-        before = n_execs()
-        df = idx.knn_join(queries, **kw)  # builder only — NO action
-        assert n_execs() - before == 0
-        assert df.count() == 4 * queries.count()
-        assert jsc.getPersistentRDDs().size() == n_persisted
-    finally:
-        idx.unpersist()
+    for cls, kw in _POSE_KNN:
+        idx = cls(spark, poses, n_poses_hint=len(ppdf))
+        try:
+            n_persisted = jsc.getPersistentRDDs().size()
+            idx.knn_join(queries, k=4, **kw).count()  # warm
+            before = n_execs()
+            df = idx.knn_join(queries, k=4, **kw)  # builder only — NO action
+            assert n_execs() - before == 0
+            assert df.count() == 4 * queries.count()
+            assert jsc.getPersistentRDDs().size() == n_persisted
+        finally:
+            idx.unpersist()

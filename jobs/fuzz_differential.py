@@ -11,6 +11,13 @@ rot-only / trans-only) — and asserting exact agreement (row set and
 float-exact distances; rank compared via distance multisets so ties in
 id order never false-positive).
 
+Each family receives how many trials it ran before (``nth``).  The kNN /
+radius families cycle their join (planar kNN / radius; SO(3) / SE(3) x
+kNN / radius) and their max_cell_rows by it instead of drawing them,
+and appear several times in the family rotation: the default 72-trial
+campaign runs each planar join 4 times (every max_cell_rows once) and
+each pose join 4 times (twice hash-salted at max_cell_rows=8).
+
 Usage: python jobs/fuzz_differential.py [N_TRIALS] [SEED]
 Prints one line per trial and a final summary; exits nonzero on any
 mismatch with a full repro dump (seed + config).
@@ -20,6 +27,7 @@ from __future__ import annotations
 
 import gc
 import json
+from collections import Counter
 import os
 import sys
 from pathlib import Path
@@ -33,8 +41,10 @@ from pyspark.sql import SparkSession
 
 from sparkkd import cells, engine, so3engine
 
-N_TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 60
+N_TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 72
 SEED = int(sys.argv[2]) if len(sys.argv) > 2 else 20260818
+
+_POSE_MODES = (("so3", False), ("so3", True), ("se3", False), ("se3", True))
 
 
 def _coords(rng, n, flavor):
@@ -64,14 +74,14 @@ def _quantized(xy):
     return ph, np.column_stack([lon, lat])
 
 
-def fuzz_geo(spark, rng, trial):
+def fuzz_geo(spark, rng, nth):
     n = int(rng.integers(2, 1500))
     nq = int(rng.integers(1, 200))
     flavor = str(rng.choice(["uniform", "clusters", "point_mass", "boundary"]))
     k = int(rng.integers(1, 17))
     level = int(rng.integers(2, 9))
-    mcr = int(rng.choice([4, 16, 64, 8192]))
-    use_radius = bool(rng.integers(0, 2))
+    use_radius = nth % 2 == 1
+    mcr = (4, 16, 64, 8192)[nth // 2 % 4]
     ph, xy = _quantized(_coords(rng, n, flavor))
     qxy = _coords(rng, nq, flavor)
     img = spark.createDataFrame(
@@ -148,13 +158,13 @@ def _ang_matrix(QQ, Q):
     return np.arccos(np.minimum(1.0, np.abs(dot)))
 
 
-def fuzz_pose(spark, rng, trial):
+def fuzz_pose(spark, rng, nth):
     n = int(rng.integers(2, 800))
     nq = int(rng.integers(1, 120))
     flavor = str(rng.choice(["uniform", "clusters", "antipodal"]))
     k = int(rng.integers(1, 9))
-    mcr = int(rng.choice([8, 64, 16384]))
-    space = str(rng.choice(["so3", "se3"]))
+    space, use_radius = _POSE_MODES[nth % 4]
+    mcr = (8, 64, 16384)[nth // 4 % 3]
     Q = _unit_quats(rng, n, flavor)
     T = rng.uniform(-3, 3, (n, 3))
     QQ = _unit_quats(rng, nq, flavor)
@@ -171,7 +181,6 @@ def fuzz_pose(spark, rng, trial):
     cfg = dict(op=space, n=n, nq=nq, flavor=flavor, k=k, mcr=mcr)
     if space == "so3":
         d = ang
-        use_radius = bool(rng.integers(0, 2))
         if use_radius:
             r = float(rng.uniform(0.05, 1.5))
             cfg["r"] = r
@@ -196,7 +205,6 @@ def fuzz_pose(spark, rng, trial):
         d = rw * ang + tw * np.sqrt(
             ((QT[:, None, :] - T[None, :, :]) ** 2).sum(-1)
         )
-        use_radius = bool(rng.integers(0, 2))
         if use_radius:
             r = float(np.quantile(d, rng.uniform(0.001, 0.2)))
             cfg["r"] = r
@@ -259,7 +267,7 @@ def fuzz_pose(spark, rng, trial):
     return cfg
 
 
-def fuzz_embed(spark, rng, trial):
+def fuzz_embed(spark, rng, nth):
     """embedding_near_dup's recall-1.0 claim under random dims / cluster
     structure / thresholds.  Pairs with similarity inside a +-1e-5 band of
     the threshold are unchecked (the oracle's BLAS gram matrix and the
@@ -317,7 +325,7 @@ def fuzz_embed(spark, rng, trial):
     return cfg
 
 
-def fuzz_cc(spark, rng, trial):
+def fuzz_cc(spark, rng, nth):
     """connected_components vs a union-find oracle on random graph shapes:
     sparse ER edges + planted long paths + self-loops + duplicate edges."""
     from sparkkd import datapipe
@@ -367,7 +375,7 @@ def fuzz_cc(spark, rng, trial):
     return cfg
 
 
-def fuzz_interval(spark, rng, trial):
+def fuzz_interval(spark, rng, nth):
     """interval_overlap_join vs a brute-force pandas non-equi join:
     random interval shapes (multi-bin spans, bin-boundary-aligned ends,
     empty intervals), several bin widths, hot and sparse keys — pair set
@@ -430,7 +438,7 @@ def fuzz_interval(spark, rng, trial):
     return cfg
 
 
-def fuzz_split(spark, rng, trial):
+def fuzz_split(spark, rng, nth):
     """split_assign vs a hashlib oracle: random split counts and integer
     weights, sparse random ids — every row in exactly the bucket the md5
     arithmetic demands."""
@@ -483,7 +491,7 @@ def _rand_events(rng, n, n_users, gap_us):
     )
 
 
-def fuzz_session(spark, rng, trial):
+def fuzz_session(spark, rng, nth):
     """sessionize vs a pandas gaps-and-islands oracle: session boundaries
     (strictly-greater gap), tie timestamps (event_id tiebreak), counts and
     2dp-rounded value sums per session."""
@@ -529,7 +537,7 @@ def fuzz_session(spark, rng, trial):
     return cfg
 
 
-def fuzz_asof(spark, rng, trial):
+def fuzz_asof(spark, rng, nth):
     """asof_join_events vs a per-user scan oracle: for every click, the
     view with the greatest (ts, event_id) among same-user views with
     ts <= click ts (ts-equality counts as prior; NULLs when none)."""
@@ -598,7 +606,7 @@ def _inside_even_odd(px, py, rings):
     return inside
 
 
-def fuzz_pip(spark, rng, trial):
+def fuzz_pip(spark, rng, nth):
     """pip_join vs an independent even-odd ray cast over random star
     polygons (non-convex, optional holes), BOTH modes: the broadcast and
     distributed plans must match the oracle and each other."""
@@ -643,7 +651,7 @@ def fuzz_pip(spark, rng, trial):
     return cfg
 
 
-def fuzz_jaccard(spark, rng, trial):
+def fuzz_jaccard(spark, rng, nth):
     """ngram_jaccard_pairs (AllPairs prefix-filtered exact set-similarity
     join) vs brute-force Python set Jaccard over every doc pair, with
     Spark's HALF_UP 6dp rounding replicated exactly."""
@@ -684,7 +692,7 @@ def fuzz_jaccard(spark, rng, trial):
     return cfg
 
 
-def fuzz_snapshot(spark, rng, trial):
+def fuzz_snapshot(spark, rng, nth):
     """Dynamic insert (reference C6): a random write/append/compact
     sequence must be indistinguishable from a static build — kNN over the
     final snapshot equals the brute-force oracle over the full corpus."""
@@ -792,7 +800,7 @@ def _brute_dbscan_labels(ids, adj, min_pts):
     return roles, labels
 
 
-def fuzz_dbscan(spark, rng, trial):
+def fuzz_dbscan(spark, rng, nth):
     """geo_dbscan (radius self-join + degree + grid-contracted CC + border
     assignment) vs brute-force union-find DBSCAN (shared label rules)."""
     from sparkkd import analytics
@@ -827,7 +835,7 @@ def fuzz_dbscan(spark, rng, trial):
     return cfg
 
 
-def fuzz_embdbscan(spark, rng, trial):
+def fuzz_embdbscan(spark, rng, nth):
     """embedding_dbscan (cosine-space DBSCAN over the near-dup pair
     table) vs brute-force union-find with the shared label rules.  The
     threshold is nudged to a gap midpoint >= 2e-4 from every realized
@@ -883,7 +891,7 @@ def fuzz_embdbscan(spark, rng, trial):
     return cfg
 
 
-def fuzz_labelstats(spark, rng, trial):
+def fuzz_labelstats(spark, rng, nth):
     """knn_label_stats (majority label + agreement over exact cosine
     top-k) vs a NumPy recomputation with identical ranking and tie rules.
     Escape hatch: a mismatch is excused ONLY if some similarity sits
@@ -960,12 +968,16 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.default_rng(SEED)
-    kinds = [fuzz_geo, fuzz_pose, fuzz_embed, fuzz_cc, fuzz_session,
+    kinds = [fuzz_geo, fuzz_pose, fuzz_pose, fuzz_geo, fuzz_pose, fuzz_pose,
+             fuzz_embed, fuzz_cc, fuzz_session,
              fuzz_asof, fuzz_snapshot, fuzz_pip, fuzz_jaccard,
              fuzz_interval, fuzz_split, fuzz_dbscan, fuzz_embdbscan,
              fuzz_labelstats]
+    runs = Counter()  # each family's third argument: its earlier trials
     for t in range(N_TRIALS):
-        cfg = kinds[t % len(kinds)](spark, rng, t)
+        fuzz = kinds[t % len(kinds)]
+        cfg = fuzz(spark, rng, runs[fuzz])
+        runs[fuzz] += 1
         print(f"[{t}] OK {json.dumps(cfg)}", flush=True)
         # py4j pins every JVM object handed to Python until Python GC
         # detaches the proxy — on a deliberately small (default-1g) driver

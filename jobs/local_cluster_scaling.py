@@ -255,11 +255,15 @@ def submit(n_exec: int, zip_path: Path, mem_mb: int, exec_mem: str) -> dict:
             " -XX:+AlwaysPreTouch",
         ),
         "--conf", f"spark.local.dir={shm}",
-        # ann_brute: ~1 block per reduce partition (96 keys into 512 ->
-        # expected collisions ~9, each a 2-block task well inside the
-        # makespan; the SAME fixed partitioning at both E levels), and
-        # 1 BLAS/OMP thread per python worker so 8-core vs 32-core is a
-        # core-count comparison, not a thread-oversubscription contest.
+        # spark.sql.shuffle.partitions is the same at both E levels, but
+        # it sizes only the generic shuffles (ann_brute's, windows): the
+        # sparkkd index joins spread queries and persist the corpus over
+        # defaultParallelism = E x CORES_PER_EXEC partitions, one wave at
+        # either E.  ann_brute: ~1 block per reduce partition (96 keys
+        # into 512 -> expected collisions ~9, each a 2-block task well
+        # inside the makespan), and 1 BLAS/OMP thread per python worker
+        # so 8-core vs 32-core is a core-count comparison, not a
+        # thread-oversubscription contest.
         *(
             [
                 "--conf", "spark.sql.shuffle.partitions=512",

@@ -35,7 +35,6 @@ from pathlib import Path
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import engine
 
@@ -147,12 +146,6 @@ class BucketedGeoIndex:
             )
         self.img_salted = spark.table(self.name)
         self.stats = _stats_from_json((self.path / "stats.json").read_text())
-        self.part_keys = F.broadcast(
-            spark.createDataFrame(
-                engine._candidate_part_keys(self.stats),
-                schema=engine._PART_KEYS_SCHEMA,
-            )
-        )
         # per-index intermediate-cache registry (see engine.GeoIndex)
         self._caches: list[DataFrame] = []
 
@@ -168,7 +161,6 @@ class BucketedGeoIndex:
             self.spark,
             self.img_salted,
             self.stats,
-            self.part_keys,
             queries,
             k,
             max_radius=max_radius,
@@ -180,6 +172,6 @@ class BucketedGeoIndex:
         # freeing e.g. a still-unconsumed checkpoint-backed DBSCAN result
         # and leaking this index's cand cache past unpersist()
         return engine._planar_radius(
-            self.spark, self.img_salted, self.stats, self.part_keys, queries, r,
+            self.spark, self.img_salted, self.stats, queries, r,
             cache_registry=self._caches,
         )

@@ -68,10 +68,60 @@ MAX_LEVEL = 19
 
 
 def _parallelism(spark: SparkSession) -> int:
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return spark.sparkContext.defaultParallelism
+    """Partitions of every kNN/radius plan's query spread and persisted
+    corpus: one wave of tasks over the cluster's cores, whatever
+    ``spark.sql.shuffle.partitions`` says.  Both sides take the same
+    count, so the cached corpus layout satisfies the cogroup and only the
+    candidate side is exchanged."""
+    return spark.sparkContext.defaultParallelism
+
+
+def _runtime_cache(owner) -> dict:
+    """Per-owner runtime cache (a planar CellStats, a pose layout) for
+    driver-side derived objects (broadcast variables): a build-once index
+    pays its broadcasts once instead of on every join call."""
+    c = getattr(owner, "_runtime_cache", None)
+    if c is None:
+        c = {}
+        object.__setattr__(owner, "_runtime_cache", c)
+    return c
+
+
+def _session_key(spark: SparkSession) -> str:
+    """Stable per-context cache key: the SparkContext's ``applicationId``.
+    ``id(spark)`` is NOT safe here: a new session object can reuse a
+    stopped session's address and the cache would serve broadcasts bound
+    to a dead SparkContext.  So there is no fallback — a context whose
+    applicationId cannot be read raises."""
+    return spark.sparkContext.applicationId
+
+
+def _cached(owner, spark: SparkSession, name: str, build):
+    """``build()`` once per (owner, name, SparkContext).  Only one
+    SparkContext runs per Python process, so entries keyed by any other
+    applicationId belong to stopped contexts: they are dropped here, on
+    the first access under the new id, instead of pinning dead broadcasts
+    for the owner's lifetime."""
+    c = _runtime_cache(owner)
+    app = _session_key(spark)
+    for k_ in [k_ for k_ in c if k_[1] != app]:
+        del c[k_]
+    key = (name, app)
+    if key not in c:
+        c[key] = build()
+    return c[key]
+
+
+def _salt_fanout(keys: np.ndarray, salt_n: np.ndarray):
+    """Fan each admitted row out over the hash salts of its cell (planar
+    key or pose partition id), so a probed cell probes ALL of its salted
+    sub-trees: returns (rep, part_key) with ``rep`` indexing the input
+    rows and part_key = key << SALT_SHIFT | salt.  Every admission
+    generator emits its part_keys through this."""
+    rep = np.repeat(np.arange(len(keys)), salt_n)
+    first = np.cumsum(salt_n) - salt_n
+    salt = np.arange(len(rep), dtype=np.int64) - np.repeat(first, salt_n)
+    return rep, (keys[rep] << SALT_SHIFT) + salt
 
 
 # Intermediate caches (radius candidates; kNN persists nothing)
@@ -459,42 +509,20 @@ def _salted_images(spark: SparkSession, img: DataFrame, stats: CellStats) -> Dat
     )
 
 
-# explicit so an EMPTY corpus yields an empty frame (inference would raise)
-_PART_KEYS_SCHEMA = "key bigint, part_key bigint"
-
-
-def _candidate_part_keys(stats: CellStats) -> pd.DataFrame:
-    """(key, part_key) exploded over salts — broadcast-joined to
-    candidates so a probed cell probes ALL of its salted sub-trees."""
-    reps = stats.salt_n
-    key = np.repeat(stats.keys, reps)
-    off = np.concatenate([[0], np.cumsum(reps)])[: len(reps)]
-    salt = np.arange(reps.sum(), dtype=np.int64) - np.repeat(off, reps)
-    return pd.DataFrame(
-        {
-            "key": key,
-            "part_key": (key << SALT_SHIFT) + salt,
-        }
-    )
-
-
 def _planar_corpus(spark, images, level, max_cell_rows, n_images_hint):
     """The planar corpus builder (GeoIndex and the one-shot joins): derive
     coordinates, collect cell stats (level None: derived from the row
-    count), salt.  Returns (img, stats, img_salted, part_keys); img_salted
-    carries only what the kernels read: (image_id, x, y, part_key)."""
+    count), salt.  Returns (img, stats, img_salted); img_salted carries
+    only what the kernels read: (image_id, x, y, part_key)."""
     img = with_coords(images).select("image_id", "x", "y")
     if level is None:
         n = n_images_hint if n_images_hint is not None else img.count()
         level = cells.level_for_count(n)
     stats = collect_cell_stats(img, level, max_cell_rows)
-    part_keys = F.broadcast(spark.createDataFrame(
-        _candidate_part_keys(stats), schema=_PART_KEYS_SCHEMA
-    ))
     img_salted = _salted_images(spark, img, stats).select(
         "image_id", "x", "y", "part_key"
     )
-    return img, stats, img_salted, part_keys
+    return img, stats, img_salted
 
 
 # ------------------------------------------------------- candidate pruning
@@ -596,12 +624,11 @@ def _planar_admission(
     spark: SparkSession,
     queries: DataFrame,
     stats: CellStats,
-    part_keys: DataFrame,
     k: int | None = None,
 ) -> DataFrame:
     """The planar admission generator, shared by kNN and radius: queries
     (query_id, x, y, bound) -> candidate rows (query_id, x, y, part_key,
-    bound), one per admitted (query, cell salt).
+    bound), one per admitted (query, cell salt) (_salt_fanout).
 
     Cells with min-dist <= bound become candidates — the cross-cell
     ``shouldTraverse`` (``src/_kdtree_median.hpp:136-138``), vectorized
@@ -613,15 +640,16 @@ def _planar_admission(
     ``src/_kdtree_median.hpp:131-137``).  A home key that is unoccupied
     or holds fewer than k rows falls back to _count_bound over all cells.
     """
-    g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start = _coarse_groups(stats)
-
-    bc = spark.sparkContext.broadcast(
-        (
-            stats.keys, stats.counts,
-            stats.min_x, stats.min_y, stats.max_x, stats.max_y,
-            g_mnx, g_mny, g_mxx, g_mxy, g_order, g_start,
-            stats.leaf_start, stats.leaf_counts, stats.leaf_bbox,
-        )
+    bc = _cached(
+        stats, spark, "planar_bc",
+        lambda: spark.sparkContext.broadcast(
+            (
+                stats.keys, stats.counts, stats.salt_n,
+                stats.min_x, stats.min_y, stats.max_x, stats.max_y,
+                *_coarse_groups(stats),
+                stats.leaf_start, stats.leaf_counts, stats.leaf_bbox,
+            )
+        ),
     )
     # queries usually arrive as one small parquet file = ONE partition;
     # spread the vectorized pruning work across the cluster first
@@ -630,7 +658,7 @@ def _planar_admission(
 
     def gen(batches):
         (
-            keys, counts, mnx, mny, mxx, mxy,
+            keys, counts, salt_n, mnx, mny, mxx, mxy,
             gmnx, gmny, gmxx, gmxy, gorder, gstart,
             lstart, lcounts, lbox,
         ) = bc.value
@@ -677,23 +705,21 @@ def _planar_admission(
                         out_ci.append(mem[ci_l])
                 if not out_qi:
                     continue
-                qi = np.concatenate(out_qi)
                 ci = np.concatenate(out_ci)
+                rep, part_key = _salt_fanout(keys[ci], salt_n[ci])
+                qi = np.concatenate(out_qi)[rep]
                 yield pa.RecordBatch.from_pydict(
                     {
                         "query_id": pc.take(qid, pa.array(qi + c0)),
                         "x": pa.array(qx[qi + c0]),
                         "y": pa.array(qy[qi + c0]),
-                        "key": pa.array(keys[ci]),
+                        "part_key": pa.array(part_key),
                         "bound": pa.array(bound[qi]),
                     }
                 )
 
-    cand = queries.mapInArrow(
-        gen, schema="query_id string, x double, y double, key long, bound double"
-    )
-    return cand.join(part_keys, "key").select(
-        "query_id", "x", "y", "part_key", "bound"
+    return queries.mapInArrow(
+        gen, schema="query_id string, x double, y double, part_key long, bound double"
     )
 
 
@@ -789,11 +815,11 @@ def knn_join(
     instead.
     """
     k, max_radius = _check_knn_args(k, max_radius)
-    _, stats, img_salted, part_keys = _planar_corpus(
+    _, stats, img_salted = _planar_corpus(
         spark, images, level, max_cell_rows, n_images_hint
     )
     return _knn_join_on_index(
-        spark, img_salted, stats, part_keys, queries, k, max_radius=max_radius
+        spark, img_salted, stats, queries, k, max_radius=max_radius
     )
 
 
@@ -830,7 +856,6 @@ def _knn_join_on_index(
     spark: SparkSession,
     img_salted: DataFrame,
     stats: CellStats,
-    part_keys: DataFrame,
     queries: DataFrame,
     k: int,
     max_radius: float = float("inf"),
@@ -841,7 +866,7 @@ def _knn_join_on_index(
     q = queries.select(
         "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
     ).filter(_FINITE_QUERY)
-    cand = _planar_admission(spark, q.withColumn("bound", F.lit(mr)), stats, part_keys, k)
+    cand = _planar_admission(spark, q.withColumn("bound", F.lit(mr)), stats, k)
     return _knn_on_index(
         cand, img_salted, _make_knn_group(k),
         "query_id string, image_id string, dist double", k,
@@ -871,7 +896,7 @@ class GeoIndex:
         n_images_hint: int | None = None,
     ):
         self.spark = spark
-        self.img, self.stats, img_salted, self.part_keys = _planar_corpus(
+        self.img, self.stats, img_salted = _planar_corpus(
             spark, images, level, max_cell_rows, n_images_hint
         )
         self.level = self.stats.level
@@ -915,7 +940,6 @@ class GeoIndex:
             self.spark,
             self.img_salted,
             self.stats,
-            self.part_keys,
             queries,
             k,
             max_radius=max_radius,
@@ -923,7 +947,7 @@ class GeoIndex:
 
     def radius_join(self, queries: DataFrame, r: float) -> DataFrame:
         return _planar_radius(
-            self.spark, self.img_salted, self.stats, self.part_keys, queries, r,
+            self.spark, self.img_salted, self.stats, queries, r,
             cache_registry=self._caches,
         )
 
@@ -937,7 +961,12 @@ class GeoIndex:
         q = queries.select(
             "query_id", F.col("qlon").alias("x"), F.col("qlat").alias("y")
         ).filter(_FINITE_QUERY).withColumn("key", F.expr(self.stats.key_sql("x", "y")))
-        cand = q.join(self.part_keys, "key").select("query_id", "x", "y", "part_key")
+        rep, part_key = _salt_fanout(self.stats.keys, self.stats.salt_n)
+        home_salts = F.broadcast(self.spark.createDataFrame(
+            pd.DataFrame({"key": self.stats.keys[rep], "part_key": part_key}),
+            schema="key bigint, part_key bigint",  # explicit: empty corpus
+        ))
+        cand = q.join(home_salts, "key").select("query_id", "x", "y", "part_key")
 
         def profile_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             import time as _t
@@ -1014,11 +1043,11 @@ def radius_join(
     (qx, qy, ix, iy) — lets a composite consumer (geo_dbscan) derive
     per-endpoint grid cells from the pair table itself instead of
     re-joining the (output-sized) pair graph against a coordinate table."""
-    _, stats, img_salted, part_keys = _planar_corpus(
+    _, stats, img_salted = _planar_corpus(
         spark, images, level, max_cell_rows, n_images_hint
     )
     return _planar_radius(
-        spark, img_salted, stats, part_keys, queries, r, carry_xy=carry_xy
+        spark, img_salted, stats, queries, r, carry_xy=carry_xy
     )
 
 
@@ -1216,7 +1245,6 @@ def _planar_radius(
     spark: SparkSession,
     img_salted: DataFrame,
     stats: CellStats,
-    part_keys: DataFrame,
     queries: DataFrame,
     r: float,
     cache_registry: list[DataFrame] | None = None,
@@ -1232,9 +1260,7 @@ def _planar_radius(
         schema += ", qx double, qy double, ix double, iy double"
     return _radius_on_index(
         spark, r,
-        lambda r: _planar_admission(
-            spark, q.withColumn("bound", F.lit(r)), stats, part_keys
-        ),
+        lambda r: _planar_admission(spark, q.withColumn("bound", F.lit(r)), stats),
         img_salted, _cell_group_rows(stats),
         lambda r: _make_radius_group(r, carry_xy), schema,
         _ONESHOT_CACHES if cache_registry is None else cache_registry,

@@ -81,52 +81,20 @@ from pyspark.sql import functions as F
 
 from . import kernel
 from .engine import (
+    SALT_SHIFT,
+    _cached,
     _check_knn_args,
     _count_bound,
     _knn_on_index,
     _knn_scan,
     _pa_np,
+    _parallelism,
     _radius_on_index,
     _release_registry,
+    _salt_fanout,
 )
 
 
-def _layout_cache(layout) -> dict:
-    """Per-layout runtime cache for driver-side derived objects (salt
-    maps, broadcast variables): a build-once index pays createDataFrame/
-    broadcast once instead of on every join call."""
-    c = getattr(layout, "_runtime_cache", None)
-    if c is None:
-        c = {}
-        object.__setattr__(layout, "_runtime_cache", c)
-    return c
-
-
-def _session_key(spark: SparkSession) -> str:
-    """Stable per-context cache key: the SparkContext's ``applicationId``.
-    ``id(spark)`` is NOT safe here: a new session object can reuse a
-    stopped session's address and the cache would serve broadcasts bound
-    to a dead SparkContext.  So there is no fallback — a context whose
-    applicationId cannot be read raises."""
-    return spark.sparkContext.applicationId
-
-
-def _cached(layout, spark: SparkSession, name: str, build):
-    """``build()`` once per (layout, name, SparkContext).  Only one
-    SparkContext runs per Python process, so entries keyed by any other
-    applicationId belong to stopped contexts: they are dropped here, on
-    the first access under the new id, instead of pinning dead broadcasts
-    for the layout's lifetime."""
-    c = _layout_cache(layout)
-    app = _session_key(spark)
-    for k_ in [k_ for k_ in c if k_[1] != app]:
-        del c[k_]
-    key = (name, app)
-    if key not in c:
-        c[key] = build()
-    return c[key]
-
-SALT_BITS = 12
 LVL_SHIFT = 48  # leaf key = (level << LVL_SHIFT) | cell  (cell < 2^(d*10))
 CELL_MASK = (np.int64(1) << LVL_SHIFT) - 1
 GROUP_SHIFT = 1  # partitions pack under the base level's ancestor this far up
@@ -225,7 +193,7 @@ class PoseLayout:
     PARTITIONS: leaves bin-packed (under a coarse common ancestor, so
     partitions are spatially coherent) into shuffle units of at most
     max_cell_rows points; a still-hot single leaf (point mass) hash-salts.
-    The cogroup key is (pid << SALT_BITS) | salt."""
+    The cogroup key is (pid << SALT_SHIFT) | salt."""
 
     leaf_keys: np.ndarray  # (C,) encoded (lvl << LVL_SHIFT) | cell
     leaf_counts: np.ndarray  # (C,)
@@ -454,7 +422,7 @@ def build_layout(
     p_lo = np.minimum.reduceat(leaf_lo, p_start[:-1], axis=0)
     p_hi = np.maximum.reduceat(leaf_hi, p_start[:-1], axis=0)
     p_salt_n = np.clip(
-        -(-p_counts // max_cell_rows), 1, 1 << SALT_BITS
+        -(-p_counts // max_cell_rows), 1, 1 << SALT_SHIFT
     ).astype(np.int64)
     # admission groups over the ancestor-ordered partitions (boxes built
     # on the FULL stats width so the slice below splits them identically)
@@ -547,30 +515,10 @@ def _salted(df: DataFrame, spark: SparkSession, layout: PoseLayout,
         .join(leaf_map, "key")
         .withColumn(
             "part_key",
-            (F.col("pid") * (1 << SALT_BITS))
+            (F.col("pid") * (1 << SALT_SHIFT))
             + F.pmod(F.xxhash64(id_col), F.col("salt_n")),
         )
     )
-
-
-def _pid_salts(spark: SparkSession, layout: PoseLayout) -> DataFrame:
-    """(pid, part_key) for admission's candidate emission: a probed
-    partition probes ALL of its salts.  Cached per (layout, session): one
-    createDataFrame per index lifetime."""
-
-    def build():
-        reps = layout.p_salt_n
-        pid = np.repeat(np.arange(layout.n_partitions, dtype=np.int64), reps)
-        off = np.concatenate([[0], np.cumsum(reps)])[: len(reps)]
-        salt = np.arange(reps.sum(), dtype=np.int64) - np.repeat(off, reps)
-        return F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame({"pid": pid, "part_key": (pid << SALT_BITS) + salt}),
-                schema="pid bigint, part_key bigint",  # empty-corpus safe
-            )
-        )
-
-    return _cached(layout, spark, "pid_salts", build)
 
 
 def _trans_bounds(poses: DataFrame) -> list[tuple[float, float]]:
@@ -997,9 +945,7 @@ def _persist_by_part_key(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """Persist a salted corpus PRE-PARTITIONED on part_key, so repeat query
     batches shuffle only the candidate side.  The caller's first action
     over it materializes it."""
-    return corpus.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "part_key"
-    ).persist()
+    return corpus.repartition(_parallelism(spark), "part_key").persist()
 
 
 class So3Index:
@@ -1074,7 +1020,7 @@ def _so3_corpus(spark, poses, level, max_cell_rows, n_poses_hint):
 
 def _so3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
     """Finite query rotations, canonicalized: (query_id, cw, cx, cy, cz),
-    spread over the shuffle partitions."""
+    spread over one wave of tasks (engine._parallelism)."""
     sign = canon_sign_sql()
     return (
         queries.filter(_finite_pred(QCOLS))
@@ -1082,7 +1028,7 @@ def _so3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
             "query_id",
             *[F.expr(f"{sign} * {c}").alias(f"c{c[1]}") for c in QCOLS],
         )
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        .repartition(_parallelism(spark))
     )
 
 
@@ -1218,7 +1164,8 @@ def _so3_admission(
 ) -> DataFrame:
     """The SO(3) admission generator, shared by kNN and radius: frame
     (query_id, cw, cx, cy, cz, bound) -> candidate rows (query_id, pw, px,
-    py, pz, bound, part_key) per admitted (signed probe, partition salt):
+    py, pz, bound, part_key) per admitted (signed probe, partition salt)
+    (engine._salt_fanout):
     both probes +q and -q admit partitions within the chord-space bound
     (_partition_candidates).  Radius passes the padded chord of r.  kNN
     passes k and the index's corpus ``sample``: each query's bound is
@@ -1232,7 +1179,7 @@ def _so3_admission(
             (
                 *_f32_leaf_outward(layout.leaf_lo, layout.leaf_hi),
                 *_f32_outward(layout.p_lo, layout.p_hi), layout.p_start,
-                layout.g_counts,
+                layout.p_salt_n, layout.g_counts,
                 *_f32_outward(layout.g_lo, layout.g_hi), layout.g_start,
             )
         ),
@@ -1248,7 +1195,7 @@ def _so3_admission(
         )
 
     def gen(batches):
-        (lo, hi, p_lo, p_hi, p_start,
+        (lo, hi, p_lo, p_hi, p_start, p_salt_n,
          g_counts, g_lo, g_hi, g_start) = bc.value
         G = len(g_counts)
         la = (lo, hi, p_lo, p_hi, p_start, g_lo, g_hi, g_start)
@@ -1295,6 +1242,8 @@ def _so3_admission(
                     qi, pid = _partition_candidates(sgn * P4[rows], b[rows], la)
                     if len(qi) == 0:
                         continue
+                    rep, part_key = _salt_fanout(pid, p_salt_n[pid])
+                    qi = qi[rep]
                     pr = sgn * P4[rows[qi]]
                     yield pa.RecordBatch.from_pydict(
                         {
@@ -1306,18 +1255,14 @@ def _so3_admission(
                             "py": pa.array(pr[:, 2]),
                             "pz": pa.array(pr[:, 3]),
                             "bound": pa.array(b[rows[qi]]),
-                            "pid": pa.array(pid),
+                            "part_key": pa.array(part_key),
                         }
                     )
 
-    return (
-        frame.mapInArrow(
-            gen,
-            schema="query_id string, pw double, px double, py double,"
-            " pz double, bound double, pid long",
-        )
-        .join(_pid_salts(spark, layout), "pid")
-        .drop("pid")
+    return frame.mapInArrow(
+        gen,
+        schema="query_id string, pw double, px double, py double,"
+        " pz double, bound double, part_key long",
     )
 
 
@@ -1355,7 +1300,7 @@ def _pose_group_rows(layout: PoseLayout):
     p_counts overestimated work by up to salt_n."""
 
     def rows(keys: np.ndarray) -> np.ndarray:
-        pid = keys >> SALT_BITS
+        pid = keys >> SALT_SHIFT
         return -(-layout.p_counts[pid] // np.maximum(layout.p_salt_n[pid], 1))
 
     return rows
@@ -1509,12 +1454,12 @@ def _se3_corpus(spark, poses, level, max_cell_rows, n_poses_hint):
 
 
 def _se3_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
-    """Finite query poses (query_id, qw..qz, tx..tz), spread over the
-    shuffle partitions."""
+    """Finite query poses (query_id, qw..qz, tx..tz), spread over one
+    wave of tasks (engine._parallelism)."""
     return (
         queries.filter(_finite_pred(list(QCOLS) + list(TCOLS)))
         .select("query_id", *QCOLS, *TCOLS)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        .repartition(_parallelism(spark))
     )
 
 
@@ -1537,7 +1482,8 @@ def _se3_admission(
 ) -> DataFrame:
     """The SE(3) admission generator, shared by kNN and radius: frame
     (query_id, qw..qz, tx..tz, bound) -> candidate rows (query_id, qw..qz,
-    tx..tz, bound, part_key) per admitted (query, partition salt), by the
+    tx..tz, bound, part_key) per admitted (query, partition salt)
+    (engine._salt_fanout), by the
     rotation-aware compound lower bound (_se3_partition_candidates).
     Radius passes the padded r.  kNN passes k and the index's corpus
     ``sample``: each query is bounded by its kth-nearest sample pose
@@ -1552,6 +1498,7 @@ def _se3_admission(
                 *_f32_outward(layout.p_lo, layout.p_hi),
                 *_f32_pair(layout.p_slo, layout.p_shi),
                 layout.p_start,
+                layout.p_salt_n,
                 layout.g_counts,
                 *_f32_outward(layout.g_lo, layout.g_hi),
                 *_f32_pair(layout.g_slo, layout.g_shi),
@@ -1570,7 +1517,7 @@ def _se3_admission(
 
     def gen(batches):
         (lo, hi, slo, shi,
-         p_lo, p_hi, p_slo, p_shi, p_start,
+         p_lo, p_hi, p_slo, p_shi, p_start, p_salt_n,
          g_counts, g_lo, g_hi, g_slo, g_shi, g_start) = bc.value
         G = len(g_counts)
         la = (lo, hi, slo, shi, p_lo, p_hi, p_slo, p_shi, p_start,
@@ -1613,6 +1560,8 @@ def _se3_admission(
                 qi, pid = _se3_partition_candidates(P3, QR[sl], b, la, tw, rw)
                 if len(qi) == 0:
                     continue
+                rep, part_key = _salt_fanout(pid, p_salt_n[pid])
+                qi = qi[rep]
                 g = qi + c0
                 yield pa.RecordBatch.from_pydict(
                     {
@@ -1620,19 +1569,15 @@ def _se3_admission(
                         **{c: pa.array(Qraw[g, j]) for j, c in enumerate(QCOLS)},
                         **{c: pa.array(T[g, j]) for j, c in enumerate(TCOLS)},
                         "bound": pa.array(b[qi]),
-                        "pid": pa.array(pid),
+                        "part_key": pa.array(part_key),
                     }
                 )
 
-    return (
-        frame.mapInArrow(
-            gen,
-            schema="query_id string, "
-            + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS, "bound"))
-            + ", pid long",
-        )
-        .join(_pid_salts(spark, layout), "pid")
-        .drop("pid")
+    return frame.mapInArrow(
+        gen,
+        schema="query_id string, "
+        + ", ".join(f"{c} double" for c in (*QCOLS, *TCOLS, "bound"))
+        + ", part_key long",
     )
 
 

@@ -94,7 +94,7 @@ def test_radius_reuses_knn_admission_broadcast(spark):
         idx, queries, kw, r_ok = _SPACES[space](spark)
         try:
             idx.knn_join(queries, k=4, **kw).count()
-            cache = so3engine._layout_cache(idx.layout)
+            cache = engine._runtime_cache(idx.layout)
             key = (f"{space}knn_bc", spark.sparkContext.applicationId)
             bc = cache[key]
             before = set(cache)

@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from sparkkd import so3engine
+from sparkkd import engine, so3engine
 
 pytestmark = pytest.mark.spark
 
@@ -336,7 +336,7 @@ def test_session_key_is_application_id_without_fallback(spark):
     """Layout caches key on the SparkContext's applicationId; an unreadable
     applicationId raises instead of falling back to id(spark), which a new
     session can reuse after the old one stops."""
-    assert so3engine._session_key(spark) == spark.sparkContext.applicationId
+    assert engine._session_key(spark) == spark.sparkContext.applicationId
 
     class _DeadContext:
         @property
@@ -347,7 +347,7 @@ def test_session_key_is_application_id_without_fallback(spark):
         sparkContext = _DeadContext()
 
     with pytest.raises(RuntimeError, match="stopped"):
-        so3engine._session_key(_Session())
+        engine._session_key(_Session())
 
 
 def test_layout_cache_evicts_dead_application_ids():
@@ -370,13 +370,13 @@ def test_layout_cache_evicts_dead_application_ids():
     def build(tag):
         return lambda: builds.append(tag) or tag
 
-    assert so3engine._cached(lay, old, "bc", build("old-bc")) == "old-bc"
-    assert so3engine._cached(lay, old, "salts", build("old-salts")) == "old-salts"
-    assert so3engine._cached(lay, old, "bc", build("rebuilt")) == "old-bc"
+    assert engine._cached(lay, old, "bc", build("old-bc")) == "old-bc"
+    assert engine._cached(lay, old, "salts", build("old-salts")) == "old-salts"
+    assert engine._cached(lay, old, "bc", build("rebuilt")) == "old-bc"
     assert builds == ["old-bc", "old-salts"]
-    assert so3engine._cached(lay, new, "bc", build("new-bc")) == "new-bc"
-    assert set(so3engine._layout_cache(lay)) == {("bc", "app-new")}
-    assert so3engine._cached(lay, new, "bc", build("rebuilt")) == "new-bc"
+    assert engine._cached(lay, new, "bc", build("new-bc")) == "new-bc"
+    assert set(engine._runtime_cache(lay)) == {("bc", "app-new")}
+    assert engine._cached(lay, new, "bc", build("rebuilt")) == "new-bc"
     assert builds == ["old-bc", "old-salts", "new-bc"]
 
 
